@@ -243,7 +243,10 @@ object Bench {
     val total = ms3(timings.map(_.median).sum)
     val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
     val sf = scala.util.Try(sfName.stripPrefix("sf").toDouble).getOrElse(0.0)
-    s"""{"metric":"total","value":$total,"unit":"sec","n":${timings.size},"failed":${failures.size},"gated":$gated,"sf":$sf,"cpus":$cpus}"""
+    // the raw SPARK_GRAFT_CPUS value as a JSON string, so the line stays
+    // valid JSON whatever it holds (empty, "4,8", ...)
+    val cpusJson = "\"" + cpus.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    s"""{"metric":"total","value":$total,"unit":"sec","n":${timings.size},"failed":${failures.size},"gated":$gated,"sf":$sf,"cpus":$cpusJson}"""
   }
 
   def main(args: Array[String]): Unit = {

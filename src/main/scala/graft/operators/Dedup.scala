@@ -138,12 +138,9 @@ object Dedup {
     *
     * Scale shape: each round is one equi-join edges⋈labels on the vertex
     * id plus a groupBy(src) min — all shuffles on the same key, no
-    * driver-side data. `localCheckpoint` per round truncates the lineage
-    * (iterative plans otherwise grow exponentially); the convergence check
-    * is a count of changed labels, not a collect. Each round's checkpoint
-    * of the (small, edge-vertices-only) label table stays in block storage
-    * until the job ends — bounded by rounds × |edge vertices|, negligible
-    * next to the pair table itself.
+    * driver-side data. The rounds run under [[Rounds.untilStable]]: the
+    * convergence check is a count of changed labels, not a collect, and
+    * it is the action that materializes each round.
     *
     * @param pairs    (doc_a, doc_b) undirected edges, doc_a < doc_b
     * @param vertices (doc_id) universe incl. singletons
@@ -153,7 +150,7 @@ object Dedup {
                           maxIters: Int = 50): DataFrame = {
     // materialize the (possibly expensive) pair plan ONCE — the union
     // below scans it twice, and every propagation round scans the result
-    val p = pairs.select(col("doc_a"), col("doc_b")).localCheckpoint()
+    val p = Rounds.eager(pairs.select(col("doc_a"), col("doc_b")))
     // r13 (guide §2.4 — one exchange per hop): the symmetric edge table is
     // laid out ONCE by the hop join's key (`doc_id` = the endpoint whose
     // label flows out) and checkpointed; the label table is keyed the same
@@ -162,40 +159,34 @@ object Dedup {
     // this layout instead of re-shuffling the edge table every hop. The
     // pair table is near-dup candidates — a sliver of the corpus — so the
     // extra laid copy is bounded (the r8 two-copies lesson doesn't bite).
-    val sym = p.select(col("doc_a").as("nbr"), col("doc_b").as("doc_id"))
-      .union(p.select(col("doc_b").as("nbr"), col("doc_a").as("doc_id")))
-      .repartition(col("doc_id"))
-      .localCheckpoint()
+    val sym = Rounds.eager(
+      p.select(col("doc_a").as("nbr"), col("doc_b").as("doc_id"))
+        .union(p.select(col("doc_b").as("nbr"), col("doc_a").as("doc_id")))
+        .repartition(col("doc_id")))
     // only edge-touched vertices can ever change label — iterate over that
     // subset (a sliver of a mostly-singleton corpus) and attach the
     // untouched majority once at the end. Seeding with min(self, neighbors)
     // is the first propagation hop for free; on a SYMMETRIC table grouping
     // by either endpoint yields the same set, so the seed groups on the
     // laid-out key and is exchange-free.
-    var labels = sym.groupBy(col("doc_id"))
+    val labels0 = sym.groupBy(col("doc_id"))
       .agg(min(least(col("nbr"), col("doc_id"))).as("cluster_id"))
-      .localCheckpoint(false) // lazy: round 1's convergence count materializes it
     // one min-label hop = one exchange (r13): the co-partitioned
     // edges⋈labels join ships each node's label to its neighbors as
     // (nbr → doc_id) messages, each node also messages ITSELF its own
-    // label (plus any carried columns, e.g. the round's starting label —
-    // exactly one self-message per node, so max() recovers them), and ONE
-    // groupBy(doc_id) folds min(neighbor labels, own) — the old
-    // hop's separate nbrMin aggregate + combine join, fused.
+    // label and the round's starting label `prev` (exactly one
+    // self-message per node, so max() recovers it), and ONE
+    // groupBy(doc_id) folds min(neighbor labels, own) — the old hop's
+    // separate nbrMin aggregate + combine join, fused.
     // Domain unchanged: the label domain IS sym's vertex set and every
     // such vertex has >= 1 neighbor (singletons never enter the loop).
-    def hop(l: DataFrame): DataFrame = {
-      val carried = l.columns.filter(c => c != "doc_id" && c != "cluster_id")
-      val msgs = sym
-        .join(l.select(col("doc_id"), col("cluster_id")), "doc_id")
-        .select(col("nbr").as("doc_id") +: col("cluster_id") +:
-          carried.map(c => lit(null).cast(l.schema(c).dataType).as(c)): _*)
+    def hop(l: DataFrame): DataFrame =
+      sym.join(l.select(col("doc_id"), col("cluster_id")), "doc_id")
+        .select(col("nbr").as("doc_id"), col("cluster_id"),
+          lit(null).cast(l.schema("cluster_id").dataType).as("prev"))
         .unionByName(l)
-      msgs.groupBy(col("doc_id"))
-        .agg(min(col("cluster_id")).as("cluster_id"),
-          carried.map(c => max(col(c)).as(c)): _*)
-        .select(col("doc_id") +: carried.map(col) :+ col("cluster_id"): _*)
-    }
+        .groupBy(col("doc_id"))
+        .agg(max(col("prev")).as("prev"), min(col("cluster_id")).as("cluster_id"))
     // pointer-jumping / path compression (r13, measured: mutual-kNN
     // components are CHAINS, not cliques — the plain min-label hop took 17
     // materialized rounds on them): l'(u) = l(l(u)). Every label value is
@@ -207,70 +198,25 @@ object Dedup {
     // oracle checks the final labeling (recursive reachability), which is
     // unchanged.
     def jump(l: DataFrame): DataFrame = {
-      val carried = l.columns.filter(c => c != "doc_id" && c != "cluster_id").map(col)
       val ptr = l.select(col("doc_id").as("p_id"), col("cluster_id").as("p_lbl"))
       l.join(ptr, l("cluster_id") === ptr("p_id"))
-        .select(col("doc_id") +: carried :+ col("p_lbl").as("cluster_id"): _*)
+        .select(col("doc_id"), col("prev"), col("p_lbl").as("cluster_id"))
     }
-    var changed = 1L
-    var iter = 0
-    val sc0 = pairs.sparkSession.sparkContext
-    // Ordered checkpoint eviction (r9, VERDICT r8 item 2): a round's
-    // label blocks become unreachable the moment the NEXT round is
-    // materialized, but localCheckpoint blocks are freed only by the
-    // async ContextCleaner after a JVM GC — under a capped heap a fast
-    // follow-up run races that eviction (the r8 sf1 bench retry OOM in
-    // d_dedup_clusters). Track each round's newly-persisted RDD ids and
-    // unpersist the PREVIOUS round's explicitly once its successor is
-    // down. Safety is unchanged: a lazy localCheckpoint already cuts
-    // lineage, so a lost block was never recomputable from the prior
-    // round anyway; the final round's blocks stay for the result join.
-    val sc = pairs.sparkSession.sparkContext
-    var prevRoundIds: scala.collection.Set[Int] = Set.empty[Int]
-    while (changed > 0 && iter < maxIters) {
-      // two hops per materialized round: same total join work, half the
-      // checkpoint/count actions — the fixed per-job cost dominates on
-      // shallow components. The checkpoint is lazy so the convergence
-      // count is the ONE job per round (an eager checkpoint would run a
-      // second materialization job before it).
-      val before = sc.getPersistentRDDs.keySet
-      // every step consumes its input TWICE (hop: edge join + self-
-      // messages; jump: label side + pointer side), so each intermediate
-      // is EAGERLY checkpointed before the next step reads it —
-      // unmaterialized chaining would re-derive the first hop 8× per
-      // round (the 2^R hazard documented on the SQL unrolls), and LAZY
-      // intermediates keep the original logical plan, whose size
-      // estimates compound across self-join rounds until Catalyst's
-      // BigInteger stats overflow (measured: planning seized up by round
-      // ~6). Eager checkpoints swap in a LogicalRDD with fresh stats.
-      // The round's blocks are evicted once the next round lands (below).
-      val h1 = hop(labels.withColumn("prev", col("cluster_id")))
-        .localCheckpoint()
-      val j1 = jump(h1).localCheckpoint()
-      val h2 = hop(j1).localCheckpoint()
-      val midIds = sc.getPersistentRDDs.keySet.diff(before)
-      val next = jump(h2).localCheckpoint(false)
-      sc0.setJobDescription(s"cc round ${iter + 1}")
-      changed = next.filter(col("cluster_id") < col("prev")).count()
-      sc0.setJobDescription(null)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round ${iter + 1}: changed=$changed")
-      // `next` is materialized (the count above) — the round's
-      // intermediates AND the previous round's labels are dead now
-      val newIds = sc.getPersistentRDDs.keySet.diff(before).diff(midIds)
-      (prevRoundIds ++ midIds).foreach(id =>
-        sc.getPersistentRDDs.get(id).foreach(_.unpersist(blocking = false)))
-      prevRoundIds = newIds
-      labels = next.select(col("doc_id"), col("cluster_id"))
-      iter += 1
-    }
-    // partially-propagated labels would silently split one component into
-    // several "canonical" docs — refuse instead
-    require(changed == 0,
-      s"connectedComponents: not converged after $maxIters rounds " +
-      s"($changed labels still changing) — raise maxIters (component " +
-      "diameter exceeds it)")
-    vertices.select(col("doc_id")).join(labels, Seq("doc_id"), "left")
+    // two hop+jump pairs per round: same total join work, half the
+    // convergence counts. Every step reads its input twice (hop: edge
+    // join + self-messages; jump: label side + pointer side), so each
+    // intermediate is an eager leaf; `prev` carries the round's starting
+    // label for the changed count. A component whose labels still move
+    // after maxIters rounds is refused — partially-propagated labels
+    // would silently split it into several "canonical" docs.
+    val labels = Rounds.untilStable("cc", labels0, maxIters) { (l, round) =>
+      val h1 = round.eager(hop(l.withColumn("prev", col("cluster_id"))))
+      val j1 = round.eager(jump(h1))
+      val h2 = round.eager(hop(j1))
+      jump(h2)
+    }(next => next.filter(col("cluster_id") < col("prev")).count())
+    vertices.select(col("doc_id"))
+      .join(labels.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
   }
 

@@ -48,9 +48,7 @@ object GraphScale {
     }
 
   def broadcastMaxNodes(spark: SparkSession): Long =
-    longConf(spark, BroadcastMaxNodesKey,
-      Some("SPARK_GRAFT_GRAPH_CUTOVER"), // bench/soak override
-      DefaultBroadcastMaxNodes)
+    longConf(spark, BroadcastMaxNodesKey, None, DefaultBroadcastMaxNodes)
 
   /** True iff a graph with `nNodes` measured nodes should attach its
     * per-round node-keyed table by broadcast. */

@@ -10,16 +10,14 @@ import org.apache.spark.sql.functions._
   * subgraph where every node keeps ≥ k neighbors (the standard cohesion
   * screen before community/centrality work).
   *
-  * Distributed shape (the bounded-lineage recipe shared with
-  * `Dedup.connectedComponents` and `qPagerank`): the SYMMETRIZED edge
-  * table is peeled a FIXED number of rounds — each round is one
+  * Distributed shape: the SYMMETRIZED edge table is peeled a FIXED
+  * number of [[Rounds.fixed]] rounds — each round is one
   * map-side-combined degree `groupBy` plus two left-semi equi-joins
-  * against the (tiny, auto-broadcast) survivor set, `localCheckpoint`ed
-  * so plan depth stays constant instead of growing a 2-joins-per-round
-  * lineage. A fixed round count (rather than loop-until-converged) keeps
-  * the computation expressible as unrolled SQL for the DuckDB oracle;
-  * convergence is not assumed but CERTIFIED by the caller checking the
-  * final minimum degree ≥ k (the `stable` column in `q_kcore`).
+  * against the (tiny, auto-broadcast) survivor set. A fixed round count
+  * (rather than loop-until-converged) keeps the computation expressible
+  * as unrolled SQL for the DuckDB oracle; convergence is not assumed but
+  * CERTIFIED by the caller checking the final minimum degree ≥ k (the
+  * `stable` column in `q_kcore`).
   *
   * At 100 TB: each round is O(|E|) shuffle work on the shrinking edge
   * table, rounds = peel-cascade depth (measured 6 at both sf0.01 and
@@ -50,6 +48,7 @@ object KCore {
     * other's observation. */
   def peel(sym: DataFrame, k: Int, rounds: Int,
            modeOut: String => Unit = _ => ()): DataFrame = {
+    checkArgs(k, rounds)
     // ONE edge materialization serves both plans (the r8 soak lesson: a
     // plain checkpoint here plus a repartitioned one inside the shuffled
     // peel held TWO copies of the edge table and starved a capped heap):
@@ -67,8 +66,7 @@ object KCore {
     * rows — skip re-shuffling the edges per consuming query). */
   def peelLaid(e: DataFrame, nNodes: Long, k: Int, rounds: Int,
                modeOut: String => Unit = _ => ()): DataFrame = {
-    require(k >= 1, s"k-core threshold must be >= 1, got $k")
-    require(rounds >= 1, s"peel rounds must be >= 1, got $rounds")
+    checkArgs(k, rounds)
     if (GraphScale.useBroadcast(e.sparkSession, nNodes)) {
       modeOut("broadcast"); peelBroadcast(e, k, rounds)
     } else {
@@ -76,25 +74,24 @@ object KCore {
     }
   }
 
+  private def checkArgs(k: Int, rounds: Int): Unit = {
+    require(k >= 1, s"k-core threshold must be >= 1, got $k")
+    require(rounds >= 1, s"peel rounds must be >= 1, got $rounds")
+  }
+
   /** Broadcast plan: per round, the shrinking edge table is filtered by
     * two broadcast left-semi joins against the (small) survivor set.
     * Each round adds only map-side filters to the lineage. */
-  private def peelBroadcast(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = sym
-    for (r <- 1 to rounds) {
+  private def peelBroadcast(sym: DataFrame, k: Int, rounds: Int): DataFrame =
+    Rounds.fixed("kcore", sym, rounds) { (e, _) =>
       // out-degree == degree on a symmetric table; survivors broadcast
+      // (both semi-joins share one broadcast exchange)
       val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
         .filter(col("d") >= k)
         .select(col("u").as("node"))
-        .localCheckpoint(false)
-      e = e.join(keep, e("u") === keep("node"), "left_semi")
-      e = e.join(keep, e("v") === keep("node"), "left_semi")
-      // materializing every OTHER round halves the checkpoint write
-      // volume while keeping the re-derivation window one round deep
-      if (r % 2 == 0 || r == rounds) e = e.localCheckpoint()
+      e.join(keep, e("u") === keep("node"), "left_semi")
+        .join(keep, e("v") === keep("node"), "left_semi")
     }
-    e
-  }
 
   /** Shuffled plan (the [[Lpa.propagate]] recipe): the FULL edge table
     * is partitioned+sorted on `v` once and never moves again; state is
@@ -110,17 +107,15 @@ object KCore {
   private def peelShuffled(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     // e arrives (v-partitioned, sorted) and checkpointed from peel() —
     // the layout survives the checkpoint, so edges never re-shuffle
-    var alive = e.select(col("u")).distinct().localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val alive = Rounds.fixed("kcore", e.select(col("u")).distinct(), rounds) { (alive, _) =>
       val av = alive.withColumnRenamed("u", "n").hint("merge")
       val deg = e.join(av, e("v") === av("n"))
         .groupBy(e("u")).agg(count(lit(1)).as("d"))
       // a node's degree counts only ALIVE neighbors; a dead node can
       // still appear on the u side (its alive neighbors emit it), so
       // restrict to previously-alive nodes before thresholding
-      alive = deg.join(alive.hint("merge"), Seq("u"), "left_semi")
+      deg.join(alive.hint("merge"), Seq("u"), "left_semi")
         .filter(col("d") >= k).select(col("u"))
-        .localCheckpoint()
     }
     val an = alive.withColumnRenamed("u", "n")
     e.join(an.hint("merge"), e("u") === an("n"), "left_semi")

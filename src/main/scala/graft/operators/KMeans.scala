@@ -15,8 +15,7 @@ import org.apache.spark.sql.functions._
   * partial-aggregable groupBy(vec_id, k) + an argmin groupBy(vec_id); the
   * centroid update is one groupBy(k, pos) over the assigned table —
   * shuffle keys stay (vec_id) / (k, pos), both fine at 10⁹ vectors.
-  * `localCheckpoint` truncates the per-iteration lineage (same posture as
-  * [[Dedup.connectedComponents]]).
+  * The iterations run under [[Rounds.fixed]].
   *
   * Determinism: seeds are the k smallest vec_ids; cluster ids ARE the seed
   * vec_ids; distance ties break to the smaller cluster id; a cluster that
@@ -55,18 +54,15 @@ object KMeans {
     * assignment ([[assignTop]]) shares the identical centroids. */
   def finalCentroids(vecs: DataFrame, embeddings: DataFrame, k: Int, iters: Int): DataFrame = {
     val seeds = embeddings.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-    var cents = vecs.join(broadcast(seeds), "vec_id")
+    val cents0 = vecs.join(broadcast(seeds), "vec_id")
       .select(col("vec_id").as("k"), col("pos"), col("q").as("c"))
-    (0 until iters).foreach { _ =>
-      val a = assign(vecs, cents)
-      cents = a.join(vecs, "vec_id")
+    Rounds.fixed("kmeans", cents0, iters) { (cents, _) =>
+      assign(vecs, cents).join(vecs, "vec_id")
         .groupBy(col("k"), col("pos"))
         .agg(count(lit(1)).as("n"), sum(col("q")).as("s"))
         .select(col("k"), col("pos"),
           floor(col("s") * 1.0 / col("n")).cast("long").as("c"))
-        .localCheckpoint()
     }
-    cents
   }
 
   private def assign(vecs: DataFrame, c: DataFrame): DataFrame =

@@ -27,9 +27,8 @@ import org.apache.spark.sql.functions._
   * each round is a sort-MERGE equi-join against the label table — the
   * labels shuffle (|V| rows), the edges don't move — followed by one
   * map-side-combined `groupBy(u, lbl)` count with the per-node argmax
-  * folded in via `max(struct(cnt, -lbl))`. Labels are `localCheckpoint`ed
-  * every round to pin plan depth (the `connectedComponents` /
-  * `KCore.peel` lineage recipe). The merge join is FORCED: the sf1 gate
+  * folded in via `max(struct(cnt, -lbl))`. The rounds run under
+  * [[Rounds.fixed]]. The merge join is FORCED: the sf1 gate
   * showed AQE happily broadcasting the label table each round, and
   * per-round broadcast builds accumulate in the driver until the build
   * itself OOMs (the q_range_join lesson: broadcast/shuffle_hash pin
@@ -53,27 +52,16 @@ object Lpa {
     * across the iterative rows). */
   def propagateLaid(e: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"propagation rounds must be >= 1, got $rounds")
-    // r13 (guide §2.4): per-round checkpoints are LAZY — round r's labels
-    // are referenced exactly ONCE (round r+1's join), so the fixed-round
-    // chain executes in a single job with one merge-join + two aggregation
-    // stages per round, instead of one eager materialization job per
-    // round. Lineage depth is bounded by the fixed round count; blocks
-    // still materialize (and are reused by any second action) on first
-    // use. The trajectory is the same plans over the same values.
-    var labels = e.select(col("u")).distinct()
-      .withColumn("lbl", col("u"))
-      .localCheckpoint(false)
-    for (_ <- 1 to rounds) {
+    val labels0 = e.select(col("u")).distinct().withColumn("lbl", col("u"))
+    Rounds.fixed("lpa", labels0, rounds) { (labels, _) =>
       val l = labels.withColumnRenamed("u", "n").hint("merge")
-      labels = e.join(l, e("v") === l("n"))
+      e.join(l, e("v") === l("n"))
         .groupBy(e("u"), col("lbl")).agg(count(lit(1)).as("c"))
         // argmax by (count desc, label asc): struct max compares c first,
         // then -lbl, so the winner on a count tie is the SMALLEST label
         .groupBy(col("u"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("u"), (-col("m.neg")).as("lbl"))
-        .localCheckpoint(false)
     }
-    labels
   }
 }

@@ -1,0 +1,105 @@
+package graft.operators
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim
+
+import scala.collection.mutable.ArrayBuffer
+
+/** The per-round policy of every iterative loop in graft (CC, k-core,
+  * LPA, PageRank, Lloyd, BPE, the HNSW walks), in one place.
+  *
+  * Each round's state re-enters the next round's plan as a fresh leaf:
+  * a local checkpoint whose size estimate is carried from the round-0
+  * leaf, never derived from the previous round's plan. A plain
+  * `localCheckpoint` keeps the estimate of the plan it cut, so a loop
+  * that self-joins its state squares the estimate every round until
+  * Catalyst's BigInteger stats overflow (`e_knn_mutual` at sf0.1) — and
+  * planning slows down long before that. Carrying the round-0 estimate
+  * (rather than `spark.sql.defaultSizeInBytes`) keeps the join
+  * strategies the state's real size earns, e.g. `q_kcore`'s broadcast
+  * survivor semi-joins.
+  *
+  * The loop's shape picks the entry point:
+  *   - [[fixed]]: a fixed round count (the oracle unrolls it as SQL).
+  *     Each state is a LAZY leaf, so a round runs no more jobs than its
+  *     own shuffles need; the blocks materialize on first use and stay
+  *     for every later reader.
+  *   - [[untilStable]]: rounds until a `changed` count is zero. That
+  *     count is the one action that materializes a round; once it ran,
+  *     the previous round's state and this round's [[Round.eager]]
+  *     leaves are dead and are freed by the RDDs created for them (not
+  *     left to the ContextCleaner, which only runs after a GC — a capped
+  *     heap OOM'd on that race). Non-convergence is refused.
+  *
+  * Jobs a round runs are described `"<loop> round <r>"`; the caller's
+  * job description is restored afterwards and the job group is never
+  * touched (benchmarks attribute their counters by job group). */
+object Rounds {
+
+  /** One [[untilStable]] round: [[eager]] for values it reads twice. */
+  final class Round private[Rounds] {
+    private[Rounds] val blocks = ArrayBuffer.empty[RDD[_]]
+
+    /** [[Rounds.eager]], freed once the round's state has materialized. */
+    def eager(df: DataFrame): DataFrame = {
+      val (leaf, rdd) = graftshim.eagerLeaf(df)
+      blocks += rdd
+      leaf
+    }
+  }
+
+  /** `df` materialized now (one job) as a leaf with measured statistics
+    * — for a value read more than once. */
+  def eager(df: DataFrame): DataFrame = graftshim.eagerLeaf(df)._1
+
+  /** `n` rounds of `step` from `init`; `step` gets the previous state and
+    * the 1-based round number. Returns the round-`n` state. */
+  def fixed(loop: String, init: DataFrame, n: Int)(
+      step: (DataFrame, Int) => DataFrame): DataFrame = {
+    val (state0, size, _) = roundZero(init)
+    (1 to n).foldLeft(state0) { (state, r) =>
+      described(init, s"$loop round $r")(graftshim.lazyLeaf(step(state, r), size)._1)
+    }
+  }
+
+  /** Rounds of `step` from `init` until `changed(state)` is zero, at most
+    * `maxIters` of them; refuses (rather than returning a partial
+    * fixpoint) when the count is still positive after the last one. */
+  def untilStable(loop: String, init: DataFrame, maxIters: Int)(
+      step: (DataFrame, Round) => DataFrame)(changed: DataFrame => Long): DataFrame = {
+    var (state, size, dead) = roundZero(init)
+    var (c, r) = (1L, 0)
+    while (c > 0 && r < maxIters) {
+      r += 1
+      val round = new Round
+      val (next, rdd) = described(init, s"$loop round $r") {
+        val leaf = graftshim.lazyLeaf(step(state, round), size)
+        c = changed(leaf._1)
+        leaf
+      }
+      (dead ++ round.blocks).foreach(_.unpersist(blocking = false))
+      dead = Some(rdd)
+      state = next
+    }
+    require(c == 0, s"$loop: not converged after maxIters = $maxIters rounds " +
+      s"($c still changing); raise maxIters")
+    state
+  }
+
+  /** The round-0 leaf (`init` itself when it already is one), the size
+    * estimate every later round's leaf carries, and the RDD created for
+    * the leaf here, if any. */
+  private def roundZero(init: DataFrame): (DataFrame, BigInt, Option[RDD[_]]) = {
+    val size = init.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (graftshim.isLeaf(init)) (init, size, None)
+    else { val (leaf, rdd) = graftshim.lazyLeaf(init, size); (leaf, size, Some(rdd)) }
+  }
+
+  private def described[T](df: DataFrame, what: String)(body: => T): T = {
+    val sc = df.sparkSession.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(what)
+    try body finally sc.setLocalProperty("spark.job.description", prev)
+  }
+}

@@ -1996,9 +1996,8 @@ object Analytics extends QueryModule {
     * (15·S) div (100·N) + (85·Σᵤ rank_i(u) div deg(u)) div 100. The
     * Spark-first iterative-graph shape: the (u,v,outd) edge table is
     * materialized ONCE (localCheckpoint) and each iteration is one
-    * equi-join + one map-side-combined groupBy on the destination,
-    * checkpointed to cut the 5-deep lineage — the plan per iteration
-    * stays constant-depth, no recursive blow-up. Top-20 by rank via
+    * equi-join + one map-side-combined groupBy on the destination, run
+    * as [[graft.operators.Rounds.fixed]] rounds. Top-20 by rank via
     * TakeOrdered.
     *
     * The per-iteration rank attach switches AUTOMATICALLY on the
@@ -2061,25 +2060,16 @@ object Analytics extends QueryModule {
     val iters = 5
     val (er, deg, nn, useBroadcast) = pagerankCore(spark, sfDir)
     modeOut(if (useBroadcast) "broadcast" else "shuffled")
-    // r13 (guide §2.4): the per-iteration rank checkpoints are LAZY —
-    // each iteration's rank table is referenced exactly once (the next
-    // iteration's attach), so in broadcast mode the broadcast BUILD is
-    // the one materialization per round (the eager checkpoint ran a
-    // second, redundant job per round), and in shuffled mode the merge
-    // join's scan materializes it. Same plans, same integer trajectory.
-    var r = deg.select(col("u").as("node"))
-      .select(col("node"), lit(S / nn).as("rank"))
-      .localCheckpoint(false)
-    for (_ <- 1 to iters) {
+    val r0 = deg.select(col("u").as("node"), lit(S / nn).as("rank"))
+    val r = graft.operators.Rounds.fixed("pagerank", r0, iters) { (r, _) =>
       val joined =
         if (useBroadcast) er.join(broadcast(r), er("u") === r("node"))
         else er.join(r.hint("merge"), er("u") === r("node"))
-      r = joined
+      joined
         .groupBy(col("v"))
         .agg(sum(expr("rank div outd")).as("m"))
         .select(col("v").as("node"),
           expr(s"(15 * $S) div (100 * $nn) + (85 * m) div 100").as("rank"))
-        .localCheckpoint(false)
     }
     r.orderBy(col("rank").desc, col("node")).limit(20)
   }

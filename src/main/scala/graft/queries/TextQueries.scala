@@ -2875,9 +2875,8 @@ object TextQueries extends QueryModule {
     * non-boundary-sharing). Scale shape: everything runs on the
     * |vocab|-bounded form table (corpus-independent after the one
     * word-count shuffle); the adopted pair is a 1-row broadcast per
-    * round; plan depth pinned by per-round localCheckpoints (the
-    * KCore/kmeans unrolled-trajectory recipe, mirrored by the oracle's
-    * unrolled CTE chain). */
+    * round; the rounds run under [[graft.operators.Rounds.fixed]],
+    * mirrored by the oracle's unrolled CTE chain. */
   def bpeLoop(spark: SparkSession, sfDir: String): DataFrame =
     bpeTrain(spark, sfDir)._2.reduce(_ unionByName _).orderBy(col("merge_no"))
 
@@ -2896,7 +2895,7 @@ object TextQueries extends QueryModule {
   private def bpeTrainBuild(spark: SparkSession, sfDir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val encOf = regexp_replace(col("term"), "(.)", "\u0001$1\u0002")
-    var vocab = Tables.documents(spark, sfDir)
+    val vocab = Tables.documents(spark, sfDir)
       .select(explode(words(lower(col("text")))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("freq"))
       .select(col("term"), col("freq"), encOf.as("enc"))
@@ -2904,9 +2903,13 @@ object TextQueries extends QueryModule {
     val chars = vocab.agg(sum(col("freq") * length(col("term"))).as("chars"))
       .collect()(0).getAs[Long]("chars")
     val nsym = length(col("enc")) - length(expr("replace(enc, chr(1), '')"))
-    val rounds = Seq.newBuilder[DataFrame]
-    for (r <- 1 to BpeLoopMerges) {
-      val pairs = vocab
+    // each round's state is the re-segmented vocab plus the pair it
+    // adopted (pa, pb, n_occ on every row), so a round's report reads
+    // only its own state; `done` collects the states the loop moved past
+    val done = Seq.newBuilder[DataFrame]
+    val last = graft.operators.Rounds.fixed("bpe", vocab, BpeLoopMerges) { (v, r) =>
+      if (r > 1) done += v
+      val pairs = v
         .select(col("freq"),
           split(expr("substring(enc, 2, length(enc) - 2)"), "\u0002\u0001").as("syms"))
         .filter(size(col("syms")) >= 2) // sequence(1, 0) would step backwards
@@ -2917,20 +2920,20 @@ object TextQueries extends QueryModule {
         .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
         .agg(sum(col("freq")).as("n_occ"))
       val best = pairs.orderBy(col("n_occ").desc, col("pa"), col("pb")).limit(1)
-        .localCheckpoint(false)
-      vocab = vocab.crossJoin(broadcast(best))
+      v.select(col("term"), col("freq"), col("enc")).crossJoin(broadcast(best))
         .select(col("term"), col("freq"), expr(
           "replace(enc, concat(chr(1), pa, chr(2), chr(1), pb, chr(2)), " +
-            "concat(chr(1), pa, pb, chr(2)))").as("enc"))
-        .localCheckpoint()
-      rounds += vocab
+            "concat(chr(1), pa, pb, chr(2)))").as("enc"),
+          col("pa"), col("pb"), col("n_occ"))
+    }
+    val reports = (done.result() :+ last).zipWithIndex.map { case (v, i) =>
+      v.groupBy(col("pa"), col("pb"), col("n_occ"))
         .agg(sum(col("freq") * nsym).as("corpus_tokens"))
-        .crossJoin(broadcast(best))
-        .select(lit(r.toLong).as("merge_no"), col("pa"), col("pb"),
+        .select(lit(i + 1L).as("merge_no"), col("pa"), col("pb"),
           col("n_occ"), col("corpus_tokens"),
           expr(s"corpus_tokens * 10000 div $chars").as("tok_per_10k_chars"))
     }
-    (vocab, rounds.result())
+    (last.select(col("term"), col("freq"), col("enc")), reports)
   }
 
   /** The unrolled training CTE chain (bv0..bv8 + per-round best/report

@@ -1200,7 +1200,8 @@ object VectorQueries extends QueryModule {
     val visited0 = hnswScore(e, qs)(
         qs.select(col("q_id")).crossJoin(broadcast(hubIds)))
       .localCheckpoint(false)
-    hnswWalk(e, qs, g, visited0, KnnSearchBeam, KnnSearchRounds, last = true)
+    hnswWalks("knn search", e, qs, Seq(visited0 -> Seq((g, KnnSearchBeam, KnnSearchRounds))))
+      .drop("cfg")
   }
 
   /** Per-query recall of the beam walk vs brute-force truth (the
@@ -1385,85 +1386,94 @@ object VectorQueries extends QueryModule {
     df.sparkSession.createDataFrame(
       java.util.Arrays.asList(df.collect(): _*), df.schema)
 
-  /** (q_id, cand_id) → exact cosine against `e`; the candidate and query
-    * sides are tiny (≤ queries·beam·k rows) and ride broadcast into the
-    * corpus-side equi-join — shared by the descent and the sweep. */
+  /** (…, q_id, cand_id) → the same columns plus the exact cosine against
+    * `e`; the candidate and query sides are tiny (≤ queries·beam·k rows)
+    * and ride broadcast into the corpus-side equi-join — shared by the
+    * seeds and [[hnswWalks]]. */
   private def hnswScore(e: DataFrame, qs: DataFrame)(cands: DataFrame): DataFrame =
     e.join(broadcast(cands), e("vec_id") === cands("cand_id"))
       .join(broadcast(qs), "q_id")
-      .select(col("q_id"), col("cand_id"),
-        cosBp(col("qv"), col("v"), col("qn"), col("nrm")).as("cos_bp"))
+      .select(cands.columns.map(col) :+
+        cosBp(col("qv"), col("v"), col("qn"), col("nrm")).as("cos_bp"): _*)
 
-  /** One layer's greedy beam walk from the already-scored `visited0` set
-    * over graph `g`: per round the best `beam` UNEXPANDED visited nodes
-    * expand through their edges, newly reached ids are scored exactly,
-    * the beam re-cuts. `last = true` leaves the final grown set
-    * unmaterialized (it feeds exactly one readout). Deterministic
-    * (integer cos_bp, id tie-breaks) — DuckDB replays it per round. */
   /** One walk round's frontier expansion: the (tiny, local) frontier
     * probes the checkpointed edge list by BROADCAST hash on src_id — a
     * shuffled join would re-shuffle the O(n·k) graph per round, a dropped
-    * key would nested-loop it (PlanGuardSpec asserts this plan; it now
-    * executes inside the per-round collect job rather than in the walk's
-    * returned plan). */
+    * key would nested-loop it (PlanGuardSpec asserts this plan; it
+    * executes inside the per-round collect job). The frontier's other
+    * columns (q_id, and the walk's cfg) carry over to the reached ids. */
   private[graft] def hnswExpand(g: DataFrame, frontier: DataFrame): DataFrame =
     g.join(broadcast(frontier), g("src_id") === frontier("node"))
-      .select(col("q_id"), col("nbr_id").as("cand_id")).distinct()
+      .select(frontier.columns.filter(_ != "node").map(col) :+
+        col("nbr_id").as("cand_id"): _*).distinct()
 
-  private def hnswWalk(e: DataFrame, qs: DataFrame, g: DataFrame,
-                       visited0: DataFrame, beam: Int, rounds: Int,
-                       last: Boolean): DataFrame = {
+  /** Greedy beam walks over layer graphs, all advanced as ONE union state
+    * keyed by `cfg` (the walk's index in `walks`). Walk i starts from its
+    * already-scored seed (q_id, cand_id, cos_bp) and runs its segments in
+    * order, each `(graph, beam, rounds)`: per round the best `beam`
+    * UNEXPANDED visited nodes expand through the segment's graph, newly
+    * reached ids are scored exactly, the beam re-cuts; a new segment
+    * starts with every visited node unexpanded again (a fresh walk on
+    * the next layer down). The walks never interact, so advancing them
+    * together costs max-rounds rounds of fixed job latency instead of the
+    * sum. Deterministic (integer cos_bp, id tie-breaks, every operator
+    * keyed on (cfg, q_id)) — DuckDB replays each walk per round. Returns
+    * (cfg, q_id, cand_id, cos_bp).
+    *
+    * The rounds are job-latency-bound at every SF and the states are
+    * O(queries·beam·k) rows by construction: the per-round frontier and
+    * newly-reached sets are EXACTLY the rows a broadcast() build would
+    * collect to the driver anyway, so they are collected once and
+    * re-shipped as local relations (`qs` must be local too), leaving TWO
+    * jobs per round. ONE state table with an `expanded` flag — the
+    * frontier is the top-`beam` unexpanded rows by (cos_bp DESC, node). */
+  private def hnswWalks(loop: String, e: DataFrame, qs: DataFrame,
+                        walks: Seq[(DataFrame, Seq[(DataFrame, Int, Int)])]): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    // r13 (guide §1.2 step 2 / §2.6 — the rounds are job-latency-bound at
-    // every SF, the states are O(queries·beam·k) rows by construction):
-    // the per-round frontier and newly-reached sets are EXACTLY the rows
-    // a broadcast() build would collect to the driver anyway. Collect
-    // them once and re-ship as local relations: every per-round broadcast
-    // BUILD job (frontier, frontier-mark, newly, query side) disappears,
-    // leaving TWO jobs per round — the state materialization under the
-    // frontier cut and the newly-reached collect. Values, tie-breaks and
-    // the scored trajectory are bit-identical (the arithmetic still runs
-    // distributed over `e`; only the plumbing of ≤ queries·beam·k-row
-    // tables changed), so the DuckDB unrolled replay is unchanged.
-    val score = hnswScore(e, localized(qs)) _
-    val wBeam = Window.partitionBy(col("q_id")).orderBy(col("cos_bp").desc, col("node"))
-    // r12 (guide §2.4 — remove per-round materializations): ONE state
-    // table with an `expanded` flag — per-round frontier = top-`beam`
-    // unexpanded by (cos_bp DESC, node), exactly the old
-    // anti-join(visited, expanded) cut, so the visited set (and every
-    // recall/budget readout) is bit-identical.
-    var state = visited0.withColumn("expanded", lit(false)).localCheckpoint(false)
-    var out: DataFrame = null
-    for (r <- 1 to rounds) {
-      // JOB 1: materialize the state checkpoint, cut the beam, collect
-      val frontierRows = state.filter(!col("expanded"))
+    // per walk: one (graph, beam, resetBefore) entry per round
+    val plan = walks.map { case (_, segs) =>
+      segs.zipWithIndex.flatMap { case ((g, b, r), si) =>
+        (1 to r).map(j => (g, b, si > 0 && j == 1))
+      }.toVector
+    }
+    val seeds = walks.zipWithIndex.map { case ((seed, _), i) => seed.withColumn("cfg", lit(i)) }
+    val wBeam = Window.partitionBy(col("cfg"), col("q_id"))
+      .orderBy(col("cos_bp").desc, col("node"))
+    graft.operators.Rounds.fixed(loop,
+        seeds.reduce(_ unionByName _).withColumn("expanded", lit(false)),
+        plan.map(_.size).max) { (state, round) =>
+      val steps = plan.zipWithIndex.collect { case (p, i) if round <= p.size => i -> p(round - 1) }
+      val resets = steps.collect { case (i, (_, _, true)) => i }
+      val st =
+        if (resets.isEmpty) state
+        else state.withColumn("expanded",
+          when(col("cfg").isInCollection(resets), lit(false)).otherwise(col("expanded")))
+      val beamCol = steps.foldLeft(lit(0)) { case (acc, (i, (_, b, _))) =>
+        when(col("cfg") === i, lit(b)).otherwise(acc) }
+      // JOB 1: materialize the state, cut every walk's beam, collect
+      val frontierRows = st.filter(col("cfg").isInCollection(steps.map(_._1)) && !col("expanded"))
         .withColumnRenamed("cand_id", "node")
         .withColumn("brnk", row_number().over(wBeam))
-        .filter(col("brnk") <= beam)
-        .select(col("q_id"), col("node"))
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
-      val frontier = frontierRows.toDF("q_id", "node")
-      // JOB 2: expand through the checkpointed graph, drop already-visited
-      val newlyRows = hnswExpand(g, frontier)
-        .join(state, Seq("q_id", "cand_id"), "left_anti")
-        .collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
-      val scored = score(newlyRows.toDF("q_id", "cand_id"))
-      if (r < rounds) {
-        val fmark = frontierRows.map { case (q, n) => (q, n, true) }
-          .toDF("q_id", "cand_id", "inf")
-        state = state.join(broadcast(fmark), Seq("q_id", "cand_id"), "left")
-          .select(col("q_id"), col("cand_id"), col("cos_bp"),
-            (col("expanded") || coalesce(col("inf"), lit(false))).as("expanded"))
-          .unionByName(scored.withColumn("expanded", lit(false)))
-          .localCheckpoint(false)
-      } else {
-        val grown = state.select(col("q_id"), col("cand_id"), col("cos_bp"))
-          .union(scored)
-        out = if (last) grown else grown.localCheckpoint(false)
-      }
-    }
-    out
+        .filter(col("brnk") <= beamCol)
+        .select(col("cfg"), col("q_id"), col("node"))
+        .collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
+      // JOB 2: expand each walk through ITS segment's graph (only the
+      // graphs active this round are scanned), drop already-visited
+      val graphOf = steps.toMap.view.mapValues(_._1).toMap
+      val newlyRows = steps.map(_._2._1).distinct.map { g =>
+        hnswExpand(g, frontierRows.filter(t => graphOf(t._1) eq g).toDF("cfg", "q_id", "node"))
+      }.reduce(_ unionByName _)
+        .join(st, Seq("cfg", "q_id", "cand_id"), "left_anti")
+        .collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
+      val scored = hnswScore(e, qs)(newlyRows.toDF("cfg", "q_id", "cand_id"))
+      val fmark = frontierRows.map { case (c, q, n) => (c, q, n, true) }
+        .toDF("cfg", "q_id", "cand_id", "inf")
+      st.join(broadcast(fmark), Seq("cfg", "q_id", "cand_id"), "left")
+        .select(col("cfg"), col("q_id"), col("cand_id"), col("cos_bp"),
+          (col("expanded") || coalesce(col("inf"), lit(false))).as("expanded"))
+        .unionByName(scored.withColumn("expanded", lit(false)))
+    }.select(col("cfg"), col("q_id"), col("cand_id"), col("cos_bp"))
   }
 
   /** TRUE multi-layer HNSW search (the r9 "what's missing" item 4): a
@@ -1498,12 +1508,11 @@ object VectorQueries extends QueryModule {
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn")))
     val entry = lv.filter(col("lvl") >= HnswMaxLevel)
       .agg(min(col("vec_id")).as("cand_id"))
-    var visited = hnswScore(e, qs)(
+    val visited = hnswScore(e, qs)(
         qs.select(col("q_id")).crossJoin(broadcast(entry)))
       .localCheckpoint(false)
-    visited = hnswWalk(e, qs, g2, visited, 1, HnswUpperRounds, last = false)
-    visited = hnswWalk(e, qs, g1, visited, 1, HnswUpperRounds, last = false)
-    hnswWalk(e, qs, g0, visited, KnnSearchBeam, KnnSearchRounds, last = true)
+    hnswWalks("hnsw descent", e, qs, Seq(visited -> Seq((g2, 1, HnswUpperRounds),
+      (g1, 1, HnswUpperRounds), (g0, KnnSearchBeam, KnnSearchRounds)))).drop("cfg")
   }
 
   /** Incremental HNSW maintenance — the `e_ann_ivf_incr` posture for the
@@ -1781,86 +1790,17 @@ object VectorQueries extends QueryModule {
     val NavIndex(e, qs, g2, g1, g0, truth, entrySeed, hubSeed) =
       navSweepIndex(spark, sfDir)
     import spark.implicits._
-    // r13 (guide §2.4/§2.6, VERDICT r12 task 6): the four priced walks
-    // used to run SEQUENTIALLY — 31 walk rounds of tiny states, each
-    // paying fixed planning/stage latency. The walks never interact, so
-    // they now advance as ONE union state keyed by sweep config: per
-    // GLOBAL round every active config cuts its own beam (window keyed by
-    // (cfg, q_id), per-config beam width), expands through its current
-    // layer's graph, scores its newly reached ids, and marks its frontier
-    // — 15 rounds (the longest config) instead of 31, one readout instead
-    // of four. Per config the frontier/score/tie-break sequence is
-    // UNCHANGED (all operators key on (cfg, q_id); a layer transition
-    // resets the config's expanded flags, exactly the fresh-walk seeding
-    // hnswWalk applied), so each config's visited set — and the declared
-    // recall/budget rows — are bit-identical to the sequential walks the
-    // DuckDB oracle replays.
-    val gOf = Map(2 -> g2, 1 -> g1, 0 -> g0)
-    // per config: one (layer, beam, resetBefore) entry per global round
-    val perCfg: Map[Int, Vector[(Int, Int, Boolean)]] =
-      HnswSweepConfigs.zipWithIndex.map { case ((kind, upR, beam, rounds), i) =>
-        val segs =
-          if (kind == "hub") Seq((0, beam, rounds))
-          else Seq((2, 1, upR), (1, 1, upR), (0, beam, rounds))
-        i -> segs.zipWithIndex.flatMap { case ((l, b, r), si) =>
-          (1 to r).map(j => (l, b, si > 0 && j == 1))
-        }.toVector
-      }.toMap
-    val maxRounds = perCfg.values.map(_.size).max
-    val seeds = HnswSweepConfigs.zipWithIndex.map { case ((kind, _, _, _), i) =>
-      (if (kind == "hub") hubSeed else entrySeed).withColumn("cfg", lit(i))
-    }
-    var state = seeds.reduce(_ unionByName _)
-      .withColumn("expanded", lit(false))
-      .localCheckpoint(false)
-    for (r <- 0 until maxRounds) {
-      val steps = perCfg.collect { case (i, list) if r < list.size => i -> list(r) }
-      val resets = steps.collect { case (i, (_, _, true)) => i }.toSeq
-      val st =
-        if (resets.isEmpty) state
-        else state.withColumn("expanded",
-          when(col("cfg").isInCollection(resets), lit(false))
-            .otherwise(col("expanded")))
-      val active = steps.keys.toSeq.sorted
-      val beamOf = steps.map { case (i, (_, b, _)) => i -> b }
-      val layerOf = steps.map { case (i, (l, _, _)) => i -> l }
-      val wBeam = Window.partitionBy(col("cfg"), col("q_id"))
-        .orderBy(col("cos_bp").desc, col("node"))
-      val beamCol = beamOf.foldLeft(lit(0)) { case (acc, (i, b)) =>
-        when(col("cfg") === i, lit(b)).otherwise(acc) }
-      // JOB 1: materialize the union state, cut every config's beam
-      val frontierRows = st.filter(col("cfg").isInCollection(active) && !col("expanded"))
-        .withColumnRenamed("cand_id", "node")
-        .withColumn("brnk", row_number().over(wBeam))
-        .filter(col("brnk") <= beamCol)
-        .select(col("cfg"), col("q_id"), col("node"))
-        .collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
-      // JOB 2: expand each config through ITS layer's graph (only the
-      // layers active this round are scanned)
-      val newlyRows = layerOf.values.toSeq.distinct.sorted.map { l =>
-        val fl = frontierRows.filter(t => layerOf(t._1) == l)
-          .toDF("cfg", "q_id", "node")
-        gOf(l).join(broadcast(fl), gOf(l)("src_id") === fl("node"))
-          .select(col("cfg"), col("q_id"), col("nbr_id").as("cand_id")).distinct()
-      }.reduce(_ unionByName _)
-        .join(st, Seq("cfg", "q_id", "cand_id"), "left_anti")
-        .collect().map(x => (x.getInt(0), x.getLong(1), x.getLong(2))).toSeq
-      val newly = newlyRows.toDF("cfg", "q_id", "cand_id")
-      val scored = e.join(broadcast(newly), e("vec_id") === newly("cand_id"))
-        .join(broadcast(qs), "q_id")
-        .select(col("cfg"), col("q_id"), col("cand_id"),
-          cosBp(col("qv"), col("v"), col("qn"), col("nrm")).as("cos_bp"))
-      val fmark = frontierRows.map { case (c, q, n) => (c, q, n, true) }
-        .toDF("cfg", "q_id", "cand_id", "inf")
-      state = st.join(broadcast(fmark), Seq("cfg", "q_id", "cand_id"), "left")
-        .select(col("cfg"), col("q_id"), col("cand_id"), col("cos_bp"),
-          (col("expanded") || coalesce(col("inf"), lit(false))).as("expanded"))
-        .unionByName(scored.withColumn("expanded", lit(false)))
-        .localCheckpoint(false)
-    }
+    // the four priced walks advance together as one [[hnswWalks]] state
+    // (15 rounds, the longest config, instead of 31), with one readout;
+    // per config the visited set — and the declared recall/budget rows —
+    // are bit-identical to the sequential walks the DuckDB oracle replays
+    val state = hnswWalks("hnsw sweep", e, qs, HnswSweepConfigs.map {
+      case ("hub", _, beam, rounds) => hubSeed -> Seq((g0, beam, rounds))
+      case (_, upR, beam, rounds) =>
+        entrySeed -> Seq((g2, 1, upR), (g1, 1, upR), (g0, beam, rounds))
+    })
     // ONE readout for all four configs: per-config top-k vs truth + budget
     val v = state.filter(col("cand_id") =!= col("q_id"))
-      .select(col("cfg"), col("q_id"), col("cand_id"), col("cos_bp"))
       .localCheckpoint(false) // feeds the top-k cut and the budget count
     val wTop = Window.partitionBy(col("cfg"), col("q_id"))
       .orderBy(col("cos_bp").desc, col("cand_id"))

@@ -133,7 +133,16 @@ class HarnessSpec extends SparkSpecBase {
     assert(s.length <= 300, s"summary line too long (${s.length}): $s")
     assert(!s.contains("\n"))
     assert(s ==
-      """{"metric":"total","value":1.5,"unit":"sec","n":2,"failed":1,"gated":5,"sf":0.1,"cpus":32}""", s)
+      """{"metric":"total","value":1.5,"unit":"sec","n":2,"failed":1,"gated":5,"sf":0.1,"cpus":"32"}""", s)
+  }
+
+  test("Bench.renderSummary parses as JSON with a cpu list, cpus kept as a string") {
+    val s = Bench.renderSummary(Seq(Bench.Timing("a", 0.5, 0.7, 0.4)), Seq.empty,
+      "data/sf0.01", "4,8")
+    val j = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
+    assert(j.get("cpus").isTextual && j.get("cpus").asText == "4,8", s)
+    assert(j.get("value").asDouble == 0.5 && j.get("n").asInt == 1 &&
+      j.get("failed").asInt == 0 && j.get("sf").asDouble == 0.01, s)
   }
 
   test("timestamp contract: events.ts is TIMESTAMP_NTZ and every query analyzes against it") {

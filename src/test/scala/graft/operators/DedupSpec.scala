@@ -85,24 +85,6 @@ class DedupSpec extends SparkSpecBase {
     assert((0L to 19L).forall(got(_) == 0L) && got(20L) == 20L)
   }
 
-  test("connected components evict superseded round checkpoints as they go") {
-    import spark.implicits._
-    // a diameter-19 chain forces ~10 materialized rounds; with ordered
-    // eviction the persisted-RDD census after the run must carry only a
-    // bounded residue (pairs checkpoint + the final round), never one
-    // block set per round left for the async cleaner (the r8 sf1 bench
-    // retry-OOM mechanism)
-    val sc = spark.sparkContext
-    sc.getPersistentRDDs.foreach { case (_, r) => r.unpersist(true) }
-    val pairs = (0L until 19L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val vertices = (0L to 20L).toDF("doc_id")
-    val got = Dedup.connectedComponents(pairs, vertices)
-    assert(got.collect().length == 21) // run it
-    val residue = sc.getPersistentRDDs.size
-    assert(residue <= 4, s"$residue persisted RDDs left after CC — " +
-      "per-round checkpoints are leaking to the async cleaner again")
-  }
-
   test("segment dedup keeps only the globally-first occurrence of a segment") {
     import spark.implicits._
     // 2-word segments: doc 0 = [a b][c d], doc 1 repeats [a b] then a

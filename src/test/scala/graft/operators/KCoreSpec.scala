@@ -27,6 +27,13 @@ class KCoreSpec extends SparkSpecBase {
     assert(nodes(KCore.peel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
   }
 
+  test("peel refuses k = 0 before any Spark job starts") {
+    val (out, jobs) = jobsDuring(KCore.peel(g, k = 0, rounds = 1))
+    assert(out.failed.get.isInstanceOf[IllegalArgumentException], out)
+    assert(out.failed.get.getMessage.contains("k-core threshold"))
+    assert(jobs.isEmpty, s"peel ran ${jobs.size} job(s) before refusing: $jobs")
+  }
+
   test("peeling is idempotent once converged and empties past the degeneracy") {
     val core = KCore.peel(g, k = 2, rounds = 3)
     assert(nodes(KCore.peel(core, k = 2, rounds = 1)) === nodes(core))
