@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.graftshim
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -37,6 +38,13 @@ import scala.collection.mutable.ArrayBuffer
   * touched (benchmarks attribute their counters by job group). */
 object Rounds {
 
+  /** [[untilStable]]'s refusal of a loop still changing after `maxIters`
+    * rounds; a caller that knows why a loop cannot converge catches this
+    * and names the cause. */
+  final class NotConverged(loop: String, maxIters: Int, changed: Long)
+    extends IllegalArgumentException(s"$loop: not converged after " +
+      s"maxIters = $maxIters rounds ($changed still changing); raise maxIters")
+
   /** One [[untilStable]] round: [[eager]] for values it reads twice. */
   final class Round private[Rounds] {
     private[Rounds] val blocks = ArrayBuffer.empty[RDD[_]]
@@ -49,9 +57,10 @@ object Rounds {
     }
   }
 
-  /** `df` materialized now (one job) as a leaf with measured statistics
-    * — for a value read more than once. */
-  def eager(df: DataFrame): DataFrame = graftshim.eagerLeaf(df)._1
+  /** `df` materialized now (one job) at `level` as a leaf with measured
+    * statistics — for a value read more than once. */
+  def eager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
+    graftshim.eagerLeaf(df, level)._1
 
   /** `n` rounds of `step` from `init`; `step` gets the previous state and
     * the 1-based round number. Returns the round-`n` state. */
@@ -82,8 +91,7 @@ object Rounds {
       dead = Some(rdd)
       state = next
     }
-    require(c == 0, s"$loop: not converged after maxIters = $maxIters rounds " +
-      s"($c still changing); raise maxIters")
+    if (c != 0) throw new NotConverged(loop, maxIters, c)
     state
   }
 

@@ -939,7 +939,7 @@ object VectorQueries extends QueryModule {
     * [[knnGraphBuild]]): score every broadcast centroid per row inside a
     * `transform`, sort by (ccos DESC nan-first, cell ASC), slice, explode.
     * Zero exchange; the checkpoint holds n·probe rows. */
-  private def knnAssignTopCells(m: DataFrame, cents: DataFrame): DataFrame =
+  private[queries] def knnAssignTopCells(m: DataFrame, cents: DataFrame): DataFrame =
     m.crossJoin(broadcast(cents
         .agg(array_sort(collect_list(struct(col("cell"), col("cv"), col("cn"))))
           .as("cents"))))
@@ -947,9 +947,7 @@ object VectorQueries extends QueryModule {
         posexplode(slice(array_sort(transform(col("cents"), c => {
           val ccos = dot(col("v"), c.getField("cv")) /
             (col("nrm") * c.getField("cn"))
-          struct(
-            when(isnan(ccos), lit(Double.NegativeInfinity)).otherwise(-ccos)
-              .as("s1"),
+          struct(not(isnan(ccos)).as("s0"), (-ccos).as("s1"),
             c.getField("cell").as("cell"))
         })), 1, KnnProbe)).as(Seq("p", "tc")))
       .select(col("vec_id"), col("v"), col("nrm"),
@@ -971,9 +969,9 @@ object VectorQueries extends QueryModule {
     // holds only n·probe rows. Broadcast bytes are unchanged (the same
     // centroid table, packed into one row). Ordering is the window's
     // (ccos DESC, cell ASC) with Spark's nan-safe double semantics: the
-    // sort key is -ccos with NaN mapped below every real score (rank DESC
-    // placed NaN first), ties → cell — KnnAssignSpec pins equivalence
-    // against the window shape on the real corpus.
+    // sort key is (isnan DESC, -ccos, cell), so NaN ranks strictly before
+    // +∞ (rank DESC places NaN first) — KnnAssignSpec pins equivalence
+    // against the window shape on the real corpus and the NaN/+∞ order.
     val assigned = knnAssignTopCells(e, cents)
     val cellOf = assigned.filter(col("crnk") === 1)
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"))

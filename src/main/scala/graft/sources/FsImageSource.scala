@@ -2,7 +2,9 @@ package graft.sources
 
 import java.io.RandomAccessFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.{coalesce, col, concat, length, lit, translate, when}
+import org.apache.spark.storage.StorageLevel
+import graft.operators.Rounds
 import graft.sources.fsimage.FsImageFormat
 import graft.sources.fsimage.FsImageFormat._
 
@@ -16,25 +18,34 @@ import graft.sources.fsimage.FsImageFormat._
   *  - [[inodes]]: driver-side parse (the reference's posture — its
   *    FsImageLoader is fully in-memory, lib/.../core/FsImageLoader.java:286).
   *    Right for ad-hoc images up to a few million inodes.
-  *  - [[inodesDistributed]]: the scale path. The driver never materializes
-  *    a section OR the directory tree: it streams the INODE/INODE_DIR
-  *    sections once to find message-aligned chunk boundaries (O(buffer)
-  *    memory, [[FsImageFormat.scanRanges]]), then ships only (start,end)
-  *    offset pairs; each executor reads its own byte range of the image
-  *    via the Hadoop FileSystem API ([[FsImageFormat.readRange]] — works
-  *    for both file:// and DFS paths). Directory paths are resolved
-  *    DISTRIBUTIVELY — O(tree depth) iterative parent equi-joins over the
-  *    dir table with per-round lineage checkpoints (the
-  *    [[graft.operators.Dedup.connectedComponents]] posture), then file
-  *    paths attach by one parent-id join — so driver state is only the
-  *    string table plus the range scan buffer, never O(#dirs): a
-  *    10⁸-inode fleet image (~10⁶–10⁷ dirs × ~100 B paths) loads under a
-  *    2 GiB driver cap where a dir collect + path-map broadcast would be
-  *    a multi-GB driver materialization. Zlib images are not splittable,
-  *    so their sections are inflated once, streaming, to a side file that
-  *    the ranged reads then target — on a cluster, point the side file at
-  *    shared storage (or store scale images uncompressed, which is also
-  *    the Hadoop default for large fsimages).
+  *  - [[inodesDistributed]]: the scale path. The driver never holds a
+  *    section, the directory tree or anything O(#dirs) or O(#inodes): it
+  *    streams the INODE/INODE_DIR sections once to find message-aligned
+  *    chunk boundaries (O(buffer) memory, [[FsImageFormat.scanRanges]];
+  *    chunk = min(targetChunkBytes, max(64 KiB, section / cores)), so a
+  *    small section still spreads over the cluster's cores) and ships only
+  *    (start, end) offset pairs; each task reads its own byte range via the
+  *    Hadoop FileSystem API ([[FsImageFormat.readRange]] — file:// and DFS
+  *    paths alike) and parses it straight into encoded [[FsInode]] rows,
+  *    path and depth pending. Then:
+  *     1. a narrow (id, ftype, name, parent) table, joined from those rows
+  *        and the INODE_DIR edges, materialized once with measured
+  *        statistics ([[graft.operators.Rounds.eager]]), so the joins
+  *        against it and the dir-path table plan from their real size —
+  *        broadcasts at this repository's image sizes, shuffles at fleet
+  *        scale;
+  *     2. directory paths by pointer jumping ([[dirPathsDistributed]]:
+  *        O(log depth) rounds on [[graft.operators.Rounds.untilStable]]);
+  *     3. every inode's (id, path, depth) from its parent's path, measured
+  *        the same way, and one join of the wide rows to it.
+  *    The O(#inodes) materializations (the parsed rows, the narrow and the
+  *    path tables) are DISK_ONLY: they stream to the disk store and never
+  *    compete with execution memory — the difference between completing
+  *    and OOMing under a 2 GiB cap at 10⁷–10⁸ inodes. Zlib images are not
+  *    splittable, so their sections are inflated once, streaming, to a
+  *    side file that the ranged reads then target — on a cluster, point
+  *    the side file at shared storage (or store scale images uncompressed,
+  *    which is also the Hadoop default for large fsimages).
   */
 object FsImageSource {
 
@@ -329,61 +340,48 @@ object FsImageSource {
 
   /** Hard cap on directory-tree depth for the distributed path walk —
     * far above HDFS reality (dfs.namenode.fs-limits.max-directory-items
-    * trees run ~10–40 deep); hitting it means the image's parent edges
-    * form a cycle, and the walk raises the same diagnosis the driver
-    * loader's [[pathResolver]] cycle guard does instead of looping. */
+    * trees run ~10–40 deep); a walk that has not resolved by then means the
+    * image's parent edges form a cycle, and it raises the same diagnosis
+    * the driver loader's [[pathResolver]] cycle guard does. */
   private val MaxTreeDepth = 1024
 
-  /** Distributed dir id → absolute path: O(tree depth) iterative parent
-    * equi-joins, each round shrinking to the still-unresolved rows and
-    * truncating lineage with an eager localCheckpoint (the
-    * [[graft.operators.Dedup.connectedComponents]] pattern). No driver
-    * materialization — the only per-round driver values are a count and
-    * the loop guard.
+  /** Distributed dir id → absolute path by pointer jumping on
+    * [[Rounds.untilStable]]. A row (id, suffix, cursor) means path(id) =
+    * path(cursor) + suffix; a round joins the state to itself on cursor =
+    * id, so after r rounds a cursor has jumped 2ʳ links and a tree of
+    * depth d resolves in ⌈log₂ d⌉ rounds. A cursor that reaches root, or an
+    * id the table lacks (a dangling parent), attaches at root, exactly like
+    * the driver loader's [[pathResolver]]. Each round's one action is its
+    * count of unresolved rows — the only value the driver holds; a parent
+    * cycle never resolves, so the round cap raises the cycle diagnosis.
     *
     * @param dirs (id, name, parent) for every non-root directory; parent
     *             is RootInodeId when the image carries no edge for it
-    * @return (id, path) for every dir INCLUDING root ("/"); a dir whose
-    *         parent chain leaves the dir table attaches at root, exactly
-    *         like the driver loader's [[pathResolver]]
+    * @return (id, path) for every dir INCLUDING root ("/")
     */
   private[sources] def dirPathsDistributed(spark: SparkSession, dirs: DataFrame,
                                            maxDepth: Int = MaxTreeDepth): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, concat, lit, when}
     import spark.implicits._
-    // join side, reused every round: non-root dirs keyed by id
-    val parentSide = dirs.select(col("id").as("cursor"),
-      col("name").as("p_name"), col("parent").as("p_parent"))
-      .localCheckpoint()
-    // state: path = <unresolved prefix of cursor> + suffix; done ⇔ cursor=root
-    var active = dirs
-      .select(col("id"), concat(lit("/"), col("name")).as("suffix"),
-        col("parent").as("cursor"))
-      .localCheckpoint()
-    var done = List.empty[DataFrame]
-    var rounds = 0
-    while (!active.isEmpty) {
-      rounds += 1
-      if (rounds > maxDepth) throw new IllegalStateException(
-        s"fsimage directory tree has a parent cycle (depth > $maxDepth)")
-      val stepped = active.join(parentSide, Seq("cursor"), "left_outer")
-        .select(col("id"),
-          when(col("p_name").isNull, col("suffix"))
-            .otherwise(concat(lit("/"), col("p_name"), col("suffix"))).as("suffix"),
-          // unmatched cursor = root or a dangling parent → attach at root
-          coalesce(col("p_parent"), lit(RootInodeId)).as("cursor"))
-        .localCheckpoint()
-      done ::= stepped.filter(col("cursor") === RootInodeId)
-        .select(col("id"), col("suffix").as("path"))
-      active = stepped.filter(col("cursor") =!= RootInodeId)
-    }
-    val root = Seq((RootInodeId, "/")).toDF("id", "path")
-    done.foldLeft(root)(_ unionByName _).localCheckpoint()
+    val init = dirs.select(col("id"), concat(lit("/"), col("name")).as("suffix"),
+      col("parent").as("cursor"))
+    val rounds = 32 - Integer.numberOfLeadingZeros(maxDepth - 1) // ⌈log₂ maxDepth⌉
+    val walked =
+      try Rounds.untilStable("fsimage dir paths", init, rounds) { (s, _) =>
+        s.join(s.select(col("id").as("cursor"), col("suffix").as("up"),
+            col("cursor").as("next")), Seq("cursor"), "left_outer")
+          .select(col("id"), concat(coalesce(col("up"), lit("")), col("suffix")).as("suffix"),
+            coalesce(col("next"), lit(RootInodeId)).as("cursor"))
+      }(_.filter(col("cursor") =!= RootInodeId).count())
+      catch { case e: Rounds.NotConverged => throw new IllegalStateException(
+        s"fsimage directory tree has a parent cycle (depth > $maxDepth)", e) }
+    walked.select(col("id"), col("suffix").as("path"))
+      .unionByName(Seq((RootInodeId, "/")).toDF("id", "path"))
   }
 
   /** Scale-path loader — see the object scaladoc for the design. Driver
-    * memory is O(string table + scan buffer), never O(section) or
-    * O(#dirs). */
+    * memory is O(string table + scan buffer + range list), never
+    * O(section), O(#dirs) or O(#inodes). `parallelism` > 0 replaces the
+    * core count in the chunk size. */
   def inodesDistributed(spark: SparkSession, imagePath: String,
                         parallelism: Int = 0,
                         targetChunkBytes: Long = 32L << 20): DataFrame = {
@@ -459,29 +457,23 @@ object FsImageSource {
             (side.toString, Section(name, fs.getFileStatus(side).getLen, 0L))
         }
     }
-    val (inodePath, inodeSec) = sectionView("INODE")
-    val (dirPath, dirSec) = sectionView("INODE_DIR")
 
     // Driver pre-pass: stream each section once for message-aligned chunk
-    // ranges (absolute offsets into the view file).
+    // ranges (absolute offsets into the view file), small sections split
+    // across the cluster's cores instead of landing in one task.
     def ranges(path: String, sec: Section, dropHeader: Boolean): Array[(Long, Long)] = {
       if (sec.length == 0) return Array.empty
-      val requested =
-        if (parallelism > 0) math.max(1L << 16, sec.length / parallelism)
-        else targetChunkBytes
+      val split = if (parallelism > 0) parallelism else sc.defaultParallelism
       // clamp: range byte counts travel through Int (readRange buffers) —
       // an unclamped multi-GiB chunk would wrap .toInt and silently drop
       // the tail of each range
-      val chunk = math.min(requested, 1L << 30)
+      val chunk = Seq(targetChunkBytes, math.max(1L << 16, sec.length / split), 1L << 30).min
       val in = FsImageFormat.sectionRawStream(path, sec, None, hadoopConf)
       try FsImageFormat.scanRanges(in, dropHeader, chunk).map {
         case (from, to) => (sec.offset + from, sec.offset + to)
       } finally in.close()
     }
-    val inodeRanges = ranges(inodePath, inodeSec, dropHeader = true)
-    val dirRanges = ranges(dirPath, dirSec, dropHeader = false)
 
-    val ip = inodePath; val dp = dirPath // plain strings for the closures
     // ship the driver's Hadoop conf so executor-side FileSystem resolution
     // keeps credentials / fs impls (a default Configuration would not)
     val hconf = sc.broadcast {
@@ -490,77 +482,59 @@ object FsImageSource {
       while (it.hasNext) { val e = it.next(); b += ((e.getKey, e.getValue)) }
       b.result()
     }
-    // persisted: each RDD feeds several jobs (dir-path resolution + final
-    // DataFrame) — without persist the dominant cost (ranged I/O +
-    // protobuf parse of both sections) would run per consumer. DISK_ONLY,
-    // not MEMORY_AND_DISK_SER: blocks stream straight to the disk store,
-    // so caching N concurrent 32 MB parse ranges never competes with
-    // execution memory — the difference between completing and OOMing
-    // under a 2 GiB cap at 10⁷–10⁸ inodes; the re-read is sequential
-    // local-disk I/O, far cheaper than a re-parse.
-    import org.apache.spark.storage.StorageLevel
-    // EC policy table (built-ins + the image's ERASURE_CODING section):
-    // tiny, read once on the driver, broadcast — executors need it for
-    // the per-inode consumed-size math
+    /** One task per range: read it, parse every whole message in it. */
+    def parsed[T: scala.reflect.ClassTag](name: String)(
+        parse: (Array[Byte], Int) => Iterator[T]): org.apache.spark.rdd.RDD[T] = {
+      val (path, sec) = sectionView(name)
+      val rs = ranges(path, sec, dropHeader = name == "INODE")
+      sc.parallelize(rs.toSeq, math.max(1, rs.length)).flatMap { case (from, to) =>
+        val n = java.lang.Math.toIntExact(to - from)
+        parse(FsImageFormat.readRange(path, from, n, hconf.value), n)
+      }
+    }
+    // EC policy table (built-ins + the image's ERASURE_CODING section) and
+    // string table: tiny, read once on the driver, broadcast
     val bcPolicies = sc.broadcast(ecPolicies(summary, imagePath, hadoopConf))
-    val parsedInodes = sc.parallelize(inodeRanges.toSeq, math.max(1, inodeRanges.length))
-      .flatMap { case (from, to) =>
-        val n = java.lang.Math.toIntExact(to - from)
-        FsImageFormat.parseInodeRange(FsImageFormat.readRange(ip, from, n, hconf.value),
-          0, n, bcPolicies.value)
-      }
-      .persist(StorageLevel.DISK_ONLY)
-    val dirEntries = sc.parallelize(dirRanges.toSeq, math.max(1, dirRanges.length))
-      .flatMap { case (from, to) =>
-        val n = java.lang.Math.toIntExact(to - from)
-        FsImageFormat.parseDirRange(FsImageFormat.readRange(dp, from, n, hconf.value), 0, n)
-      }
-      .persist(StorageLevel.DISK_ONLY)
-
     val bcStrings = sc.broadcast(strings)
 
-    // Directory tree: resolved DISTRIBUTIVELY — no collect, no path-map
-    // broadcast. Edges are (child, parent) from the INODE_DIR section;
-    // the dir table is (id, name, parent) with parent root-attached when
-    // the image carries no edge (same semantics as the driver loader).
-    val edges = dirEntries
-      .flatMap(d => d.children.map(c => (c, d.parent)))
-      .toDF("child_id", "parent_id")
-    val dirMeta = parsedInodes.filter(_.inodeType == 2)
-      .map(i => (i.id, i.name))
-      .toDF("id", "name")
-    val dirTable = dirMeta.filter(col("id") =!= RootInodeId)
-      .join(edges, col("id") === col("child_id"), "left_outer")
-      .select(col("id"), col("name"),
-        org.apache.spark.sql.functions.coalesce(col("parent_id"), lit(RootInodeId)).as("parent"))
-    val dirPathsDf = dirPathsDistributed(spark, dirTable)
+    // Every inode encoded once, straight from its range, path and depth
+    // pending. A lazy DISK_ONLY checkpoint: the narrow leaf's job parses
+    // and stores it, the final join re-reads it from local disk (sequential
+    // I/O, far cheaper than a re-parse, and never competing with execution
+    // memory at 10⁷–10⁸ inodes).
+    val wide = spark.createDataset(parsed("INODE") { (bytes, n) =>
+        FsImageFormat.parseInodeRange(bytes, 0, n, bcPolicies.value)
+          .map(toInode(_, "", bcStrings.value, bcPolicies.value))
+      }).localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
+    val edges = spark.createDataset(parsed("INODE_DIR") { (bytes, n) =>
+        FsImageFormat.parseDirRange(bytes, 0, n).flatMap(d => d.children.iterator.map(c => (c, d.parent)))
+      }).toDF("id", "parent")
 
-    // Dir rows: attach each RawInode dir to its resolved path by id join.
-    val dirDs = parsedInodes.filter(_.inodeType == 2)
-      .map(i => (i.id, i))
-      .toDF("id", "inode")
-      .join(dirPathsDf, Seq("id"))
-      .select(col("inode").as("_1"), col("path").as("_2"))
-      .as[(RawInode, String)]
-      .map { case (i, p) => toInode(i, p, bcStrings.value, bcPolicies.value) }
+    // The narrow (id, ftype, name, parent) table, parent root-attached
+    // when the image carries no edge for the inode (the driver loader's
+    // semantics); measured, so the joins below plan from its real size.
+    val narrow = Rounds.eager(wide.select("id", "ftype", "name")
+      .join(edges, Seq("id"), "left_outer")
+      .withColumn("parent", coalesce(col("parent"), lit(RootInodeId))), StorageLevel.DISK_ONLY)
 
-    // Files + symlinks: parent edge join, then parent path by join (a
-    // left-join miss = no edge or non-dir parent → root-attached).
-    val nonDirs = parsedInodes.filter(_.inodeType != 2)
-      .map(i => (i.id, i))
-      .toDF("id", "inode")
-      .join(edges, col("id") === col("child_id"), "left_outer")
-      .join(dirPathsDf.select(col("id").as("parent_id"), col("path").as("pp")),
-        Seq("parent_id"), "left_outer")
-      .select(col("inode").as("_1"),
-        org.apache.spark.sql.functions.coalesce(col("pp"), lit("/")).as("_2"))
-      .as[(RawInode, String)]
-      .map { case (i, pp) =>
-        toInode(i, (if (pp == "/") "" else pp) + "/" + i.name,
-          bcStrings.value, bcPolicies.value)
-      }
+    // Directory paths, resolved distributively.
+    val dirPaths = dirPathsDistributed(spark, narrow
+      .filter(col("ftype") === "D" && col("id") =!= RootInodeId).select("id", "name", "parent"))
 
-    nonDirs.unionByName(dirDs).toDF()
+    // Every inode's path: its parent dir's path + "/" + name; a parent
+    // outside the dir table (no edge, a non-dir parent) reads as root.
+    val pp = coalesce(col("pp"), lit("/"))
+    val path = when(col("id") === RootInodeId, lit("/"))
+      .otherwise(concat(when(pp === "/", lit("")).otherwise(pp), lit("/"), col("name")))
+    val paths = Rounds.eager(narrow
+      .join(dirPaths.select(col("id").as("parent"), col("path").as("pp")), Seq("parent"), "left_outer")
+      .select(col("id"), path.as("path"))
+      .withColumn("depth", when(col("path") === "/", 0)
+        .otherwise(length(col("path")) - length(translate(col("path"), "/", "")))),
+      StorageLevel.DISK_ONLY)
+
+    // One join of the wide rows to (id, path, depth), FsInode's columns.
+    wide.drop("path", "depth").join(paths, "id").select(wide.columns.map(col).toIndexedSeq: _*)
   }
 
   /** Parses the image into namespace rows (driver-side). */

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
 
 /** Minimal bridge to Spark's `private[sql]` API: the Column⇄Expression
   * converters so graft can register native Catalyst expressions (SURVEY
@@ -39,12 +40,14 @@ package object graftshim {
     * layout (partitioning, ordering) and constraints of the checkpoint
     * are kept. Returns the leaf and the RDD holding its blocks. */
   def lazyLeaf(df: Dataset[_], sizeInBytes: BigInt): (DataFrame, RDD[_]) =
-    leaf(df, _ => Statistics(sizeInBytes))
+    leaf(df, StorageLevel.MEMORY_AND_DISK, _ => Statistics(sizeInBytes))
 
-  /** Eagerly materialized local checkpoint of `df` as a plan leaf whose
-    * statistics are measured: the row count of its blocks (the one job
-    * that materializes them) times the row width Catalyst assumes. */
-  def eagerLeaf(df: Dataset[_]): (DataFrame, RDD[_]) = leaf(df, { lr =>
+  /** Eagerly materialized local checkpoint of `df`, stored at `level`, as
+    * a plan leaf whose statistics are measured: the row count of its
+    * blocks (the one job that materializes them) times the row width
+    * Catalyst assumes. */
+  def eagerLeaf(df: Dataset[_], level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
+      : (DataFrame, RDD[_]) = leaf(df, level, { lr =>
     val rows = BigInt(lr.rdd.count())
     Statistics(EstimationUtils.getOutputSize(lr.output, rows), Some(rows))
   })
@@ -52,9 +55,10 @@ package object graftshim {
   /** True iff `df` already is a checkpoint (or other RDD-backed) leaf. */
   def isLeaf(df: Dataset[_]): Boolean = df.queryExecution.analyzed.isInstanceOf[LogicalRDD]
 
-  private def leaf(df: Dataset[_], stats: LogicalRDD => Statistics): (DataFrame, RDD[_]) = {
+  private def leaf(df: Dataset[_], level: StorageLevel,
+                   stats: LogicalRDD => Statistics): (DataFrame, RDD[_]) = {
     val session = df.sparkSession.asInstanceOf[classic.SparkSession]
-    val lr = df.localCheckpoint(false).queryExecution.analyzed.asInstanceOf[LogicalRDD]
+    val lr = df.localCheckpoint(false, level).queryExecution.analyzed.asInstanceOf[LogicalRDD]
     (classic.Dataset.ofRows(session, lr.copy()(session, Some(stats(lr)), Some(lr.constraints))),
       lr.rdd)
   }

@@ -38,4 +38,15 @@ class KnnAssignSpec extends SparkSpecBase {
     assert(now.except(ref).isEmpty && ref.except(now).isEmpty,
       "map-side assignment diverges from the rank-window reference")
   }
+
+  test("a NaN score ranks strictly before +inf, whatever the cell ids") {
+    import spark.implicits._
+    // ccos = dot / (nrm · cn): cell 0 overflows to +inf, cell 1 is NaN;
+    // ccos DESC orders NaN first, so the lower cell id must not win a tie
+    val m = Seq((1L, Seq(1e200), 1.0)).toDF("vec_id", "v", "nrm")
+    val cents = Seq((0, Seq(1e200), 1.0), (1, Seq(Double.NaN), 1.0)).toDF("cell", "cv", "cn")
+    val ranks = VectorQueries.knnAssignTopCells(m, cents).collect()
+      .map(r => r.getAs[Int]("cell") -> r.getAs[Int]("crnk")).toMap
+    assert(ranks == Map(1 -> 1, 0 -> 2), s"cell -> rank: $ranks")
+  }
 }

@@ -703,4 +703,38 @@ class FsImageSourceSpec extends SparkSpecBase {
     assert(paths(20012L) == "/top/mid/leaf")
     assert(paths(20013L) == "/orphan")
   }
+
+  test("distributed path walk: a 64-deep chain resolves in at most 7 rounds") {
+    import graft.sources.fsimage.ImageGen
+    val dir = java.nio.file.Files.createTempDirectory("graft_deep").toFile
+    val img = new java.io.File(dir, "deep.img").getPath
+    ImageGen.write(img, ImageGen.GenSpec(nDirs = 70, nFiles = 200, chainDirs = 64))
+    val deepest = (0 until 64).map(j => s"dir_$j").mkString("/", "/", "")
+    val (found, jobs) = jobsDuring(FsImageSource.inodesDistributed(spark, img)
+      .filter(col("path") === deepest).select("depth").collect())
+    assert(found.get.map(_.getInt(0)).toSeq == Seq(64))
+    // pointer jumping: round r resolves every dir within 2^r links of root
+    val Round = "fsimage dir paths round (\\d+)".r
+    val rounds = jobs.collect { case Round(r) => r.toInt }.distinct
+    info(s"${rounds.size} rounds, ${jobs.size} jobs")
+    assert(rounds.nonEmpty && rounds.max <= 7, s"round jobs: $rounds of ${jobs.size} jobs")
+    new java.io.File(img).delete()
+  }
+
+  test("distributed load of the depth-1 session image stays under a job bound") {
+    import graft.sources.fsimage.ImageGen
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toFile
+    val img = new java.io.File(dir, "ns.img").getPath
+    // the benchmark's fsimage_session image: 31,301 inodes, every dir under root
+    ImageGen.write(img, ImageGen.GenSpec(nDirs = 300, nFiles = 30000, ecEvery = 100,
+      aclEvery = 1000, xattrEvery = 1000, nSymlinks = 1000, withAtime = true,
+      quotaEvery = 100, ucEvery = 1000))
+    val (n, jobs) = jobsDuring(FsImageSource.inodesDistributed(spark, img).count())
+    assert(n.get == 31301L)
+    info(s"${jobs.size} jobs")
+    // 12 jobs; the loader before the pointer-jumping walk ran 25 here
+    // (per-round isEmpty + eager checkpoint, one-task parse, two joins)
+    assert(jobs.size <= 16, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    new java.io.File(img).delete()
+  }
 }
