@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.operators.{Dedup, KMeans, PrefixSum}
+import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
 
 /** End-to-end curation pipeline — the operators composed the way a
   * production run chains them, with shared artifacts computed ONCE:
-  * the surviving corpus is `localCheckpoint`'d between stages (each stage
-  * reads the previous stage's materialization, not a re-derivation), and
+  * the surviving corpus is materialized between stages ([[Rounds.eager]]:
+  * each stage reads the previous stage's materialization, not a
+  * re-derivation, and the job that materializes it also counts it), and
   * one k-means fit feeds cluster sizes, quality metrics AND medoids.
   * [[Bench]] measures every query standalone by design; this main is the
   * reuse counterpoint — the library surface a pipeline author actually
@@ -41,12 +42,12 @@ object Pipeline {
       val n = rows
       out += ((name, n, (System.nanoTime() - t0) / 1e9))
     }
-    // stageDf: the checkpoint inside the thunk is eager, so building the
-    // stage's materialization AND counting it land in the stage's time
+    // stageDf: one job materializes the stage and measures its row count,
+    // and both land in the stage's time
     def stageDf(name: String)(f: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
-      val d = f
-      val n = d.count()
+      val d = Rounds.eager(f)
+      val n = Rounds.measuredRows(d)
       out += ((name, n, (System.nanoTime() - t0) / 1e9))
       d
     }
@@ -59,7 +60,7 @@ object Pipeline {
       .agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val afterExact = stageDf("after_exact_dedup") {
-      docs.join(exactKeep, "doc_id").localCheckpoint()
+      docs.join(exactKeep, "doc_id")
     }
 
     // 2. near-dup: shingle-Jaccard pairs → components → best (longest,
@@ -73,7 +74,7 @@ object Pipeline {
       val nearKeep = Dedup
         .keepBest(labels, afterExact.select(col("doc_id"), col("n_chars").as("score")))
         .select(col("doc_id"))
-      afterExact.join(nearKeep, "doc_id").localCheckpoint()
+      afterExact.join(nearKeep, "doc_id")
     }
 
     // 3. quality gate: drop each language's bottom quartile — the SAME
@@ -86,7 +87,6 @@ object Pipeline {
         .groupPercentile(scored, "lang", "q_bp", QualityQuantile)
         .filter(col("q_bp") >= col("thr_bp"))
         .select(col("doc_id"), col("text"))
-        .localCheckpoint()
     }
 
     // 4. context-window packing: exclusive prefix sum of token counts in
@@ -112,7 +112,6 @@ object Pipeline {
       KMeans.fit(Tables.embeddings(spark, sfDir),
           k = graft.queries.VectorQueries.KmeansK,
           iters = graft.queries.VectorQueries.KmeansIters)
-        .localCheckpoint()
     }
     stage("kmeans_clusters")(fit.select(col("cluster")).distinct().count())
     val medoids = fit.groupBy(col("cluster"))

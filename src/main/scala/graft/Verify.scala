@@ -59,14 +59,9 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the window-over-union soundness guard — see GraftSession
-      .config("spark.sql.unionOutputPartitioning", "false")
-      .config("spark.ui.enabled", "false")
+    // the bench and CLI session, so the oracle checks the plans they run
+    val spark = graft.core.GraftSession
+      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (local iteration);

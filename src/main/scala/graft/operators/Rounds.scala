@@ -62,6 +62,11 @@ object Rounds {
   def eager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     graftshim.eagerLeaf(df, level)._1
 
+  /** The row count an [[eager]] leaf measured when it materialized. */
+  def measuredRows(leaf: DataFrame): Long =
+    leaf.queryExecution.analyzed.stats.rowCount.map(_.toLong).getOrElse(
+      throw new IllegalArgumentException("measuredRows: not an eager leaf"))
+
   /** `n` rounds of `step` from `init`; `step` gets the previous state and
     * the 1-based round number. Returns the round-`n` state. */
   def fixed(loop: String, init: DataFrame, n: Int)(

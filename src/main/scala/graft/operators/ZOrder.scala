@@ -47,15 +47,17 @@ object ZOrder {
     // would get a non-selective layout with no error. Mirror the
     // Triangles packed-key posture with a codegen'd runtime check — the
     // write path refuses out-of-range keys loudly instead of writing a
-    // silently useless layout.
+    // silently useless layout. A NULL key is refused too, and named: it
+    // would otherwise turn the whole message into NULL.
     val bound = lit(1L << bits)
     def inRange(c: Column): Column =
       c.cast("long") >= 0L && c.cast("long") < bound
+    def shown(c: String): Column = coalesce(col(c).cast("string"), lit("NULL"))
     val z = when(inRange(col(xCol)) && inRange(col(yCol)),
         zValue(col(xCol), col(yCol), bits))
       .otherwise(raise_error(concat(
         lit(s"ZOrder.layout: key outside [0, 2^$bits): $xCol="),
-        col(xCol).cast("string"), lit(s", $yCol="), col(yCol).cast("string"))))
+        shown(xCol), lit(s", $yCol="), shown(yCol))))
     df.withColumn("z", z)
       .repartitionByRange(nFiles, col("z"))
       .sortWithinPartitions(col("z"))

@@ -66,6 +66,32 @@ class HarnessSpec extends SparkSpecBase {
     } finally spark.conf.unset("spark.graft.bench.rowStealBp")
   }
 
+  test("Bench.timeAll ships the measured timing, flagged, when a suite-end re-queue attempt throws") {
+    // every in-place attempt succeeds (dirty under rowStealBp = -1); the
+    // first re-queue run throws. The row keeps its complete timing, and
+    // its attempt ledger ends with the failed re-queue attempt.
+    var calls = 0
+    val inPlaceRuns = 2 * Bench.MaxStealAttempts
+    def failsOnRequeue(s: SparkSession, dir: String): DataFrame = {
+      calls += 1
+      if (calls > inPlaceRuns) throw new IllegalStateException("transient on re-queue")
+      ok(s, dir)
+    }
+    spark.conf.set("spark.graft.bench.rowStealBp", "-1")
+    try {
+      val (timings, failures) = Bench.timeAll(spark, Sf,
+        Seq("gated" -> (failsOnRequeue _)), runs = 2)
+      assert(failures.isEmpty, failures.toString)
+      assert(timings.map(_.name) == Seq("gated"))
+      assert(calls == inPlaceRuns + 1, s"re-queue must stop at its first failure, ran $calls")
+      val steals = timings.head.attemptSteals
+      assert(steals.size == Bench.MaxStealAttempts + 1 && steals.last == Bench.FailedAttempt,
+        steals.toString)
+      val json = Bench.renderJson(timings, failures, "/tmp/sf")
+      assert(json.contains(s""""steal_attempts":{"gated":${steals.mkString("[", ",", "]")}}"""), json)
+    } finally spark.conf.unset("spark.graft.bench.rowStealBp")
+  }
+
   test("Bench.timeAll excludes a broken query from timings and records it as failed") {
     val (timings, failures) = Bench.timeAll(spark, Sf,
       Seq("good" -> ok _, "bad" -> boom _), runs = 2)

@@ -2,11 +2,12 @@ package graft
 
 /** The composed curation chain holds its invariants: each gate only ever
   * shrinks the corpus, packing covers the surviving tokens, and the single
-  * k-means fit yields all three cluster views. */
+  * k-means fit yields all three cluster views; no stage runs a job just to
+  * count itself. */
 class PipelineSpec extends SparkSpecBase {
   test("pipeline stages shrink monotonically and the shared fit feeds all views") {
-    val stages = Pipeline.run(spark, Sf)
-      .map { case (k, v, _) => k -> v }.toMap
+    val (run, jobs) = jobsDuring(Pipeline.run(spark, Sf))
+    val stages = run.get.map { case (k, v, _) => k -> v }.toMap
     assert(stages("docs") > 0)
     assert(stages("after_exact_dedup") <= stages("docs"))
     assert(stages("after_neardup_keep") <= stages("after_exact_dedup"))
@@ -18,5 +19,8 @@ class PipelineSpec extends SparkSpecBase {
     assert(stages("kmeans_clusters") == stages("cluster_medoids"))
     assert(stages("medoid_argmin_violations") == 0L)
     assert(stages("fit_wcss_nonzero") == 1L)
+    // each of the 4 materialized stages is counted by the one job that
+    // materializes it; a checkpoint and then a count() ran 79 jobs here
+    assert(jobs.size <= 71, s"${jobs.size} jobs")
   }
 }

@@ -40,4 +40,13 @@ class ZOrderSpec extends SparkSpecBase {
       case _ => ()
     }
   }
+
+  test("layout refuses a NULL key with a message naming the column") {
+    import spark.implicits._
+    val df = Seq((Some(1L), 2L), (None, 3L)).toDF("x", "y")
+    val e = intercept[Exception](ZOrder.layout(df, "x", "y", nFiles = 2).collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("ZOrder.layout: key outside [0, 2^21): x=NULL, y=3"), msgs)
+  }
 }
