@@ -18,7 +18,14 @@ import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
   *
   * Stages: exact dedup → near-dup keep-best → per-language quality gate
   * (bottom quartile dropped) → context-window packing; embeddings: one
-  * Lloyd fit → three cluster views. Prints ONE JSON line of stage counts.
+  * Lloyd fit → three cluster views, computed by one aggregate and read
+  * once. Prints ONE JSON line of stage counts.
+  *
+  * At benchmark scale a run costs its Spark jobs, not its rows: each job
+  * carries ~30 ms of fixed overhead on a 4-core host, and after AQE
+  * coalescing most stages are one task. So the chain starts a job only
+  * where one does work, and `PipelineSpec` holds it to a job budget
+  * (53 jobs at sf0.001).
   *
   * `runMain graft.Pipeline [sfDir]` (env: SPARK_GRAFT_SF_DIR,
   * SPARK_GRAFT_CPUS).
@@ -113,19 +120,21 @@ object Pipeline {
           k = graft.queries.VectorQueries.KmeansK,
           iters = graft.queries.VectorQueries.KmeansIters)
     }
-    stage("kmeans_clusters")(fit.select(col("cluster")).distinct().count())
-    val medoids = fit.groupBy(col("cluster"))
-      .agg(min(struct(col("dist"), col("vec_id"))).as("m"))
-      .select(col("cluster"), col("m.dist").as("mdist"))
-    // the medoid dist must BE the cluster's min dist — a broken argmin
-    // (e.g. wrong struct field order) shows up as a violation here
-    stage("cluster_medoids")(medoids.count())
-    stage("medoid_argmin_violations") {
-      medoids
-        .join(fit.groupBy(col("cluster")).agg(min(col("dist")).as("lo")), "cluster")
-        .filter(col("mdist") =!= col("lo")).count()
-    }
-    val wcss = fit.agg(sum(col("dist")).as("w")).head().getLong(0)
+    // the three cluster views in ONE aggregate over the fit, read once
+    // (in the first stage that needs it): per cluster the medoid (argmin
+    // by struct), the min dist and the dist sum. The medoid dist must BE
+    // the cluster's min dist — two independent aggregates, so a broken
+    // argmin (e.g. wrong struct field order) shows up as a violation
+    lazy val views = fit.groupBy(col("cluster"))
+      .agg(min(struct(col("dist"), col("vec_id"))).as("m"),
+        min(col("dist")).as("lo"), sum(col("dist")).as("w"))
+      .select(col("m.dist").as("mdist"), col("lo"), col("w"))
+      .collect()
+    stage("kmeans_clusters")(views.length.toLong)
+    stage("cluster_medoids")(views.length.toLong)
+    stage("medoid_argmin_violations")(views.count(r => r.getLong(0) != r.getLong(1)).toLong)
+    // overflow fails, as ANSI `sum` does within each cluster
+    val wcss = views.foldLeft(0L)((a, r) => Math.addExact(a, r.getLong(2)))
     stage("fit_wcss_nonzero")(if (wcss > 0) 1L else 0L)
     out.result()
   }

@@ -57,20 +57,20 @@ package object functions {
     * for position-sensitive consumers like winnowing, where the k-th
     * shingle's identity matters, not just set membership. */
   def word_shingle_seq(text: Column): Column =
-    transform(word_shingles_raw(text),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))
+    ExpressionUtils.column(ShingleKeysExpr(ExpressionUtils.expression(text), distinct = false))
 
   /** DISTINCT word-3gram shingles as 60-bit longs: the raw 3-grams are
-    * deduped BEFORE hashing (md5 runs once per distinct shingle, not per
-    * occurrence — repetitive corpora repeat shingles heavily), then md5
-    * truncated to 15 hex chars and parsed as a long. Everything downstream
-    * that shuffles, sorts, or joins on a shingle key moves 8-byte longs
-    * instead of 32-char hex strings — a 4× cut in key bytes on the dedup
-    * self-joins. The truncation is engine-portable (DuckDB
+    * deduped (first-seen order) BEFORE hashing, so md5 runs once per
+    * distinct shingle, not per occurrence — repetitive corpora repeat
+    * shingles heavily; each key is md5 truncated to 15 hex chars. Everything
+    * downstream that shuffles, sorts, or joins on a shingle key moves
+    * 8-byte longs instead of 32-char hex strings — a 4× cut in key bytes on
+    * the dedup self-joins. The truncation is engine-portable (DuckDB
     * `CAST('0x' || substr(md5(…),1,15) AS BIGINT)`), so any truncation
     * collision happens identically in the oracle and hash checks stay
-    * exact. */
+    * exact. One native expression ([[ShingleKeysExpr]]): the equivalent
+    * built-in composition over [[word_shingles_raw]] has Spark interpret
+    * its `transform` lambdas per element. */
   def word_shingle_keys(text: Column): Column =
-    transform(array_distinct(word_shingles_raw(text)),
-      s => conv(substring(md5(s), 1, 15), 16, 10).cast("long"))
+    ExpressionUtils.column(ShingleKeysExpr(ExpressionUtils.expression(text), distinct = true))
 }

@@ -108,11 +108,11 @@ object Dedup {
     // window. The old shape materialized the unfiltered explode and then
     // ran the window sort + df filter once per self-join SIDE (the
     // exchange was reused, the sort+filter were not). Cutting first and
-    // checkpointing the survivors (a) halves the window work, (b) shrinks
-    // the checkpoint to the post-cut rows without the df column, and
-    // (c) hands both join sides the SAME (sh-partitioned, sh-sorted)
-    // layout — localCheckpoint preserves partitioning+ordering, so the
-    // self-join needs no exchange and no re-sort at any corpus size.
+    // checkpointing the survivors (a) halves the window work and (b)
+    // shrinks the checkpoint to the post-cut rows without the df column.
+    // The checkpoint does NOT keep the window's (sh-partitioned,
+    // sh-sorted) layout (LayoutSpec): the self-join below plans an
+    // exchange and a sort on both sides, reused as one exchange.
     val kept = documents
       .select(col("doc_id"), graft.functions.word_shingle_keys(col("text")).as("shs"))
       .select(col("doc_id"), size(col("shs")).cast("long").as("n_sh"),
@@ -151,31 +151,26 @@ object Dedup {
     // materialize the (possibly expensive) pair plan ONCE — the union
     // below scans it twice, and every propagation round scans the result
     val p = Rounds.eager(pairs.select(col("doc_a"), col("doc_b")))
-    // r13 (guide §2.4 — one exchange per hop): the symmetric edge table is
-    // laid out ONCE by the hop join's key (`doc_id` = the endpoint whose
-    // label flows out) and checkpointed; the label table is keyed the same
-    // way by construction (every hop's aggregate groups on doc_id), so the
-    // per-hop edges⋈labels join and the label-domain seeding both reuse
-    // this layout instead of re-shuffling the edge table every hop. The
-    // pair table is near-dup candidates — a sliver of the corpus — so the
-    // extra laid copy is bounded (the r8 two-copies lesson doesn't bite).
+    // the symmetric edge table, staged once: every hop joins it on
+    // `doc_id` (the endpoint whose label flows out). A checkpoint keeps no
+    // partitioning (LayoutSpec), so the hop's join shuffles it either way
+    // and it is not repartitioned first. The pair table is near-dup
+    // candidates — a sliver of the corpus — so the staged copy is bounded
+    // (the r8 two-copies lesson doesn't bite).
     val sym = Rounds.eager(
       p.select(col("doc_a").as("nbr"), col("doc_b").as("doc_id"))
-        .union(p.select(col("doc_b").as("nbr"), col("doc_a").as("doc_id")))
-        .repartition(col("doc_id")))
+        .union(p.select(col("doc_b").as("nbr"), col("doc_a").as("doc_id"))))
     // only edge-touched vertices can ever change label — iterate over that
     // subset (a sliver of a mostly-singleton corpus) and attach the
     // untouched majority once at the end. Seeding with min(self, neighbors)
     // is the first propagation hop for free; on a SYMMETRIC table grouping
-    // by either endpoint yields the same set, so the seed groups on the
-    // laid-out key and is exchange-free.
+    // by either endpoint yields the same set.
     val labels0 = sym.groupBy(col("doc_id"))
       .agg(min(least(col("nbr"), col("doc_id"))).as("cluster_id"))
-    // one min-label hop = one exchange (r13): the co-partitioned
-    // edges⋈labels join ships each node's label to its neighbors as
-    // (nbr → doc_id) messages, each node also messages ITSELF its own
-    // label and the round's starting label `prev` (exactly one
-    // self-message per node, so max() recovers it), and ONE
+    // one min-label hop (r13): the edges⋈labels join ships each node's
+    // label to its neighbors as (nbr → doc_id) messages, each node also
+    // messages ITSELF its own label and the round's starting label `prev`
+    // (exactly one self-message per node, so max() recovers it), and ONE
     // groupBy(doc_id) folds min(neighbor labels, own) — the old hop's
     // separate nbrMin aggregate + combine join, fused.
     // Domain unchanged: the label domain IS sym's vertex set and every
@@ -204,14 +199,18 @@ object Dedup {
     }
     // two hop+jump pairs per round: same total join work, half the
     // convergence counts. Every step reads its input twice (hop: edge
-    // join + self-messages; jump: label side + pointer side), so each
-    // intermediate is an eager leaf; `prev` carries the round's starting
-    // label for the changed count. A component whose labels still move
-    // after maxIters rounds is refused — partially-propagated labels
-    // would silently split it into several "canonical" docs.
+    // join + self-messages; jump: label side + pointer side). A hop's
+    // output is an eager leaf: its two readers in `jump` shuffle it on
+    // different keys, so a lazy h1/h2 re-derives the hop per side. The
+    // first jump stays lazy: its two readers in the next hop recompute
+    // only its join, over shuffles of h1 that Spark reuses, while an
+    // eager leaf costs one more job per round. `prev` carries the round's
+    // starting label for the changed count. A component whose labels
+    // still move after maxIters rounds is refused — partially-propagated
+    // labels would silently split it into several "canonical" docs.
     val labels = Rounds.untilStable("cc", labels0, maxIters) { (l, round) =>
       val h1 = round.eager(hop(l.withColumn("prev", col("cluster_id"))))
-      val j1 = round.eager(jump(h1))
+      val j1 = jump(h1)
       val h2 = round.eager(hop(j1))
       jump(h2)
     }(next => next.filter(col("cluster_id") < col("prev")).count())

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 
 /** Scale cutover policy for the iterative-graph family ([[KCore.peel]],
   * `Analytics.qPagerank`; [[Lpa.propagate]] is always-shuffled).
@@ -13,9 +14,11 @@ import org.apache.spark.sql.SparkSession
   * Spark hard-caps a single build at 8 GB — at sf1 this exact pattern
   * OOM'd `q_lpa_communities` (r7, fixed by forcing merge joins). A
   * documented "switch past ~10⁷ nodes" cutover proved to be no
-  * protection in practice, so the switch is AUTOMATIC: callers measure
-  * the node count (one cheap count over an already-checkpointed table)
-  * and flip to the shuffled plan past the threshold.
+  * protection in practice, so the switch is AUTOMATIC: the node count is
+  * bounded by measured rows ([[nodeBound]]: an eager edge leaf counts its
+  * rows as it materializes, and a graph has no more nodes than edge
+  * rows), and only a bound past the threshold pays for the exact count
+  * before the plan flips to the shuffled one.
   *
   * Default 10⁷ nodes ≈ 160 MB of (long, long) broadcast rows per round
   * — comfortably under the 8 GB cap with headroom for round-to-round
@@ -54,4 +57,15 @@ object GraphScale {
     * per-round node-keyed table by broadcast. */
   def useBroadcast(spark: SparkSession, nNodes: Long): Boolean =
     nNodes <= broadcastMaxNodes(spark)
+
+  /** A node count of the edge table `edges` (a [[Rounds.eager]] leaf whose
+    * nodes are the values of `nodeCol`) that is exact where it decides
+    * [[useBroadcast]]: the leaf's measured row count, an upper bound that
+    * costs no job, while it is at or below the cutover; past it, the
+    * exact distinct count. */
+  def nodeBound(edges: DataFrame, nodeCol: String): Long = {
+    val rows = Rounds.measuredRows(edges)
+    if (useBroadcast(edges.sparkSession, rows)) rows
+    else edges.select(col(nodeCol)).distinct().count()
+  }
 }

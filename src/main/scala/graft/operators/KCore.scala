@@ -10,37 +10,40 @@ import org.apache.spark.sql.functions._
   * subgraph where every node keeps ≥ k neighbors (the standard cohesion
   * screen before community/centrality work).
   *
-  * Distributed shape: the SYMMETRIZED edge table is peeled a FIXED
-  * number of [[Rounds.fixed]] rounds — each round is one
+  * Distributed shape: the SYMMETRIZED edge table is peeled for at most a
+  * fixed number of [[Rounds.nested]] rounds — each round is one
   * map-side-combined degree `groupBy` plus two left-semi equi-joins
-  * against the (tiny, auto-broadcast) survivor set. A fixed round count
+  * against the (tiny, auto-broadcast) survivor set. A fixed round budget
   * (rather than loop-until-converged) keeps the computation expressible
   * as unrolled SQL for the DuckDB oracle; convergence is not assumed but
   * CERTIFIED by the caller checking the final minimum degree ≥ k (the
-  * `stable` column in `q_kcore`).
+  * `stable` column in `q_kcore`). Survivor sets are nested, so a round
+  * that keeps every edge of its predecessor is the fixpoint: the peel
+  * stops there (on the perfbench co-order graph after round 4 of 8), and
+  * returns exactly the state the full budget would.
   *
   * At 100 TB: each round is O(|E|) shuffle work on the shrinking edge
   * table, rounds = peel-cascade depth (measured 6 at both sf0.01 and
   * sf0.1 on the co-order graph; bounded by graph degeneracy in the
   * worst case). The per-round survivor attach switches AUTOMATICALLY on
-  * a measured node count: below [[GraphScale]]'s cutover the survivor
-  * set rides as a broadcast semi-join (map-side filter, no extra
-  * shuffle); past it, broadcast builds would accumulate in the driver —
-  * the exact failure that OOM'd `q_lpa_communities` at sf1 before
+  * the node count: below [[GraphScale]]'s cutover the survivor set rides
+  * as a broadcast semi-join (map-side filter, no extra shuffle); past
+  * it, broadcast builds would accumulate in the driver — the exact
+  * failure that OOM'd `q_lpa_communities` at sf1 before
   * [[Lpa.propagate]]'s forced-merge fix — so the peel flips to the LPA
-  * recipe: edges repartitioned+sorted ONCE, per round only the |V|-row
-  * alive set shuffles through forced merge joins. */
+  * recipe: per round only the |V|-row alive set is peeled, through
+  * forced merge joins. */
 object KCore {
 
   /** Peel `sym` (a SYMMETRIZED directed edge table with long columns
-    * `u`, `v`; both (a,b) and (b,a) present, no self-loops) for exactly
+    * `u`, `v`; both (a,b) and (b,a) present, no self-loops) for at most
     * `rounds` rounds at threshold `k`. Returns the surviving symmetric
     * edge table. Peeling preserves symmetry: an edge survives iff BOTH
     * endpoints have degree ≥ k, a symmetric criterion, so the result is
     * again a valid input (idempotent once converged). The broadcast vs
-    * shuffled survivor-attach plan is chosen from the measured node
-    * count (see [[GraphScale.useBroadcast]]); both plans compute the
-    * identical trajectory (spec-asserted on every KCoreSpec graph).
+    * shuffled survivor-attach plan is chosen from the node count (see
+    * [[GraphScale.nodeBound]]); both plans compute the identical
+    * trajectory (spec-asserted on every KCoreSpec graph).
     *
     * `modeOut` receives the chosen plan (`"broadcast"` / `"shuffled"`)
     * — observability for specs and GraphBench. A callback rather than a
@@ -51,23 +54,18 @@ object KCore {
     checkArgs(k, rounds)
     // ONE edge materialization serves both plans (the r8 soak lesson: a
     // plain checkpoint here plus a repartitioned one inside the shuffled
-    // peel held TWO copies of the edge table and starved a capped heap):
-    // the broadcast peel is layout-agnostic, the shuffled peel needs
-    // exactly this (v-partitioned, sorted) layout.
-    val e = sym.repartition(col("v")).sortWithinPartitions(col("v"))
-      .localCheckpoint()
-    peelLaid(e, e.select(col("u")).distinct().count(), k, rounds, modeOut)
+    // peel held TWO copies of the edge table and starved a capped heap)
+    peelStaged(Rounds.eager(sym), k, rounds, modeOut)
   }
 
-  /** [[peel]] over an ALREADY laid-out edge table — `e` must be the
-    * symmetric edge set, v-partitioned, v-sorted and checkpointed, with
-    * `nNodes` its measured node count (r13: callers that stage the
-    * layout once per session — the co-order graph serves four iterative
-    * rows — skip re-shuffling the edges per consuming query). */
-  def peelLaid(e: DataFrame, nNodes: Long, k: Int, rounds: Int,
-               modeOut: String => Unit = _ => ()): DataFrame = {
+  /** [[peel]] over an edge table already staged as a [[Rounds.eager]]
+    * leaf, whose measured row count bounds its node count (callers that
+    * stage the table once per session — the co-order graph serves four
+    * iterative rows — skip re-materializing it per consuming query). */
+  def peelStaged(e: DataFrame, k: Int, rounds: Int,
+                 modeOut: String => Unit = _ => ()): DataFrame = {
     checkArgs(k, rounds)
-    if (GraphScale.useBroadcast(e.sparkSession, nNodes)) {
+    if (GraphScale.useBroadcast(e.sparkSession, GraphScale.nodeBound(e, "u"))) {
       modeOut("broadcast"); peelBroadcast(e, k, rounds)
     } else {
       modeOut("shuffled"); peelShuffled(e, k, rounds)
@@ -80,10 +78,9 @@ object KCore {
   }
 
   /** Broadcast plan: per round, the shrinking edge table is filtered by
-    * two broadcast left-semi joins against the (small) survivor set.
-    * Each round adds only map-side filters to the lineage. */
+    * two broadcast left-semi joins against the (small) survivor set. */
   private def peelBroadcast(sym: DataFrame, k: Int, rounds: Int): DataFrame =
-    Rounds.fixed("kcore", sym, rounds) { (e, _) =>
+    Rounds.nested("kcore", sym, rounds) { e =>
       // out-degree == degree on a symmetric table; survivors broadcast
       // (both semi-joins share one broadcast exchange)
       val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
@@ -93,21 +90,21 @@ object KCore {
         .join(keep, e("v") === keep("node"), "left_semi")
     }
 
-  /** Shuffled plan (the [[Lpa.propagate]] recipe): the FULL edge table
-    * is partitioned+sorted on `v` once and never moves again; state is
-    * the shrinking |V|-row ALIVE set. Round r's degree of u = count of
-    * alive neighbors v (one forced merge join + map-side-combined
-    * groupBy), restricted to u itself alive, thresholded at k — the
-    * same alive_r = {u ∈ alive_{r−1} : #(alive_{r−1} ∩ N(u)) ≥ k}
+  /** Shuffled plan (the [[Lpa.propagate]] recipe): the full edge table
+    * never shrinks; state is the shrinking |V|-row ALIVE set. Round r's
+    * degree of u = count of alive neighbors v (one forced merge join +
+    * map-side-combined groupBy), restricted to u itself alive,
+    * thresholded at k — the same
+    * alive_r = {u ∈ alive_{r−1} : #(alive_{r−1} ∩ N(u)) ≥ k}
     * trajectory the broadcast plan walks, since its round-r edge table
     * is exactly the alive_{r−1}-induced subgraph. The surviving edge
     * table is recovered at the end by one double semi-join against the
     * final alive set (legal because alive sets are decreasing, so
-    * cumulative per-round filtering ≡ filtering by the final set). */
+    * cumulative per-round filtering ≡ filtering by the final set). The
+    * edge table is a checkpoint leaf, which keeps no layout, so every
+    * merge join re-shuffles it. */
   private def peelShuffled(e: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // e arrives (v-partitioned, sorted) and checkpointed from peel() —
-    // the layout survives the checkpoint, so edges never re-shuffle
-    val alive = Rounds.fixed("kcore", e.select(col("u")).distinct(), rounds) { (alive, _) =>
+    val alive = Rounds.nested("kcore", e.select(col("u")).distinct(), rounds) { alive =>
       val av = alive.withColumnRenamed("u", "n").hint("merge")
       val deg = e.join(av, e("v") === av("n"))
         .groupBy(e("u")).agg(count(lit(1)).as("d"))

@@ -22,10 +22,10 @@ import org.apache.spark.sql.functions._
   * 2-cycle on bipartite cuts rather than converge, which a fixed-round
   * snapshot sidesteps by construction.
   *
-  * Distributed shape: the edge table is repartitioned + sorted on the
-  * join key ONCE (layout preserved through its localCheckpoint), then
-  * each round is a sort-MERGE equi-join against the label table — the
-  * labels shuffle (|V| rows), the edges don't move — followed by one
+  * Distributed shape: the edge table is checkpointed ONCE, then each
+  * round is a sort-MERGE equi-join against the label table (a checkpoint
+  * keeps no partitioning or ordering — `LayoutSpec` — so both sides
+  * shuffle and sort per round) followed by one
   * map-side-combined `groupBy(u, lbl)` count with the per-node argmax
   * folded in via `max(struct(cnt, -lbl))`. The rounds run under
   * [[Rounds.fixed]]. The merge join is FORCED: the sf1 gate
@@ -41,14 +41,14 @@ object Lpa {
     * for exactly `rounds` synchronous rounds. Returns `(u, lbl)` — one
     * row per node that has at least one neighbor. */
   def propagate(sym: DataFrame, rounds: Int): DataFrame =
-    // partition + sort on the join key once; the checkpoint preserves the
-    // layout, so every round's merge join moves only the label table
+    // partition + sort on the join key, then checkpoint: the checkpoint
+    // drops that layout (LayoutSpec), so every round's merge join still
+    // shuffles the edges; restoring it needs a laid-table primitive
     propagateLaid(sym.repartition(col("v")).sortWithinPartitions(col("v"))
       .localCheckpoint(), rounds)
 
-  /** [[propagate]] over an ALREADY laid-out edge table — `e` must be the
-    * symmetric edge set, v-partitioned, v-sorted and checkpointed (r13:
-    * the co-order graph's layout is staged once per session and shared
+  /** [[propagate]] over an ALREADY checkpointed symmetric edge table
+    * (r13: the co-order graph is staged once per session and shared
     * across the iterative rows). */
   def propagateLaid(e: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"propagation rounds must be >= 1, got $rounds")

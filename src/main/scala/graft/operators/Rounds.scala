@@ -10,22 +10,30 @@ import scala.collection.mutable.ArrayBuffer
 /** The per-round policy of every iterative loop in graft (CC, k-core,
   * LPA, PageRank, Lloyd, BPE, the HNSW walks), in one place.
   *
-  * Each round's state re-enters the next round's plan as a fresh leaf:
-  * a local checkpoint whose size estimate is carried from the round-0
-  * leaf, never derived from the previous round's plan. A plain
+  * Each round's state re-enters the next round's plan as a fresh leaf: a
+  * local checkpoint whose size estimate is either measured (an eager
+  * leaf, counted by the job that materializes it) or carried from the
+  * round-0 leaf, never derived from the previous round's plan. A plain
   * `localCheckpoint` keeps the estimate of the plan it cut, so a loop
   * that self-joins its state squares the estimate every round until
   * Catalyst's BigInteger stats overflow (`e_knn_mutual` at sf0.1) — and
   * planning slows down long before that. Carrying the round-0 estimate
   * (rather than `spark.sql.defaultSizeInBytes`) keeps the join
-  * strategies the state's real size earns, e.g. `q_kcore`'s broadcast
-  * survivor semi-joins.
+  * strategies the state's real size earns. A checkpoint leaf keeps no partitioning or ordering
+  * (`LayoutSpec`): a round that joins on a key shuffles its inputs.
   *
-  * The loop's shape picks the entry point:
+  * At benchmark scale a round costs its Spark jobs (each ~30 ms of fixed
+  * overhead on a 4-core host, whatever its rows), so each entry point
+  * runs as few as its loop's shape allows. The loop's shape picks it:
   *   - [[fixed]]: a fixed round count (the oracle unrolls it as SQL).
   *     Each state is a LAZY leaf, so a round runs no more jobs than its
   *     own shuffles need; the blocks materialize on first use and stay
   *     for every later reader.
+  *   - [[nested]]: a fixed round count over states that only ever lose
+  *     rows (k-core's peel). Each state is an eager leaf, counted as it
+  *     materializes; a round that keeps every row of its predecessor is
+  *     the fixpoint, so the loop stops there with the round-`n` result
+  *     and skips the rounds that would repeat it.
   *   - [[untilStable]]: rounds until a `changed` count is zero. That
   *     count is the one action that materializes a round; once it ran,
   *     the previous round's state and this round's [[Round.eager]]
@@ -75,6 +83,32 @@ object Rounds {
     (1 to n).foldLeft(state0) { (state, r) =>
       described(init, s"$loop round $r")(graftshim.lazyLeaf(step(state, r), size)._1)
     }
+  }
+
+  /** At most `n` rounds of `step` from `init`, for a `step` whose output
+    * rows are always a subset of its input's and that depends on that
+    * input alone (a peel). Returns the round-`n` state, as [[fixed]]
+    * would, but each round is an [[eager]] leaf: its materializing job
+    * also counts it, and a round that keeps as many rows as the round
+    * before it returns the same set, so every later round would repeat
+    * it and the loop stops. A superseded round is freed once its
+    * successor has materialized. `init` is the caller's and is not
+    * counted, so an `init` that already is the fixpoint costs two
+    * rounds. */
+  def nested(loop: String, init: DataFrame, n: Int)(step: DataFrame => DataFrame): DataFrame = {
+    var state = init
+    var last: Option[(Long, RDD[_])] = None // rows and blocks of the latest round
+    var (r, stable) = (0, false)
+    while (!stable && r < n) {
+      r += 1
+      val (next, rdd) = described(init, s"$loop round $r")(graftshim.eagerLeaf(step(state)))
+      val rows = measuredRows(next)
+      last.foreach(_._2.unpersist(blocking = false))
+      stable = last.exists(_._1 == rows)
+      last = Some((rows, rdd))
+      state = next
+    }
+    state
   }
 
   /** Rounds of `step` from `init` until `changed(state)` is zero, at most

@@ -17,6 +17,16 @@ package object graftshim {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
+  /** The session's SQL conf and a Hadoop conf carrying its settings. */
+  def sqlConf(s: SparkSession): internal.SQLConf =
+    s.asInstanceOf[classic.SparkSession].sessionState.conf
+  def hadoopConf(s: SparkSession): org.apache.hadoop.conf.Configuration =
+    s.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
+  /** `schema` with every field, element and value nullable, as Spark's
+    * schema inference reports a file source's schema. */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
+
   /** Stable per-session key (private[sql] in the classic session). */
   def sessionKey(s: SparkSession): String = s match {
     case c: classic.SparkSession => c.sessionUUID
@@ -37,8 +47,9 @@ package object graftshim {
     * state compounds that estimate round over round (until Catalyst's
     * BigInteger stats overflow); here the leaf is rebuilt through the
     * Dataset-from-LogicalPlan factory with the given size instead. The
-    * layout (partitioning, ordering) and constraints of the checkpoint
-    * are kept. Returns the leaf and the RDD holding its blocks. */
+    * constraints of the checkpoint are kept; its layout is not: the leaf
+    * reports no partitioning or ordering (`LayoutSpec`), so a join on a
+    * key shuffles it whatever layout the cut plan had. Returns the leaf and the RDD holding its blocks. */
   def lazyLeaf(df: Dataset[_], sizeInBytes: BigInt): (DataFrame, RDD[_]) =
     leaf(df, StorageLevel.MEMORY_AND_DISK, _ => Statistics(sizeInBytes))
 

@@ -3,7 +3,7 @@ package graft
 /** The composed curation chain holds its invariants: each gate only ever
   * shrinks the corpus, packing covers the surviving tokens, and the single
   * k-means fit yields all three cluster views; no stage runs a job just to
-  * count itself. */
+  * count itself, and the whole run stays within its job budget. */
 class PipelineSpec extends SparkSpecBase {
   test("pipeline stages shrink monotonically and the shared fit feeds all views") {
     val (run, jobs) = jobsDuring(Pipeline.run(spark, Sf))
@@ -20,7 +20,11 @@ class PipelineSpec extends SparkSpecBase {
     assert(stages("medoid_argmin_violations") == 0L)
     assert(stages("fit_wcss_nonzero") == 1L)
     // each of the 4 materialized stages is counted by the one job that
-    // materializes it; a checkpoint and then a count() ran 79 jobs here
-    assert(jobs.size <= 71, s"${jobs.size} jobs")
+    // materializes it (a checkpoint and then a count() ran 79 jobs here);
+    // the three cluster views are one aggregate read once, the tables'
+    // schemas come from their footers and CC's first jump is lazy (68
+    // jobs before those three)
+    info(s"${jobs.size} jobs")
+    assertJobBudget(jobs, 55)
   }
 }

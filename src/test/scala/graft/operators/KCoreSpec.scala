@@ -8,7 +8,8 @@ import org.apache.spark.sql.DataFrame
   * 2-core is exactly the triangle, and reaching it REQUIRES a cascade
   * (6 falls first, which drops 5 to degree 1, which drops 4) — one
   * round is provably not enough, so the test pins the iterative part,
-  * not just the degree filter. */
+  * not just the degree filter. The peel stops at its fixpoint with the
+  * output of the full round budget, in fewer jobs. */
 class KCoreSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -25,6 +26,41 @@ class KCoreSpec extends SparkSpecBase {
     assert(KCore.peel(g, k = 2, rounds = 3).count() === 6) // 3 undirected edges
     // one round only strips the leaf — the cascade is real
     assert(nodes(KCore.peel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
+  }
+
+  /** The peel before it stopped at its fixpoint: every one of `rounds`
+    * rounds runs, each a lazy [[Rounds.fixed]] leaf. */
+  private def fixedPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
+    import org.apache.spark.sql.functions._
+    Rounds.fixed("fixed kcore", Rounds.eager(sym), rounds) { (e, _) =>
+      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= k).select(col("u").as("node"))
+      e.join(keep, e("u") === keep("node"), "left_semi")
+        .join(keep, e("v") === keep("node"), "left_semi")
+    }
+  }
+
+  private def rows(e: DataFrame): Seq[(Long, Long)] =
+    e.as[(Long, Long)].collect().toSeq.sorted
+
+  test("a peel that converges at round 3 of 8 stops there, with the 8-round output") {
+    val (fixedOut, fixedJobs) = jobsDuring(rows(fixedPeel(g, k = 2, rounds = 8)))
+    val (out, jobs) = jobsDuring(rows(KCore.peel(g, k = 2, rounds = 8)))
+    assert(out.get == fixedOut.get)
+    assert(out.get.map(_._1).toSet == Set(1L, 2L, 3L))
+    // round 4 keeps every edge of round 3: the fixpoint, so no round 5
+    assert(jobs.contains("kcore round 4") && !jobs.contains("kcore round 5"), jobs)
+    info(s"${jobs.size} jobs against ${fixedJobs.size} for 8 fixed rounds")
+    assertJobBudget(jobs, fixedJobs.size - 1)
+  }
+
+  test("a peel that has not converged returns the same round-8 state as 8 fixed rounds") {
+    // a 40-node path at k = 2 loses its two end nodes per round: 20 rounds
+    val path = sym((1L until 40L).map(i => (i, i + 1)): _*)
+    val (out, jobs) = jobsDuring(rows(KCore.peel(path, k = 2, rounds = 8)))
+    assert(out.get == rows(fixedPeel(path, k = 2, rounds = 8)))
+    assert(out.get.map(_._1).toSet == (9L to 32L).toSet)
+    assert(jobs.contains("kcore round 8"), jobs)
   }
 
   test("peel refuses k = 0 before any Spark job starts") {

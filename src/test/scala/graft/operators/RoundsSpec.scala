@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** [[Rounds]]: fresh-stats round leaves, refusal of non-convergence,
-  * eviction of superseded rounds, and the job budget of a fixed loop. */
+  * eviction of superseded rounds, the fixpoint exit of a nested loop,
+  * per-round planning time that stays flat over long loops, and the job
+  * budget of a fixed loop. */
 class RoundsSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -85,7 +87,7 @@ class RoundsSpec extends SparkSpecBase {
   test("a fixed loop runs no more jobs per round than Lpa.propagateLaid did before Rounds") {
     // Lpa.propagateLaid before it ran on Rounds, on this graph: 6 jobs
     // for 1 round, 18 for 4, i.e. 4 per round
-    val ParentJobsPerRound = 4.0
+    val ParentJobsPerRound = 4
     val rnd = new scala.util.Random(7)
     val und = (for { a <- 1L to 40L; b <- (a + 1) to 40L if rnd.nextDouble() < 0.15 }
       yield (a, b))
@@ -99,10 +101,80 @@ class RoundsSpec extends SparkSpecBase {
       js
     }
     val (j1, j4) = try (jobs(1), jobs(4)) finally sc.setJobDescription(null)
-    val perRound = (j4.size - j1.size) / 3.0
-    assert(perRound <= ParentJobsPerRound, s"$perRound jobs per round: $j4")
+    // the 3 extra rounds add at most ParentJobsPerRound jobs each
+    assertJobBudget(j4, j1.size + 3 * ParentJobsPerRound)
     // rounds are described, and the caller's description comes back
     assert((1 to 4).forall(r => j4.contains(s"lpa round $r")), j4)
     assert(j4.last == "caller", j4)
+  }
+
+  test("a nested loop stops at the first round that keeps every row") {
+    val sc = spark.sparkContext
+    // keeps x >= 5 of 0..9: round 2 keeps round 1's five rows
+    val (out, jobs) = jobsDuring(
+      Rounds.nested("toy", spark.range(10).toDF("x"), 8)(_.filter(col("x") >= 5)).count())
+    assert(out.get == 5L)
+    assert(jobs.contains("toy round 2") && !jobs.exists(_.startsWith("toy round 3")), jobs)
+    assertJobBudget(jobs, 4) // two rounds and the count's two
+    // drops its maximum per round: never stable, so all n rounds run
+    sc.getPersistentRDDs.foreach { case (_, r) => r.unpersist(true) }
+    val dropMax = Rounds.nested("toy", spark.range(10).toDF("x"), 4) { s =>
+      s.join(s.agg(max(col("x")).as("m")), col("x") < col("m")).select(col("x"))
+    }
+    assert(dropMax.as[Long].collect().sorted.toSeq == (0L to 5L))
+    // a superseded round is freed once its successor has materialized
+    assert(sc.getPersistentRDDs.size == 1, sc.getPersistentRDDs.values.mkString(", "))
+  }
+
+  /** Per-round planning time (analysis through the physical plan) and
+    * optimized-plan size of a loop's round plans, in round order. */
+  private final class PlanLog {
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Double, Int)]
+    def apply(df: DataFrame): DataFrame = {
+      val t0 = System.nanoTime()
+      df.queryExecution.executedPlan
+      rounds += (((System.nanoTime() - t0) / 1e6, df.queryExecution.optimizedPlan.collect { case p => p }.size))
+      df
+    }
+    /** Round plans do not grow, and late rounds plan about as fast as
+      * early ones (loose: a wall-clock bound on a shared host). */
+    def assertBounded(what: String): Unit = {
+      assert(rounds.size >= 16, s"$what: ${rounds.size} rounds")
+      val sizes = rounds.drop(1).map(_._2)
+      assert(sizes.max == sizes.min, s"$what: round plans grew: $sizes")
+      def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
+      val early = median(rounds.slice(1, 6).map(_._1).toSeq)
+      val late = median(rounds.takeRight(5).map(_._1).toSeq)
+      info(f"$what: ${rounds.size} rounds, planning $early%.1f ms early, $late%.1f ms late")
+      assert(late <= 3 * early + 50, f"$what: planning $early%.1f ms early, $late%.1f ms late")
+    }
+  }
+
+  test("per-round planning time stays bounded on a long path graph") {
+    val n = 24L
+    val sym = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("nbr", "doc_id")
+    // untilStable: plain min-label hops, one path node per round
+    val cc = new PlanLog
+    val labels = Rounds.untilStable("path cc", (0L until n).map(i => (i, i))
+        .toDF("doc_id", "cluster_id"), maxIters = 2 * n.toInt) { (s, _) =>
+      val l = s.select(col("doc_id"), col("cluster_id"))
+      cc(sym.join(l, "doc_id").select(col("nbr").as("doc_id"), col("cluster_id"))
+        .unionByName(l).groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
+        .join(l.select(col("doc_id"), col("cluster_id").as("prev")), "doc_id"))
+    }(s => s.filter(col("cluster_id") < col("prev")).count())
+    assert(labels.filter(col("cluster_id") =!= 0L).count() == 0L)
+    cc.assertBounded("untilStable")
+    // nested: a 2-core peel of a 40-node path loses its two ends per round
+    // and reaches the empty fixpoint after 20 rounds
+    val path = (1L until 40L).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("u", "v")
+    val peel = new PlanLog
+    val core = Rounds.nested("path kcore", Rounds.eager(path), 30) { e =>
+      val keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
+        .filter(col("d") >= 2).select(col("u").as("node"))
+      peel(e.join(keep, e("u") === keep("node"), "left_semi")
+        .join(keep, e("v") === keep("node"), "left_semi"))
+    }
+    assert(core.count() == 0L && peel.rounds.size == 21)
+    peel.assertBounded("nested")
   }
 }

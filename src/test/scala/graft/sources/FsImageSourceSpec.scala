@@ -734,7 +734,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     info(s"${jobs.size} jobs")
     // 12 jobs; the loader before the pointer-jumping walk ran 25 here
     // (per-round isEmpty + eager checkpoint, one-task parse, two joins)
-    assert(jobs.size <= 16, s"${jobs.size} jobs: ${jobs.mkString(", ")}")
+    assertJobBudget(jobs, 16)
     new java.io.File(img).delete()
   }
 }
