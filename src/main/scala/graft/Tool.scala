@@ -36,10 +36,21 @@ import graft.functions.IECBinaryImpl
   *   -a <age>          age filter like 60d / 12h / 1y (userusage)
   *   -u <user>         user (userusage)
   *   --out <dir>       output dir for csv/json
-  *   --distributed     use the ranged-parallel fsimage loader
+  *   --distributed     use the ranged-parallel fsimage loader; summary,
+  *                     growth, ext and dupnames without -p skip its path
+  *                     resolution (no column they read needs a path)
   * }}}
   */
 object Tool {
+
+  /** The commands whose report reads neither `path` nor `depth`
+    * (`summaryByUser`: owner and type/size sums, `-fun` filters on owner;
+    * `growthProfile`: mtime; `extensionReport` and `dupNames`: the inode
+    * name). With `--distributed` and no `-p` subtree they run on the
+    * loader's parsed rows, paths pending: resolving every directory path
+    * costs the load a dozen Spark jobs that such a report never reads.
+    * Every other command, and every `-p` run, resolves paths first. */
+  private val PathFree = Set("summary", "growth", "ext", "dupnames")
 
   private val AgePattern = """(\d+)([yYdDhH])""".r
 
@@ -76,13 +87,14 @@ object Tool {
         FsImageSource.delegationKeys(spark, image))
       case _           => ()
     }
-    val all =
-      if (flags.contains("--distributed")) FsImageSource.inodesDistributed(spark, image)
-      else FsImageSource.inodes(spark, image)
     import org.apache.spark.sql.functions.{col, lit}
     val dirs =
       if (paths.nonEmpty) paths.flatMap(_.split(",")).distinct
       else opts.getOrElse("-p", "/").split(",").toSeq
+    val all =
+      if (!flags.contains("--distributed")) FsImageSource.inodes(spark, image)
+      else if (PathFree(cmd) && dirs == Seq("/")) FsImageSource.inodesPending(spark, image).rows
+      else FsImageSource.inodesDistributed(spark, image)
     // require a '/' boundary after the prefix: -p /data must match
     // /data and /data/x but NOT the sibling /database
     def subtree(df: DataFrame, pathCol: String): DataFrame =

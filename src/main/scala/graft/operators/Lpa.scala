@@ -41,11 +41,10 @@ object Lpa {
     * for exactly `rounds` synchronous rounds. Returns `(u, lbl)` — one
     * row per node that has at least one neighbor. */
   def propagate(sym: DataFrame, rounds: Int): DataFrame =
-    // partition + sort on the join key, then checkpoint: the checkpoint
-    // drops that layout (LayoutSpec), so every round's merge join still
-    // shuffles the edges; restoring it needs a laid-table primitive
-    propagateLaid(sym.repartition(col("v")).sortWithinPartitions(col("v"))
-      .localCheckpoint(), rounds)
+    // checkpointed as it comes: a checkpoint keeps no layout (LayoutSpec),
+    // so partitioning or sorting the edges first would only add a shuffle
+    // and a sort that every round's merge join redoes anyway
+    propagateLaid(sym.localCheckpoint(), rounds)
 
   /** [[propagate]] over an ALREADY checkpointed symmetric edge table
     * (r13: the co-order graph is staged once per session and shared

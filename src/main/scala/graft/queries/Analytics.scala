@@ -2043,14 +2043,10 @@ object Analytics extends QueryModule {
       val useBroadcast = graft.operators.GraphScale.useBroadcast(spark, nn)
       // exactly ONE edge-table materialization in either mode (the r8 soak
       // lesson: checkpointing a base copy AND a repartitioned copy held the
-      // 2× edge table and starved a capped heap). Shuffled mode lays it out
-      // (u-partitioned, sorted) before the checkpoint, but the checkpoint
-      // keeps no layout (LayoutSpec), so each of the 5 merge joins still
-      // shuffles and sorts it
-      val erBase = e.join(deg, "u")
-      val er = (if (useBroadcast) erBase
-        else erBase.repartition(col("u")).sortWithinPartitions(col("u")))
-        .localCheckpoint()
+      // 2× edge table and starved a capped heap). Checkpointed as it comes
+      // in either mode: a checkpoint keeps no layout (LayoutSpec), so each
+      // of the 5 shuffled-mode merge joins shuffles and sorts it anyway
+      val er = e.join(deg, "u").localCheckpoint()
       (er, deg, nn, useBroadcast)
     }
 

@@ -27,7 +27,13 @@ import graft.sources.fsimage.FsImageFormat._
   *    (start, end) offset pairs; each task reads its own byte range via the
   *    Hadoop FileSystem API ([[FsImageFormat.readRange]] — file:// and DFS
   *    paths alike) and parses it straight into encoded [[FsInode]] rows,
-  *    path and depth pending. Then:
+  *    path and depth pending. That parse is a stage of its own,
+  *    [[inodesPending]], which scans the INODE_DIR ranges only when its
+  *    edges are read: a report that reads neither `path` nor `depth`
+  *    (`graft.Tool`'s `summary`, `growth`, `ext` and `dupnames` without a
+  *    `-p` subtree) parses in its own first stage and starts none of the
+  *    jobs below. [[inodesDistributed]] is that stage plus path
+  *    resolution:
   *     1. a narrow (id, ftype, name, parent) table, joined from those rows
   *        and the INODE_DIR edges, materialized once with measured
   *        statistics ([[graft.operators.Rounds.eager]]), so the joins
@@ -378,13 +384,30 @@ object FsImageSource {
       .unionByName(Seq((RootInodeId, "/")).toDF("id", "path"))
   }
 
+  /** [[inodesDistributed]]'s parse stage: `rows` holds every inode as
+    * an encoded [[FsInode]], parsed straight from its range, with `path`
+    * "" and `depth` 0 still pending; `edges` holds the INODE_DIR
+    * (id, parent) pairs that resolve them. Both are lazy, and the
+    * INODE_DIR ranges are scanned on the driver only when `edges` is
+    * first read, so a caller that needs no path pays for none. */
+  private[graft] final class Parsed(val rows: DataFrame, edgeRows: => DataFrame) {
+    lazy val edges: DataFrame = edgeRows
+  }
+
   /** Scale-path loader — see the object scaladoc for the design. Driver
     * memory is O(string table + scan buffer + range list), never
     * O(section), O(#dirs) or O(#inodes). `parallelism` > 0 replaces the
     * core count in the chunk size. */
   def inodesDistributed(spark: SparkSession, imagePath: String,
                         parallelism: Int = 0,
-                        targetChunkBytes: Long = 32L << 20): DataFrame = {
+                        targetChunkBytes: Long = 32L << 20): DataFrame =
+    resolvePaths(spark, inodesPending(spark, imagePath, parallelism, targetChunkBytes))
+
+  /** The rows of [[inodesDistributed]] before path resolution: the same
+    * parse, with every column but `path` and `depth` final. */
+  private[graft] def inodesPending(spark: SparkSession, imagePath: String,
+                                   parallelism: Int = 0,
+                                   targetChunkBytes: Long = 32L << 20): Parsed = {
     import spark.implicits._
     val sc = spark.sparkContext
 
@@ -497,24 +520,30 @@ object FsImageSource {
     val bcPolicies = sc.broadcast(ecPolicies(summary, imagePath, hadoopConf))
     val bcStrings = sc.broadcast(strings)
 
-    // Every inode encoded once, straight from its range, path and depth
-    // pending. A lazy DISK_ONLY checkpoint: the narrow leaf's job parses
-    // and stores it, the final join re-reads it from local disk (sequential
-    // I/O, far cheaper than a re-parse, and never competing with execution
-    // memory at 10⁷–10⁸ inodes).
-    val wide = spark.createDataset(parsed("INODE") { (bytes, n) =>
+    new Parsed(
+      spark.createDataset(parsed("INODE") { (bytes, n) =>
         FsImageFormat.parseInodeRange(bytes, 0, n, bcPolicies.value)
           .map(toInode(_, "", bcStrings.value, bcPolicies.value))
-      }).localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
-    val edges = spark.createDataset(parsed("INODE_DIR") { (bytes, n) =>
+      }).toDF(),
+      spark.createDataset(parsed("INODE_DIR") { (bytes, n) =>
         FsImageFormat.parseDirRange(bytes, 0, n).flatMap(d => d.children.iterator.map(c => (c, d.parent)))
-      }).toDF("id", "parent")
+      }).toDF("id", "parent"))
+  }
+
+  /** [[inodesDistributed]]'s path stage over `parsed`: steps 1–3 of the
+    * object scaladoc. */
+  private def resolvePaths(spark: SparkSession, parsed: Parsed): DataFrame = {
+    // The parsed rows in a lazy DISK_ONLY checkpoint: the narrow leaf's
+    // job parses and stores them, the final join re-reads them from local
+    // disk (sequential I/O, far cheaper than a re-parse, and never
+    // competing with execution memory at 10⁷–10⁸ inodes).
+    val wide = parsed.rows.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
 
     // The narrow (id, ftype, name, parent) table, parent root-attached
     // when the image carries no edge for the inode (the driver loader's
     // semantics); measured, so the joins below plan from its real size.
     val narrow = Rounds.eager(wide.select("id", "ftype", "name")
-      .join(edges, Seq("id"), "left_outer")
+      .join(parsed.edges, Seq("id"), "left_outer")
       .withColumn("parent", coalesce(col("parent"), lit(RootInodeId))), StorageLevel.DISK_ONLY)
 
     // Directory paths, resolved distributively.

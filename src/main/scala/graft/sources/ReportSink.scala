@@ -1,6 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, graftshim}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
+import graft.operators.Rounds
 
 /** Report output formats (reference tool `-o txt|csv|json`,
   * tool/.../HdfsFSImageTool.java:55-59 + CsvExport/JsonExport tests),
@@ -58,25 +64,37 @@ object ReportSink {
     * The probe slightly overestimates bytes/row (footer + dictionary
     * amortize over a small file), which errs toward files under the
     * target — the safe side. `maxRecordsPerFile` is a second bound for
-    * writers that reuse `rowsPerFile` on differently-partitioned data. */
+    * writers that reuse `rowsPerFile` on differently-partitioned data.
+    *
+    * At benchmark scale a write costs its Spark jobs, so this one starts
+    * four: one materializes `df` as an eager leaf that counts its rows as
+    * it stores them ([[graft.operators.Rounds.measuredRows]]), one writes
+    * the probe, and the repartitioned write takes two. The probe's rows
+    * are counted from the footers of its files, read on the driver with
+    * their sizes, not by re-running the sample. */
   def parquetSized(df: DataFrame, path: String,
                    targetFileBytes: Long = 512L << 20,
                    sampleRows: Int = 10000): Unit = {
     val spark = df.sparkSession
-    val cached = df.localCheckpoint() // count + probe + write read one materialization
+    // count + probe + write read one materialization
+    val (cached, blocks) = graftshim.eagerLeaf(df)
     try {
-      val total = cached.count()
+      val total = Rounds.measuredRows(cached)
       if (total == 0L) { cached.write.mode("overwrite").parquet(path); return }
-      val probePath = new org.apache.hadoop.fs.Path(path + "._probe")
-      val fs = probePath.getFileSystem(spark.sessionState.newHadoopConf())
+      val conf = graftshim.hadoopConf(spark)
+      val probePath = new Path(path + "._probe")
+      val fs = probePath.getFileSystem(conf)
       val probe = if (total <= sampleRows) cached
         else cached.sample(withReplacement = false, sampleRows.toDouble / total, seed = 42)
       probe.coalesce(1).write.mode("overwrite").parquet(probePath.toString)
-      // seeded sample over a checkpointed plan → the same rows both times
-      val sampled = math.max(1L, probe.count())
-      val probeBytes =
-        try fs.listStatus(probePath).filter(_.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
-        finally fs.delete(probePath, true)
+      val (sampled, probeBytes) =
+        try {
+          val files = fs.listStatus(probePath).filter(_.getPath.getName.endsWith(".parquet"))
+          val rows = files.iterator.map(f => ParquetFooterReader.readFooter(
+              HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER)
+            .getBlocks.asScala.map(_.getRowCount).sum).sum
+          (math.max(1L, rows), files.map(_.getLen).sum)
+        } finally fs.delete(probePath, true)
       val bytesPerRow = math.max(1.0, probeBytes.toDouble / sampled)
       val rowsPerFile = math.max(1L, (targetFileBytes / bytesPerRow).toLong)
       val nFiles = ((total + rowsPerFile - 1) / rowsPerFile).max(1L).min(Int.MaxValue.toLong).toInt
@@ -84,7 +102,7 @@ object ReportSink {
         .write.mode("overwrite")
         .option("maxRecordsPerFile", rowsPerFile * 2)
         .parquet(path)
-    } finally cached.unpersist()
+    } finally blocks.unpersist(blocking = false)
   }
 
   /** Fixed-width text table of the first `maxRows` rows — the tool's

@@ -44,13 +44,16 @@ class ToolAndSqlSpec extends SparkSpecBase {
     assert(spark.read.parquet(dir).count() == 2)
   }
 
-  test("sized parquet splits output near the target file size") {
+  /** ~200 KB of payload: 2000 rows × ~100 B strings (incompressible-ish). */
+  private def sizedInput = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_sized").toFile.getPath + "/out"
-    // ~200 KB of payload: 2000 rows × ~100 B strings (incompressible-ish)
     val rnd = new scala.util.Random(3)
-    val df = (0 until 2000)
-      .map(i => (i.toLong, rnd.alphanumeric.take(100).mkString)).toDF("id", "payload")
+    (0 until 2000).map(i => (i.toLong, rnd.alphanumeric.take(100).mkString)).toDF("id", "payload")
+  }
+
+  test("sized parquet splits output near the target file size") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sized").toFile.getPath + "/out"
+    val df = sizedInput
     ReportSink.parquetSized(df, dir, targetFileBytes = 64L << 10, sampleRows = 500)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
     assert(files.length >= 2, s"expected a multi-file split, got ${files.length}")
@@ -65,6 +68,19 @@ class ToolAndSqlSpec extends SparkSpecBase {
     val dir3 = java.nio.file.Files.createTempDirectory("graft_sized0").toFile.getPath + "/out"
     ReportSink.parquetSized(df.limit(0), dir3)
     assert(spark.read.parquet(dir3).count() == 0)
+  }
+
+  test("sized parquet stays under a job bound") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_sized_jobs").toFile.getPath + "/out"
+    val (done, jobs) = jobsDuring(
+      ReportSink.parquetSized(sizedInput, dir, targetFileBytes = 64L << 10, sampleRows = 500))
+    done.get
+    assert(spark.read.parquet(dir).count() == 2000)
+    info(s"${jobs.size} jobs")
+    // 4 jobs: the counted leaf, the probe write, and the repartitioned
+    // write's shuffle and write; counting the leaf and the probe with
+    // Spark jobs took 8
+    assertJobBudget(jobs, 5)
   }
 
   test("every Tool command runs end-to-end against a generated image") {

@@ -721,20 +721,38 @@ class FsImageSourceSpec extends SparkSpecBase {
     new java.io.File(img).delete()
   }
 
-  test("distributed load of the depth-1 session image stays under a job bound") {
+  /** The benchmark's fsimage_session image: 31,301 inodes, every dir under root. */
+  private lazy val sessionImage: String = {
     import graft.sources.fsimage.ImageGen
     val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toFile
-    val img = new java.io.File(dir, "ns.img").getPath
-    // the benchmark's fsimage_session image: 31,301 inodes, every dir under root
-    ImageGen.write(img, ImageGen.GenSpec(nDirs = 300, nFiles = 30000, ecEvery = 100,
+    dir.deleteOnExit()
+    val img = new java.io.File(dir, "ns.img")
+    img.deleteOnExit()
+    ImageGen.write(img.getPath, ImageGen.GenSpec(nDirs = 300, nFiles = 30000, ecEvery = 100,
       aclEvery = 1000, xattrEvery = 1000, nSymlinks = 1000, withAtime = true,
       quotaEvery = 100, ucEvery = 1000))
-    val (n, jobs) = jobsDuring(FsImageSource.inodesDistributed(spark, img).count())
+    img.getPath
+  }
+
+  test("distributed load of the depth-1 session image stays under a job bound") {
+    val (n, jobs) = jobsDuring(FsImageSource.inodesDistributed(spark, sessionImage).count())
     assert(n.get == 31301L)
     info(s"${jobs.size} jobs")
     // 12 jobs; the loader before the pointer-jumping walk ran 25 here
     // (per-round isEmpty + eager checkpoint, one-task parse, two joins)
     assertJobBudget(jobs, 16)
-    new java.io.File(img).delete()
+  }
+
+  test("Tool summary --distributed on the session image resolves no path") {
+    val (rows, jobs) = jobsDuring(graft.Tool.run(spark, "summary", sessionImage,
+      Map.empty, Set("--distributed")).collect())
+    val byOwner = rows.get
+    assert(byOwner.length == 20)
+    assert(byOwner.map(_.getAs[Long]("n_files")).sum == 30000L)
+    assert(byOwner.map(_.getAs[Long]("n_dirs")).sum == 301L) // root included
+    info(s"${jobs.size} jobs")
+    // 4 jobs (parse + aggregate, the sort's sample, the result); with the
+    // load's path resolution in front it ran 14 here
+    assertJobBudget(jobs, 6)
   }
 }

@@ -47,6 +47,41 @@ class GoldenImageSpec extends SparkSpecBase {
     checkTotals(FsImageSource.inodesDistributed(spark, Img))
   }
 
+  test("every inode-reading Tool command agrees between the two loaders") {
+    // with --distributed, summary/growth/ext/dupnames without -p run on
+    // rows whose paths were never resolved; a command that reads a path
+    // would read "" there and disagree with the driver loader's rows
+    val cases: Seq[(String, Map[String, String], Seq[String])] = Seq(
+      ("summary", Map.empty, Nil),
+      ("summary", Map("-fun" -> "^user(1|2)$", "-s" -> "fc"), Nil),
+      ("summary", Map.empty, Seq(Deepest.split("/").take(4).mkString("/"))),
+      ("summary", Map("-p" -> "/dir_11,/dir_12"), Nil),
+      ("growth", Map.empty, Nil),
+      ("ext", Map.empty, Nil),
+      ("dupnames", Map("-l" -> "100"), Nil),
+      ("path", Map.empty, Nil),
+      ("smallfiles", Map.empty, Nil),
+      ("smallfilesusers", Map.empty, Nil),
+      ("userusage", Map("-u" -> "user1"), Nil),
+      ("inode", Map("-i" -> Deepest), Nil),
+      ("acl", Map("-i" -> "/dir_0,/dir_0/dir_1,/dir_12/f_60.dat"), Nil),
+      ("xattr", Map("-i" -> "/dir_12/f_60.dat"), Nil),
+      ("quotas", Map.empty, Nil),
+      ("growthdirs", Map("-d" -> "3"), Nil),
+      ("du", Map("-d" -> "3"), Nil),
+      ("compaction", Map.empty, Nil),
+      ("openfiles", Map.empty, Nil),
+      ("cache", Map.empty, Nil))
+    for ((cmd, opts, paths) <- cases) {
+      def rows(flags: Set[String]) =
+        graft.Tool.run(spark, cmd, Img, opts, flags, paths).collect().map(_.toString).sorted.toSeq
+      val driver = rows(Set.empty)
+      assert(rows(Set("--distributed")) == driver, s"$cmd $opts $paths")
+      info(s"$cmd ${opts.map { case (k, v) => s"$k $v" }.mkString(" ")} " +
+        s"${paths.map("-p " + _).mkString(" ")}: ${driver.size} rows")
+    }
+  }
+
   test("driver and distributed loaders agree row for row") {
     val a = FsImageSource.inodes(spark, Img)
     val b = FsImageSource.inodesDistributed(spark, Img, parallelism = 3)
