@@ -71,7 +71,7 @@ object Bench {
 
   def timeAll(spark: SparkSession, sfDir: String,
               queries: Seq[(String, (SparkSession, String) => DataFrame)],
-              runs: Int = 3, keep: scala.collection.Set[Int] = Set.empty)
+              runs: Int = 3, keep: Set[Int] = Set.empty)
       : (Seq[Timing], Seq[(String, String)]) = {
     val timings = Seq.newBuilder[Timing]
     val failures = Seq.newBuilder[(String, String)]
@@ -79,19 +79,10 @@ object Bench {
       "spark.graft.bench.rowStealBp", Some("SPARK_GRAFT_ROW_STEAL_BP"),
       DefaultRowStealBp)
     // Drop anything a query persisted for itself (localCheckpoint'd
-    // sketch tables, memoized chains) — otherwise 40+ queries accumulate
-    // GBs of dead blocks and GC pauses land on whichever query runs
-    // next. Also run between steal-gate attempts, so a re-timed query
-    // starts from the same cold block state as a fresh one.
-    def cleanup(): Unit = {
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => keep(id) }
-        .foreach { case (_, rdd) => rdd.unpersist(false) }
-      // Drain the garbage NOW, outside any timed region: with a 50+ GB
-      // heap a deferred major collection otherwise lands inside whichever
-      // later query trips it (the roaming 5 s outliers of r1/r3).
-      System.gc()
-    }
+    // sketch tables, memoized chains). Also run between steal-gate
+    // attempts, so a re-timed query starts from the same cold block state
+    // as a fresh one.
+    def cleanup(): Unit = Harness.dropBlocks(spark, keep)
     def timeOne(name: String, fn: (SparkSession, String) => DataFrame,
                 maxAttempts: Int,
                 prior: Option[Timing]): Either[(String, Boolean), Timing] = {
@@ -210,7 +201,7 @@ object Bench {
                  sfDir: String, gated: Seq[String] = Seq.empty): String = {
     // 3-decimal rounding keeps the line compact: full-precision doubles
     // over 65+ queries overflowed the driver's tail in round 2.
-    def ms3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+    import Harness.ms3
     def jmap(kvs: Seq[(String, String)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     val qs = jmap(timings.map(t => t.name -> ms3(t.median)))
@@ -245,35 +236,28 @@ object Bench {
     * its own. */
   def renderSummary(timings: Seq[Timing], failures: Seq[(String, String)],
                     sfDir: String, cpus: String, gated: Int = 0): String = {
-    def ms3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
-    val total = ms3(timings.map(_.median).sum)
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val sf = scala.util.Try(sfName.stripPrefix("sf").toDouble).getOrElse(0.0)
+    val total = Harness.ms3(timings.map(_.median).sum)
+    val sf = scale(sfDir)
     // the raw SPARK_GRAFT_CPUS value as a JSON string, so the line stays
     // valid JSON whatever it holds (empty, "4,8", ...)
     val cpusJson = "\"" + cpus.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
     s"""{"metric":"total","value":$total,"unit":"sec","n":${timings.size},"failed":${failures.size},"gated":$gated,"sf":$sf,"cpus":$cpusJson}"""
   }
 
+  /** The scale factor an `sf<N>` directory name gives (0.0 if none). */
+  private def scale(sfDir: String): Double =
+    scala.util.Try(sfName(sfDir).stripPrefix("sf").toDouble).getOrElse(0.0)
+
+  private def sfName(sfDir: String): String =
+    java.nio.file.Paths.get(sfDir).getFileName.toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
+    // caches created by the warm-up stay for the whole run
+    val keep = Harness.warm(spark, sfDir)
 
-    // Warmup: touch the fact tables, trigger codegen machinery, and
-    // materialize the shared namespace view (the production posture is a
-    // pre-materialized inode table; queries measure steady-state latency —
-    // see BENCH_NOTES.md). Caches created here stay for the whole run.
-    graft.core.Tables.lineitem(spark, sfDir).count()
-    graft.core.Tables.documents(spark, sfDir).count()
-    graft.core.Namespace.inodes(spark, sfDir).count()
-    val keep = spark.sparkContext.getPersistentRDDs.keySet
-
-    // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (local iteration).
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    val only = Harness.only()
     // p_pipeline_counts re-runs the whole composed Pipeline (exact dedup +
     // jaccard/CC + gate + packing + k-means): every stage is already a
     // benched query of its own, so timing the composition 3× would only
@@ -292,9 +276,7 @@ object Bench {
     // SPARK_GRAFT_ONLY to time one at any scale.
     val quadraticTruth = Set("d_semdedup_eval09", "d_semdedup_eval",
       "d_simhash_eval", "d_winnow_eval", "d_dedup_embedding")
-    val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-    val sfVal = scala.util.Try(sfName.stripPrefix("sf").toDouble).getOrElse(0.0)
-    val gated = if (sfVal >= 1.0) quadraticTruth else Set.empty[String]
+    val gated = if (scale(sfDir) >= 1.0) quadraticTruth else Set.empty[String]
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.map(_(name)).getOrElse(!skipByDefault(name) && !gated(name)) }
@@ -308,7 +290,7 @@ object Bench {
     // (the r7 linearity study) write a suffixed artifact so an sf1 run can
     // never clobber the sf0.1 record.
     if (only.isEmpty) {
-      val sfBase = java.nio.file.Paths.get(sfDir).getFileName.toString
+      val sfBase = sfName(sfDir)
       val record =
         if (sfBase == "sf0.1") "BENCH_SELF.json" else s"BENCH_SELF_$sfBase.json"
       // Artifact-of-record guard (VERDICT r8 item 3): a full run under
@@ -338,7 +320,7 @@ object Bench {
     // VERDICT r12 task 1: the final compact line is what the driver's
     // bounded stdout tail can actually parse; the full line above (and
     // BENCH_SELF.json) remain the per-query artifact of record.
-    println(renderSummary(timings, failures, sfDir, cpus,
+    println(renderSummary(timings, failures, sfDir, graft.core.GraftSession.cpus,
       gated = if (only.isEmpty) gated.size else 0))
     spark.stop()
   }

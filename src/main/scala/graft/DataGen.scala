@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   *    shingle level, keeping the near-dup pair structure per-replica
   *    instead of exploding C(mult,2) cross-replica families;
   *  - embeddings perturb per (vec_id, replica, dim) — distinct points,
-  *    same geometry (the SoakUtil posture);
+  *    same geometry;
   *  - event timestamps are NOT shifted: the time range stays fixed and
   *    windows get mult× denser, which is how a real stream grows.
   *
@@ -34,9 +34,7 @@ object DataGen {
     val base = args(0)
     val out = args(1)
     val mult = args.drop(2).headOption.map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     import spark.implicits._
 
     val reps = spark.range(mult).toDF("r")

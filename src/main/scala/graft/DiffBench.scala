@@ -29,23 +29,23 @@ import graft.sources.fsimage.ImageGen
   * phases is O(string table + scan buffer) + the 3-row change summary.
   *
   * `runMain graft.DiffBench [nFiles] [nDirs]` (defaults 2M / 20k;
-  * env: SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM, SPARK_GRAFT_SHUFFLE).
+  * env: SPARK_DRIVER_MEM, SPARK_GRAFT_SHUFFLE).
   * One JSON line on stdout.
   */
 object DiffBench {
   def main(args: Array[String]): Unit = {
     val nFiles = args.headOption.map(_.toInt).getOrElse(2000000)
     val nDirs = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // partitions sized for the capped heap, not the default 32: at 100M
     // inodes a 32-partition sort-merge join sorts ~3M paths per task —
     // 8 concurrent ~300MB slices in a 4g heap OOM before spill can help.
     // 256 slices keep each task's working set ~40MB; the conf is the
     // exact lever a 1000-executor deployment would set per its own heap.
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "256").toInt
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]",
-      shufflePartitions = parts).getOrCreate()
+    val spark = graft.core.GraftSession.builder(shufflePartitions = parts).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+
+    import Harness.{time, ms3}
 
     val nAdds = nFiles / 1000
     val nLinks = 1000
@@ -55,9 +55,9 @@ object DiffBench {
     val dir = java.nio.file.Files.createTempDirectory("graft_diffbench").toFile
     val imgA = new java.io.File(dir, "a.img").getPath
     val imgB = new java.io.File(dir, "b.img").getPath
-    val (tGenA, _) = SoakUtil.time(ImageGen.write(imgA,
+    val (tGenA, _) = time(ImageGen.write(imgA,
       ImageGen.GenSpec(nDirs = nDirs, nFiles = nFiles, nSymlinks = nLinks)))
-    val (tGenB, _) = SoakUtil.time(ImageGen.write(imgB,
+    val (tGenB, _) = time(ImageGen.write(imgB,
       ImageGen.GenSpec(nDirs = nDirs, nFiles = nFiles + nAdds,
         nSymlinks = 0, sizeShiftEvery = shiftEvery)))
     val bytes = new java.io.File(imgA).length() + new java.io.File(imgB).length()
@@ -71,13 +71,12 @@ object DiffBench {
     // as tables on arrival (bucketed by path), and the diff is a join
     // between TABLES, never a double re-parse.
     def stage(img: String, out: String): Double = {
-      val (t, _) = SoakUtil.time {
+      val (t, _) = time {
         Reports.diffProjection(FsImageSource.inodesDistributed(spark, img))
           .write.mode("overwrite").parquet(out)
-        // release the load's localCheckpoint/persist blocks so the next
-        // load starts from the r7 single-image budget
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-        spark.sqlContext.clearCache()
+        // release the load's checkpointed blocks so the next load starts
+        // from the r7 single-image budget
+        Harness.dropBlocks(spark)
       }
       t
     }
@@ -104,7 +103,7 @@ object DiffBench {
     // is never recomputed per consumer). ~|changes| rows, tiny next to
     // the images.
     val pqD = new java.io.File(dir, "d.pq").getPath
-    val (tDiff, _) = SoakUtil.time {
+    val (tDiff, _) = time {
       diff.write.mode("overwrite").parquet(pqD)
     }
     val diffT = spark.read.parquet(pqD)
@@ -127,10 +126,10 @@ object DiffBench {
       .localCheckpoint()
     def rowSet(rows: Array[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val (tFullSum, fullSum) = SoakUtil.time {
+    val (tFullSum, fullSum) = time {
       rowSet(Reports.filesSummary(spark.read.parquet(pqB)).collect())
     }
-    val (tIncrSum, incrSum) = SoakUtil.time {
+    val (tIncrSum, incrSum) = time {
       rowSet(Reports.applySummaryDelta(beforeSum,
         Reports.summaryDelta(diffT)).collect())
     }
@@ -139,16 +138,16 @@ object DiffBench {
 
     println(s"""{"metric":"namespace_diff_soak","n_files":$nFiles,""" +
       s""""n_dirs":$nDirs,"image_bytes":$bytes,""" +
-      s""""gen_a_sec":${SoakUtil.ms3(tGenA)},"gen_b_sec":${SoakUtil.ms3(tGenB)},""" +
-      s""""load_a_sec":${SoakUtil.ms3(tLoadA)},"load_b_sec":${SoakUtil.ms3(tLoadB)},""" +
-      s""""diff_sec":${SoakUtil.ms3(tDiff)},""" +
-      s""""full_summary_sec":${SoakUtil.ms3(tFullSum)},""" +
-      s""""incr_summary_sec":${SoakUtil.ms3(tIncrSum)},""" +
+      s""""gen_a_sec":${ms3(tGenA)},"gen_b_sec":${ms3(tGenB)},""" +
+      s""""load_a_sec":${ms3(tLoadA)},"load_b_sec":${ms3(tLoadB)},""" +
+      s""""diff_sec":${ms3(tDiff)},""" +
+      s""""full_summary_sec":${ms3(tFullSum)},""" +
+      s""""incr_summary_sec":${ms3(tIncrSum)},""" +
       s""""summary_owners":${fullSum.size},"summary_equal":true,""" +
       s""""added":${byChange.getOrElse("added", 0L)},""" +
       s""""removed":${byChange.getOrElse("removed", 0L)},""" +
       s""""modified":${byChange.getOrElse("modified", 0L)},""" +
-      s""""sort_merge_join":true,"peak_heap_mb":${SoakUtil.peakHeapMb},""" +
+      s""""sort_merge_join":true,"peak_heap_mb":${Harness.peakHeapMb},""" +
       s""""xmx":"${sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")}"}""")
     new java.io.File(imgA).delete(); new java.io.File(imgB).delete()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(pqA))

@@ -2,9 +2,16 @@ package graft
 
 /** Plan-artifact dumper for the optimization rounds: writes
   * `<outDir>/<query>_<suffix>.txt` with `explain("formatted")` output for
-  * each named query, from ONE warmed session (the per-query
-  * `graft.Explain` pays a JVM+warmup per plan, which makes a 25-query
-  * before/after sweep impractical).
+  * each named query, from ONE warmed session.
+  *
+  * Each dump opens with a header naming the Spark jobs that ran while the
+  * query's DataFrame was built: their count, then each distinct job
+  * description (a `Rounds` round such as `pagerank round 3`, or a call
+  * site such as `count at …`) with its count. A query that stages work
+  * while it is built (a checkpointed edge table, the rounds of an
+  * iterative loop, the whole chain of `p_pipeline_counts`) plans over the
+  * leaves that work left, so the header is what shows the work; a lazy
+  * query's header reads 0 jobs.
   *
   * Usage: `runMain graft.ExplainBatch <outDir> <suffix> <sfDir> <q1,q2,…>`
   *
@@ -28,20 +35,24 @@ object ExplainBatch {
       ((s: SparkSession, d: String) => graft.operators.Dedup.pairStats(
         graft.core.Tables.documents(s, d))))
 
+  /** The dump of one plan: the job header, then the formatted plan of
+    * the DataFrame `build` returns. */
+  def render(spark: SparkSession)(build: => DataFrame): String = {
+    val (df, jobs) = Harness.jobsDuring(spark)(build)
+    val header = s"== Spark jobs while building: ${jobs.size} ==\n" +
+      (if (jobs.isEmpty) "" else Harness.jobCounts(jobs) + "\n")
+    header + "\n" + org.apache.spark.sql.graftshim.formattedPlan(df.get)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(outDir, suffix, sfDir, qlist) = args.take(4)
-    val spark = graft.core.GraftSession.builder(
-      master = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.core.Tables.lineitem(spark, sfDir).count()
-    graft.core.Tables.documents(spark, sfDir).count()
-    graft.core.Namespace.inodes(spark, sfDir).count()
+    val spark = graft.core.GraftSession.get()
+    Harness.warm(spark, sfDir)
     new java.io.File(outDir).mkdirs()
     qlist.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val t0 = System.nanoTime()
       try {
-        val df = builds.getOrElse(name, SparkEntry.queries(name))(spark, sfDir)
-        val plan = org.apache.spark.sql.graftshim.formattedPlan(df)
+        val plan = render(spark)(builds.getOrElse(name, SparkEntry.queries(name))(spark, sfDir))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$outDir/${name}_$suffix.txt"), plan)
         System.err.println(f"[explain] $name%-28s ${(System.nanoTime() - t0) / 1e9}%.1f s")

@@ -9,7 +9,7 @@ import graft.sources.fsimage.ImageGen
   * reference's in-memory loader. One JSON line on stdout.
   *
   * `runMain graft.ImageBench [nFiles] [nDirs] [distOnly]` (defaults
-  * 2M / 20k; env: SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM). `distOnly`
+  * 2M / 20k; env: SPARK_DRIVER_MEM). `distOnly`
   * skips the driver loader entirely — the capped-heap soak mode: the
   * driver loader materializes EVERY inode driver-side and provably
   * OOMs at 10M inodes / 4g, while the ranged loader's driver state is
@@ -20,17 +20,11 @@ object ImageBench {
     val nFiles = args.headOption.map(_.toInt).getOrElse(2000000)
     val nDirs = args.drop(1).headOption.map(_.toInt).getOrElse(20000)
     val distOnly = args.drop(2).headOption.contains("distOnly")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
+    import Harness.{time, ms3}
 
     val dir = java.nio.file.Files.createTempDirectory("graft_imgbench").toFile
     val img = new java.io.File(dir, "bench.img").getPath
-    def time[A](f: => A): (Double, A) = {
-      val t0 = System.nanoTime()
-      val a = f
-      ((System.nanoTime() - t0) / 1e9, a)
-    }
     val (tGen, _) = time(ImageGen.write(img, ImageGen.GenSpec(
       nDirs = nDirs, nFiles = nFiles, ecEvery = 100, aclEvery = 1000,
       xattrEvery = 1000, nSymlinks = 1000, withAtime = true,
@@ -79,18 +73,8 @@ object ImageBench {
     }
     val expectQ = nDirs / 100 + (if (nDirs % 100 > 0) 1 else 0)
     require(nQ == expectQ, s"quota-dir count $nQ, expected $expectQ")
-    // Sum of per-pool peak heap since start, sampled AFTER the report
-    // phases (peak usage is monotone, so last-sample covers the whole
-    // run). In local mode one JVM holds driver state AND executor
-    // working memory, so this bounds BOTH. The per-pool peaks (G1
-    // eden/survivor/old) need not coincide in time, so the SUM can read
-    // above -Xmx; the hard bound of record is -Xmx itself — a capped
-    // run that completes proves the whole workload fit.
-    import scala.jdk.CollectionConverters._
-    val peakHeapMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getType == java.lang.management.MemoryType.HEAP)
-      .map(_.getPeakUsage.getUsed).sum / (1024 * 1024)
-    def ms3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+    // peak heap sampled AFTER the report phases covers the whole run
+    val peakHeapMb = Harness.peakHeapMb
     println(s"""{"metric":"fsimage_ingest","inodes":$nD,"image_bytes":$bytes,""" +
       s""""gen_sec":${ms3(tGen)},"driver_sec":${ms3(tDriver)},""" +
       s""""distributed_sec":${ms3(tDist)},"report_sec":${ms3(tReport)},""" +

@@ -27,8 +27,7 @@ import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
   * where one does work, and `PipelineSpec` holds it to a job budget
   * (53 jobs at sf0.001).
   *
-  * `runMain graft.Pipeline [sfDir]` (env: SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_CPUS).
+  * `runMain graft.Pipeline [sfDir]` (env: SPARK_GRAFT_SF_DIR).
   */
 object Pipeline {
 
@@ -39,9 +38,9 @@ object Pipeline {
   private[graft] val MinJaccardBp = 2000 // near-dup pair threshold
   private[graft] val QualityQuantile = 0.25 // per-language gate cut
 
-  /** Runs the chain; returns (stage, rows, seconds) in stage order — the
-    * per-stage wall time is what [[PipelineBench]]'s capped-heap soak
-    * records; count-only callers drop the third element. */
+  /** Runs the chain; returns (stage, rows, seconds) in stage order —
+    * [[main]] prints the per-stage wall time; count-only callers drop the
+    * third element. */
   def run(spark: SparkSession, sfDir: String): Seq[(String, Long, Double)] = {
     val out = Seq.newBuilder[(String, Long, Double)]
     def stage(name: String)(rows: => Long): Unit = {
@@ -142,16 +141,11 @@ object Pipeline {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val t0 = System.nanoTime()
-    val stages = run(spark, sfDir)
-    val sec = (math.round((System.nanoTime() - t0) / 1e6) / 1000.0).toString
+    val spark = graft.core.GraftSession.get()
+    val (sec, stages) = Harness.time(run(spark, sfDir))
     val body = stages.map { case (k, v, _) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val secs = stages.map { case (k, _, s) =>
-      s""""$k":${math.round(s * 1000) / 1000.0}""" }.mkString("{", ",", "}")
-    println(s"""{"metric":"pipeline","sec":$sec,"stages":$body,"stage_sec":$secs,"sf":"$sfDir"}""")
+    val secs = stages.map { case (k, _, s) => s""""$k":${Harness.ms3(s)}""" }.mkString("{", ",", "}")
+    println(s"""{"metric":"pipeline","sec":${Harness.ms3(sec)},"stages":$body,"stage_sec":$secs,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -20,7 +20,7 @@ import graft.streaming.EventsStream
   * production micro-batch streaming.
   *
   * `runMain graft.StreamBench [sfDir]` (env: SPARK_GRAFT_SF_DIR,
-  * SPARK_GRAFT_CPUS, SPARK_GRAFT_STREAM_CHUNKS).
+  * SPARK_GRAFT_STREAM_CHUNKS).
   */
 object StreamBench {
 
@@ -179,12 +179,10 @@ object StreamBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val chunks = sys.env.getOrElse("SPARK_GRAFT_STREAM_CHUNKS", "10").toInt
-    val spark = graft.core.GraftSession.builder(master = s"local[$cpus]").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.GraftSession.get()
     val results = run(spark, sfDir, chunks)
-    def ms3(v: Double): String = (math.round(v * 1000) / 1000.0).toString
+    import Harness.ms3
     val ops = results.toSeq.sortBy(_._1).map { case (k, s) =>
       s""""$k":{"sec":${ms3(s.sec)},"rows_per_sec":${math.round(s.rows / s.sec)},""" +
         s""""state_rows":${s.stateRows},"state_kib":${s.stateBytes / 1024}}"""

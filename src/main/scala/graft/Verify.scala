@@ -58,17 +58,10 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // the bench and CLI session, so the oracle checks the plans they run
-    val spark = graft.core.GraftSession
-      .builder(master = s"local[$cpus]", shufflePartitions = cpus.toInt)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_ONLY=a,b,c restricts to named queries (local iteration);
-    // the driver never sets it, so the gate always dumps everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
+    // the bench and CLI session, so the oracle checks the plans they run;
+    // SPARK_GRAFT_ONLY iterates locally, the driver never sets it
+    val spark = graft.core.GraftSession.get()
+    val only = Harness.only()
     val outcomes = dump(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (name, _) => only.forall(_(name)) })
     val json = SparkEntry.oracleSql

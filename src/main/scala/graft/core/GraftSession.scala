@@ -43,7 +43,11 @@ object GraftSession {
   /** The generated-class cache bound: room for several runs' working sets. */
   val CodegenCacheEntries = 2000
 
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+  /** Local worker threads of the default master: `SPARK_GRAFT_CPUS`, as
+    * given (Bench reports it verbatim), default 32. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  def builder(master: String = s"local[$cpus]",
               shufflePartitions: Int = 32): SparkSession.Builder =
     SparkSession.builder()
       .withExtensions(new graft.GraftExtensions)

@@ -18,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   *   - A chain is localCheckpoint'd — lineage TRUNCATED — so a memo hit
   *     must prove the checkpoint blocks still exist: each entry remembers
   *     the RDD ids its build persisted and is rebuilt if any id left
-  *     `getPersistentRDDs`. Bench's per-query block cleanup does exactly
+  *     `getPersistentRDDs`. Bench's per-query block cleanup
+  *     ([[graft.Harness.dropBlocks]]) does exactly
   *     that, so in Bench every QUERY still rebuilds its chains (run 1)
   *     and only a query's OWN runs 2..n share — per-query timing stays
   *     attributable; Verify and long-lived sessions get full cross-query

@@ -46,7 +46,7 @@ object KCore {
     * trajectory (spec-asserted on every KCoreSpec graph).
     *
     * `modeOut` receives the chosen plan (`"broadcast"` / `"shuffled"`)
-    * — observability for specs and GraphBench. A callback rather than a
+    * — observability for `KCoreSpec`'s cutover test. A callback rather than a
     * shared mutable global, so concurrent peels can't clobber each
     * other's observation. */
   def peel(sym: DataFrame, k: Int, rounds: Int,

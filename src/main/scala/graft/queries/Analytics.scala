@@ -2213,16 +2213,10 @@ object Analytics extends QueryModule {
     * an empty core is stable by convention). DuckDB re-derives the
     * identical 8 unrolled peels, so every intermediate round is
     * hash-checked through the final counts. */
-  def qKcore(spark: SparkSession, sfDir: String): DataFrame =
-    qKcore(spark, sfDir, _ => ())
-
-  /** [[qKcore]] with peel-plan observability (see [[qPagerank]]'s
-    * `modeOut` contract). */
-  def qKcore(spark: SparkSession, sfDir: String,
-             modeOut: String => Unit): DataFrame = {
+  def qKcore(spark: SparkSession, sfDir: String): DataFrame = {
     val k = KcoreK
     val core = graft.operators.KCore.peelStaged(coOrderSymStaged(spark, sfDir), k,
-      KcoreRounds, modeOut)
+      KcoreRounds)
     core.groupBy(col("u")).agg(count(lit(1)).as("d"))
       .agg(count(lit(1)).as("n_core_nodes"),
         coalesce(sum(col("d")), lit(0L)).as("dir_deg"),

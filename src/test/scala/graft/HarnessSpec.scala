@@ -171,6 +171,64 @@ class HarnessSpec extends SparkSpecBase {
       j.get("failed").asInt == 0 && j.get("sf").asDouble == 0.01, s)
   }
 
+  test("Harness.only: unset or blank selects every query, a list selects its names") {
+    assert(Harness.only(None).isEmpty)
+    assert(Harness.only(Some("")).isEmpty)
+    assert(Harness.only(Some(" , ,")).isEmpty)
+    assert(Harness.only(Some("a, b,,c")) === Some(Set("a", "b", "c")))
+  }
+
+  test("Harness.warm then dropBlocks keeps exactly the warm-up's persisted RDDs") {
+    val sc = spark.sparkContext
+    val keep = Harness.warm(spark, Sf)
+    assert(keep.nonEmpty, "the warm-up caches the namespace view")
+    assert(keep.subsetOf(sc.getPersistentRDDs.keySet))
+    // a query's own checkpoint, as an iterative query leaves it
+    val leaf = graft.operators.Rounds.eager(spark.range(100).toDF("x"))
+    assert(leaf.count() === 100)
+    assert(sc.getPersistentRDDs.keySet.toSet != keep, "the leaf is persisted")
+    Harness.dropBlocks(spark, keep)
+    assert(sc.getPersistentRDDs.keySet.toSet === keep)
+    // the kept warm-up cache still serves the namespace view
+    assert(graft.core.Namespace.inodes(spark, Sf).count() > 0)
+  }
+
+  private def headerJobs(dump: String): Int = {
+    val m = "== Spark jobs while building: (\\d+) ==".r.findFirstMatchIn(dump)
+    assert(m.isDefined, dump)
+    m.get.group(1).toInt
+  }
+
+  test("ExplainBatch header names the jobs that built a staged plan, and none for a lazy one") {
+    val staged = ExplainBatch.render(spark)(
+      graft.operators.Rounds.eager(spark.range(100).toDF("x")).filter("x > 3"))
+    assert(headerJobs(staged) >= 1, staged)
+    assert(staged.contains("Physical Plan"), staged)
+    val lazyDump = ExplainBatch.render(spark)(spark.range(100).toDF("x").filter("x > 3"))
+    assert(headerJobs(lazyDump) === 0, lazyDump)
+    assert(lazyDump.contains("Physical Plan"), lazyDump)
+  }
+
+  test("every main under src/main/scala/graft is a row of README's entry-point table") {
+    import scala.jdk.CollectionConverters._
+    val mains = Files.walk(Paths.get("src/main/scala/graft")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).flatMap { f =>
+        val src = Files.readString(f)
+        val pkg = "(?m)^package ([\\w.]+)".r.findFirstMatchIn(src).map(_.group(1)).get
+        "def main\\(args: Array\\[String\\]\\)".r.findAllMatchIn(src).map { m =>
+          val owner = "object (\\w+)".r.findAllMatchIn(src.take(m.start)).toSeq.last.group(1)
+          s"$pkg.$owner"
+        }
+      }.toSet
+    assert(mains.contains("graft.Bench") && mains.contains("graft.Tool"), mains)
+    val readme = Files.readString(Paths.get("README.md"))
+    val section = readme.drop(readme.indexOf("## Entry points")).split("\n## ")(0)
+    val rows = section.linesIterator.filter(_.startsWith("| `graft."))
+      .map(r => "`(graft\\.\\w+)`".r.findFirstMatchIn(r).get.group(1)).toSet
+    assert(rows === mains,
+      s"mains without a README row: ${mains -- rows}; rows without a main: ${rows -- mains}")
+  }
+
   test("timestamp contract: events.ts is TIMESTAMP_NTZ and every query analyzes against it") {
     // Pin the encoding that silently changed under q_moving_window in r5:
     // pandas timestamp[us] (no tz) reads back as TimestampNTZType. If a
