@@ -25,7 +25,8 @@ import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
   * carries ~30 ms of fixed overhead on a 4-core host, and after AQE
   * coalescing most stages are one task. So the chain starts a job only
   * where one does work, and `PipelineSpec` holds it to a job budget
-  * (53 jobs at sf0.001).
+  * (41 jobs at sf0.001). Each stage's jobs are described
+  * `pipeline <stage>` (an iterative step inside names its own rounds).
   *
   * `runMain graft.Pipeline [sfDir]` (env: SPARK_GRAFT_SF_DIR).
   */
@@ -43,16 +44,18 @@ object Pipeline {
     * third element. */
   def run(spark: SparkSession, sfDir: String): Seq[(String, Long, Double)] = {
     val out = Seq.newBuilder[(String, Long, Double)]
+    // every job a stage runs (AQE's query-stage jobs included) is
+    // described `pipeline <stage>`, unless a loop inside names its rounds
     def stage(name: String)(rows: => Long): Unit = {
       val t0 = System.nanoTime()
-      val n = rows
+      val n = Rounds.described(spark, s"pipeline $name")(rows)
       out += ((name, n, (System.nanoTime() - t0) / 1e9))
     }
     // stageDf: one job materializes the stage and measures its row count,
     // and both land in the stage's time
     def stageDf(name: String)(f: => DataFrame): DataFrame = {
       val t0 = System.nanoTime()
-      val d = Rounds.eager(f)
+      val d = Rounds.described(spark, s"pipeline $name")(Rounds.eager(f))
       val n = Rounds.measuredRows(d)
       out += ((name, n, (System.nanoTime() - t0) / 1e9))
       d
@@ -100,13 +103,12 @@ object Pipeline {
     //    COUNT is the highest window any token lands in, +1 — counting
     //    distinct doc-START windows would skip windows interior to a
     //    longer-than-window document
-    val packed = PrefixSum.exclusive(
-        gated.select(col("doc_id"),
-          size(split(col("text"), "\\s+")).cast("long").as("n_tokens")),
-        keyCol = "doc_id", valueCol = "n_tokens")
     // coalesce(-1): an empty surviving corpus has a NULL max → 0 sequences
     stage("packed_sequences") {
-      packed
+      PrefixSum.exclusive(
+          gated.select(col("doc_id"),
+            size(split(col("text"), "\\s+")).cast("long").as("n_tokens")),
+          keyCol = "doc_id", valueCol = "n_tokens")
         .agg(coalesce(
           max(expr(s"(prefix_excl + n_tokens - 1) DIV $SeqTokens")), lit(-1L))
           .as("m"))

@@ -1,14 +1,17 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim
 import org.apache.spark.storage.StorageLevel
 
 import scala.collection.mutable.ArrayBuffer
 
-/** The per-round policy of every iterative loop in graft (CC, k-core,
-  * LPA, PageRank, Lloyd, BPE, the HNSW walks), in one place.
+/** The per-round policy of graft's iterative DataFrame loops (CC, k-core,
+  * LPA, PageRank, BPE, the HNSW walks), in one place. Lloyd's k-means does
+  * not run here: its state is k centroid arrays on the driver, and each of
+  * its rounds is one `treeAggregate` ([[KMeans]]), described through
+  * [[described]] like these rounds.
   *
   * Each round's state re-enters the next round's plan as a fresh leaf: a
   * local checkpoint whose size estimate is either measured (an eager
@@ -81,7 +84,7 @@ object Rounds {
       step: (DataFrame, Int) => DataFrame): DataFrame = {
     val (state0, size, _) = roundZero(init)
     (1 to n).foldLeft(state0) { (state, r) =>
-      described(init, s"$loop round $r")(graftshim.lazyLeaf(step(state, r), size)._1)
+      described(init.sparkSession, s"$loop round $r")(graftshim.lazyLeaf(step(state, r), size)._1)
     }
   }
 
@@ -101,7 +104,7 @@ object Rounds {
     var (r, stable) = (0, false)
     while (!stable && r < n) {
       r += 1
-      val (next, rdd) = described(init, s"$loop round $r")(graftshim.eagerLeaf(step(state)))
+      val (next, rdd) = described(init.sparkSession, s"$loop round $r")(graftshim.eagerLeaf(step(state)))
       val rows = measuredRows(next)
       last.foreach(_._2.unpersist(blocking = false))
       stable = last.exists(_._1 == rows)
@@ -121,7 +124,7 @@ object Rounds {
     while (c > 0 && r < maxIters) {
       r += 1
       val round = new Round
-      val (next, rdd) = described(init, s"$loop round $r") {
+      val (next, rdd) = described(init.sparkSession, s"$loop round $r") {
         val leaf = graftshim.lazyLeaf(step(state, round), size)
         c = changed(leaf._1)
         leaf
@@ -143,8 +146,10 @@ object Rounds {
     else { val (leaf, rdd) = graftshim.lazyLeaf(init, size); (leaf, size, Some(rdd)) }
   }
 
-  private def described[T](df: DataFrame, what: String)(body: => T): T = {
-    val sc = df.sparkSession.sparkContext
+  /** `body` with its jobs described `what`; the caller's description is
+    * restored afterwards. */
+  private[graft] def described[T](spark: SparkSession, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
     val prev = sc.getLocalProperty("spark.job.description")
     sc.setJobDescription(what)
     try body finally sc.setLocalProperty("spark.job.description", prev)

@@ -836,8 +836,9 @@ object VectorQueries extends QueryModule {
   /** The (cell, cv: double[], cn) coarse-centroid table for [[knnGraph]]:
     * sampled ids below the cutover (deterministic — the oracle replays
     * it), [[graft.operators.KMeans]] centroids past it (2 Lloyd
-    * iterations over the integer-quantized table, reconstructed into
-    * cosine space; cluster ids are seed vec_ids, so cell keys stay
+    * iterations over the integer-quantized table; the driver's centroid
+    * arrays are scaled back into cosine space as a local table; cluster
+    * ids are seed vec_ids, so cell keys stay
     * globally unique). Both sources feed the identical assignment join —
     * only the centroid VALUES differ, never the contract. */
   private[queries] def knnCentroids(spark: SparkSession, sfDir: String,
@@ -847,13 +848,12 @@ object VectorQueries extends QueryModule {
       e.filter(col("vec_id") < ncells)
         .select(col("vec_id").as("cell"), col("v").as("cv"), col("nrm").as("cn"))
     else {
+      import spark.implicits._
       val emb = Tables.embeddings(spark, sfDir)
-      val vecs = graft.operators.KMeans.quantize(emb)
-      graft.operators.KMeans.finalCentroids(vecs, emb, ncells.toInt, 2)
-        .groupBy(col("k"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("c")))).as("pc"))
-        .select(col("k").as("cell"),
-          expr("transform(pc, x -> CAST(x.c AS double) / 1000000.0)").as("cv"))
+      val c = graft.operators.KMeans.finalCentroids(
+        graft.operators.KMeans.quantize(emb), emb, ncells.toInt, 2)
+      c.ids.toSeq.zip(c.values.toSeq.map(_.map(_.toDouble / 1000000.0)))
+        .toDF("cell", "cv")
         .withColumn("cn", sqrt(dot(col("cv"), col("cv"))))
         // an all-zero centroid can't rank by cosine; its would-be members
         // fall to their next-nearest cell (can only arise on degenerate
@@ -3279,8 +3279,8 @@ object VectorQueries extends QueryModule {
     * count and size. The one-number-per-k readout that picks k before
     * committing an IVF/SemDeDup build to it; each run is the already-
     * benched k-means shape over ONE shared quantized table
-    * ([[graft.operators.KMeans.quantize]] — the corpus explode and its
-    * checkpoint are paid once, not per k), and the three Lloyd chains
+    * ([[graft.operators.KMeans.quantize]] — the corpus quantization and
+    * its checkpoint are paid once, not per k), and the three Lloyd chains
     * are embarrassingly parallel across k on a cluster. */
   def kmeansElbow(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
@@ -3795,8 +3795,8 @@ object VectorQueries extends QueryModule {
     val base = all.filter(col("vec_id") % 10 =!= 3)
     val batch = all.filter(col("vec_id") % 10 === 3)
     val baseVecs = KMeans.quantize(base)
+    // the persisted codebook, on the driver, shared by both assigns
     val cents = KMeans.finalCentroids(baseVecs, base, KmeansK, KmeansIters)
-      .localCheckpoint() // the persisted codebook, shared by both assigns
     val baseAsn = KMeans.assignTop(baseVecs, cents, 1)
       .select(col("vec_id"), col("cluster"))
     val batchAsn = KMeans.assignTop(KMeans.quantize(batch), cents, 1)
@@ -4753,7 +4753,10 @@ object VectorQueries extends QueryModule {
   }
 
   /** The 8 unrolled power-iteration rounds + Gram CTEs (1-based dim ids
-    * i ∈ 1..64), shared by both PCA oracles. */
+    * i ∈ 1..64), shared by both PCA oracles; every CTE MATERIALIZED
+    * ([[materializedCtes]]): each `w<k>` reads `y<k>` directly and through
+    * `s<k>`, so inlined rounds re-evaluate exponentially (the `e_pca_var`
+    * oracle took ~6 min at sf0.01 that way, 0.3 s materialized). */
   private def pcaCtes: String = {
     val rounds = (1 to PcaIters).map { k =>
       val prev = s"w${k - 1}"
@@ -4763,7 +4766,7 @@ object VectorQueries extends QueryModule {
     ), s$k AS (SELECT greatest(1, max(abs(y)) // $PcaWScale) AS s FROM y$k),
     w$k AS (SELECT i, y // s AS w FROM y$k, s$k)"""
     }.mkString(",\n    ")
-    s"""emb AS (
+    materializedCtes(s"""emb AS (
       SELECT vec_id, list_transform(embedding,
         x -> CAST(floor(CAST(x AS double) * $PcaQScale) AS bigint)) AS vq
       FROM embeddings
@@ -4774,7 +4777,7 @@ object VectorQueries extends QueryModule {
     ), gs AS (SELECT greatest(1, max(abs(g)) // $PcaWScale) AS s FROM cells),
     gq AS (SELECT i, j, g // s AS gq FROM cells, gs),
     w0 AS (SELECT i, CAST($PcaWScale AS bigint) AS w FROM idx),
-    $rounds"""
+    $rounds""")
   }
 
   val pcaPowerSql: String = s"""

@@ -115,11 +115,12 @@ class PlanGuardSpec extends SparkSpecBase {
     assert(!p.contains("BroadcastNestedLoopJoin"), "nested-loop in t_substr_scrub")
   }
 
-  test("e_ann_ivf_incr assigns by broadcast centroid join; merge/rebuild compare is an id equi-join") {
+  test("e_ann_ivf_incr assigns map-side, no pos join; compare joins on vec_id") {
     val p = plan("e_ann_ivf_incr")
-    // pos-keyed centroid joins are broadcast (the codebook is k·dim rows)
-    assert("BroadcastHashJoin \\[pos#".r.findFirstIn(p).isDefined,
-      "broadcast centroid join missing")
+    // both assignments are a map over the quantized vectors against the
+    // driver's codebook (KMeans.assignTop), never a pos-keyed join
+    assert("posexplode\\(nearest\\(q#".r.findAllIn(p).size == 2, "map-side assignment missing")
+    assert(!p.contains("[pos#"), "pos-keyed centroid join in e_ann_ivf_incr")
     // the incremental-vs-rebuild comparison joins on vec_id
     assert("(ShuffledHashJoin|SortMergeJoin|BroadcastHashJoin) \\[vec_id#".r
       .findFirstIn(p).isDefined, "vec_id equi-join missing")
