@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Tables
-import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
+import graft.operators.{Dedup, KMeans, Rounds}
 
 /** End-to-end curation pipeline — the operators composed the way a
   * production run chains them, with shared artifacts computed ONCE:
@@ -25,7 +25,7 @@ import graft.operators.{Dedup, KMeans, PrefixSum, Rounds}
   * carries ~30 ms of fixed overhead on a 4-core host, and after AQE
   * coalescing most stages are one task. So the chain starts a job only
   * where one does work, and `PipelineSpec` holds it to a job budget
-  * (41 jobs at sf0.001). Each stage's jobs are described
+  * (26 jobs at sf0.001). Each stage's jobs are described
   * `pipeline <stage>` (an iterative step inside names its own rounds).
   *
   * `runMain graft.Pipeline [sfDir]` (env: SPARK_GRAFT_SF_DIR).
@@ -98,21 +98,18 @@ object Pipeline {
         .select(col("doc_id"), col("text"))
     }
 
-    // 4. context-window packing: exclusive prefix sum of token counts in
-    //    doc_id order assigns each token stream its window; the sequence
-    //    COUNT is the highest window any token lands in, +1 — counting
-    //    distinct doc-START windows would skip windows interior to a
-    //    longer-than-window document
-    // coalesce(-1): an empty surviving corpus has a NULL max → 0 sequences
+    // 4. context-window packing: the surviving documents fill
+    //    SeqTokens-token windows back to back in doc_id order, so the
+    //    sequence COUNT is the highest window any token lands in, +1
+    //    (counting distinct doc-START windows would skip windows interior
+    //    to a longer-than-window document). n_tokens = size(split(text,
+    //    '\s+')) is >= 1 for non-null text, so the inclusive prefix sum
+    //    rises in doc_id order and its maximum is the corpus total T: the
+    //    count is (T - 1) DIV SeqTokens + 1, and 0 for an empty corpus (a
+    //    NULL sum). One sum, not the prefix sums the oracle replays
     stage("packed_sequences") {
-      PrefixSum.exclusive(
-          gated.select(col("doc_id"),
-            size(split(col("text"), "\\s+")).cast("long").as("n_tokens")),
-          keyCol = "doc_id", valueCol = "n_tokens")
-        .agg(coalesce(
-          max(expr(s"(prefix_excl + n_tokens - 1) DIV $SeqTokens")), lit(-1L))
-          .as("m"))
-        .head().getLong(0) + 1
+      val total = gated.agg(sum(size(split(col("text"), "\\s+")).cast("long"))).head()
+      if (total.isNullAt(0)) 0L else (total.getLong(0) - 1) / SeqTokens + 1
     }
 
     // 5. embeddings: ONE fit, three views (what Bench measures standalone)

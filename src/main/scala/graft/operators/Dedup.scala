@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.{graftshim => ExpressionUtils}
 import org.apache.spark.sql.catalyst.expressions.{Literal, ShiftLeft}
 import org.apache.spark.sql.expressions.Window
@@ -130,94 +130,84 @@ object Dedup {
 
   /** Connected components over an undirected candidate-pair list — the
     * step that turns near-dup PAIRS into dedup GROUPS (pick one canonical
-    * per group, drop the rest). Iterative min-label propagation: every
-    * vertex starts labeled with its own id; each round a vertex takes the
-    * min of its own and its neighbors' labels; converges in O(component
-    * diameter) rounds — near-dup components are shallow (dup clusters are
-    * near-cliques), so 2-4 rounds in practice even at corpus scale.
+    * per group, drop the rest). Per-partition union-find, repeated over
+    * levels. One level:
+    *   - a `mapPartitions` over the level's edge table runs union-find on
+    *     the partition's edges and emits `(v, root)` for every vertex it
+    *     saw, roots included, where `root` is the smallest id of v's local
+    *     tree;
+    *   - one `groupBy(v)`, materialized as an eager leaf, gives each v its
+    *     label `lo = min(root)` and its set of roots;
+    *   - a v whose roots differ (its edges fell in more than one partition)
+    *     yields the merge edges `(lo, r)`, one per other root r. They are
+    *     the next level's edge table, coalesced to at most
+    *     [[LevelEdgesPerTask]] edges a partition.
+    * The loop stops at a level with no merge edge. A component whose edges
+    * all fell in one partition is labeled by its minimum at level 1;
+    * otherwise each of its local roots is in a merge edge, so the next
+    * level connects them and labels each with the component minimum. The
+    * final label is the level maps composed by left joins, `L_k(…L_1(v))`,
+    * keeping a level's label where no deeper level relabels it.
     *
-    * Scale shape: each round is one equi-join edges⋈labels on the vertex
-    * id plus a groupBy(src) min — all shuffles on the same key, no
-    * driver-side data. The rounds run under [[Rounds.untilStable]]: the
-    * convergence check is a count of changed labels, not a collect, and
-    * it is the action that materializes each round.
+    * Levels: a pair table of one partition (after AQE coalescing, every
+    * benchmark corpus) is settled by level 1: two jobs (the group's map
+    * stage and the leaf, which also counts the merge edges). Merge edges
+    * that fit one partition are settled by the next level, so up to 2^20
+    * of them CC takes at most two levels. Beyond that each level still
+    * drops the largest vertex of every open component (it has a smaller
+    * neighbor wherever it appears, so it is never a root), whatever the
+    * component's diameter. `maxIters` bounds the levels: a loop with
+    * merge edges left after `maxIters` levels is refused with
+    * [[Rounds.NotConverged]] — partial labels would split a component
+    * into several "canonical" docs. Each level's jobs are described
+    * `cc round <level>`.
+    *
+    * Memory: a task holds its partition's union-find, at most 40 bytes per
+    * distinct vertex of its edges; the driver holds only the level count
+    * and each level's merge-edge count. Every level's label map stays
+    * persisted until the returned plan is dropped.
     *
     * @param pairs    (doc_a, doc_b) undirected edges, doc_a < doc_b
     * @param vertices (doc_id) universe incl. singletons
+    * @param maxIters the most levels to run
     * @return (doc_id, cluster_id) where cluster_id = min doc_id reachable
     */
   def connectedComponents(pairs: DataFrame, vertices: DataFrame,
                           maxIters: Int = 50): DataFrame = {
-    // materialize the (possibly expensive) pair plan ONCE — the union
-    // below scans it twice, and every propagation round scans the result
-    val p = Rounds.eager(pairs.select(col("doc_a"), col("doc_b")))
-    // the symmetric edge table, staged once: every hop joins it on
-    // `doc_id` (the endpoint whose label flows out). A checkpoint keeps no
-    // partitioning (LayoutSpec), so the hop's join shuffles it either way
-    // and it is not repartitioned first. The pair table is near-dup
-    // candidates — a sliver of the corpus — so the staged copy is bounded
-    // (the r8 two-copies lesson doesn't bite).
-    val sym = Rounds.eager(
-      p.select(col("doc_a").as("nbr"), col("doc_b").as("doc_id"))
-        .union(p.select(col("doc_b").as("nbr"), col("doc_a").as("doc_id"))))
-    // only edge-touched vertices can ever change label — iterate over that
-    // subset (a sliver of a mostly-singleton corpus) and attach the
-    // untouched majority once at the end. Seeding with min(self, neighbors)
-    // is the first propagation hop for free; on a SYMMETRIC table grouping
-    // by either endpoint yields the same set.
-    val labels0 = sym.groupBy(col("doc_id"))
-      .agg(min(least(col("nbr"), col("doc_id"))).as("cluster_id"))
-    // one min-label hop (r13): the edges⋈labels join ships each node's
-    // label to its neighbors as (nbr → doc_id) messages, each node also
-    // messages ITSELF its own label and the round's starting label `prev`
-    // (exactly one self-message per node, so max() recovers it), and ONE
-    // groupBy(doc_id) folds min(neighbor labels, own) — the old hop's
-    // separate nbrMin aggregate + combine join, fused.
-    // Domain unchanged: the label domain IS sym's vertex set and every
-    // such vertex has >= 1 neighbor (singletons never enter the loop).
-    def hop(l: DataFrame): DataFrame =
-      sym.join(l.select(col("doc_id"), col("cluster_id")), "doc_id")
-        .select(col("nbr").as("doc_id"), col("cluster_id"),
-          lit(null).cast(l.schema("cluster_id").dataType).as("prev"))
-        .unionByName(l)
+    val spark = pairs.sparkSession
+    val longs = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    def level(edges: DataFrame): DataFrame =
+      edges.as(longs).mapPartitions(LocalUnionFind.roots)(longs).toDF("doc_id", "root")
         .groupBy(col("doc_id"))
-        .agg(max(col("prev")).as("prev"), min(col("cluster_id")).as("cluster_id"))
-    // pointer-jumping / path compression (r13, measured: mutual-kNN
-    // components are CHAINS, not cliques — the plain min-label hop took 17
-    // materialized rounds on them): l'(u) = l(l(u)). Every label value is
-    // a domain node id (labels start as least(self, nbr) and both ops
-    // preserve that), labels are monotone non-increasing and bounded by
-    // the component minimum, and a hop-stable labeling is constant per
-    // component — so hop+jump converges to the SAME fixpoint as hop alone
-    // in O(log diameter) materialized rounds instead of O(diameter). The
-    // oracle checks the final labeling (recursive reachability), which is
-    // unchanged.
-    def jump(l: DataFrame): DataFrame = {
-      val ptr = l.select(col("doc_id").as("p_id"), col("cluster_id").as("p_lbl"))
-      l.join(ptr, l("cluster_id") === ptr("p_id"))
-        .select(col("doc_id"), col("prev"), col("p_lbl").as("cluster_id"))
+        .agg(min(col("root")).as("cluster_id"), collect_set(col("root")).as("roots"))
+    val maps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var edges = pairs.select(col("doc_a"), col("doc_b"))
+    var merges = 1L
+    while (merges > 0) {
+      if (maps.size == maxIters) throw new Rounds.NotConverged("cc", maxIters, merges)
+      val (l, m) = Rounds.described(spark, s"cc round ${maps.size + 1}") {
+        // the roots column is ordinal 2; each root beyond v's own label is
+        // one merge edge
+        Rounds.eagerSum(level(edges))(_.getArray(2).numElements() - 1L)
+      }
+      maps += l.select(col("doc_id"), col("cluster_id"))
+      merges = m
+      edges = l.select(col("cluster_id"), explode(array_remove(col("roots"), col("cluster_id"))))
+        .coalesce(math.max(1L, (m + LevelEdgesPerTask - 1) / LevelEdgesPerTask).toInt)
     }
-    // two hop+jump pairs per round: same total join work, half the
-    // convergence counts. Every step reads its input twice (hop: edge
-    // join + self-messages; jump: label side + pointer side). A hop's
-    // output is an eager leaf: its two readers in `jump` shuffle it on
-    // different keys, so a lazy h1/h2 re-derives the hop per side. The
-    // first jump stays lazy: its two readers in the next hop recompute
-    // only its join, over shuffles of h1 that Spark reuses, while an
-    // eager leaf costs one more job per round. `prev` carries the round's
-    // starting label for the changed count. A component whose labels
-    // still move after maxIters rounds is refused — partially-propagated
-    // labels would silently split it into several "canonical" docs.
-    val labels = Rounds.untilStable("cc", labels0, maxIters) { (l, round) =>
-      val h1 = round.eager(hop(l.withColumn("prev", col("cluster_id"))))
-      val j1 = jump(h1)
-      val h2 = round.eager(hop(j1))
-      jump(h2)
-    }(next => next.filter(col("cluster_id") < col("prev")).count())
+    val labels = maps.tail.foldLeft(maps.head) { (f, l) =>
+      f.join(l.select(col("doc_id").as("cluster_id"), col("cluster_id").as("next")),
+          Seq("cluster_id"), "left")
+        .select(col("doc_id"), coalesce(col("next"), col("cluster_id")).as("cluster_id"))
+    }
     vertices.select(col("doc_id"))
-      .join(labels.select(col("doc_id"), col("cluster_id")), Seq("doc_id"), "left")
+      .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("cluster_id"))
   }
+
+  /** The most merge edges a later [[connectedComponents]] level puts in
+    * one partition (its union-find: at most 80 MiB). */
+  val LevelEdgesPerTask = 1L << 20
 
   /** Keep-one materializer — the step after [[connectedComponents]] that a
     * real pipeline actually runs: per near-dup cluster keep the single best

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Label propagation (Raghavan–Albert–Kumara 2007, the synchronous
   * variant) — the community-detection counterpart to the repo's other
-  * iterative-graph primitives (triangles, PageRank, k-core,
+  * graph primitives (triangles, PageRank, k-core, the union-find
   * `Dedup.connectedComponents`): every node starts labeled with its own
   * id, and each round adopts the MODE of its neighbors' labels. Dense
   * intra-community edges amplify their majority label within a few

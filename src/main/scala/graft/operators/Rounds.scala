@@ -3,15 +3,18 @@ package graft.operators
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftshim
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-import scala.collection.mutable.ArrayBuffer
-
-/** The per-round policy of graft's iterative DataFrame loops (CC, k-core,
-  * LPA, PageRank, BPE, the HNSW walks), in one place. Lloyd's k-means does
-  * not run here: its state is k centroid arrays on the driver, and each of
-  * its rounds is one `treeAggregate` ([[KMeans]]), described through
-  * [[described]] like these rounds.
+/** The per-round policy of graft's iterative DataFrame loops (k-core,
+  * LPA, PageRank, BPE, the HNSW walks, the fsimage path walk), in one
+  * place. Two loops keep their own state and use only its parts: Lloyd's
+  * k-means keeps k centroid arrays on the driver, each of its rounds one
+  * `treeAggregate` ([[KMeans]]); connected components keeps every level's
+  * label map for the final composition, each level one [[eagerSum]]
+  * leaf ([[Dedup.connectedComponents]]). Both describe their jobs through
+  * [[described]] like these rounds, and CC refuses a loop that does not
+  * settle with [[NotConverged]], as [[untilStable]] does.
   *
   * Each round's state re-enters the next round's plan as a fresh leaf: a
   * local checkpoint whose size estimate is either measured (an eager
@@ -39,39 +42,31 @@ import scala.collection.mutable.ArrayBuffer
   *     and skips the rounds that would repeat it.
   *   - [[untilStable]]: rounds until a `changed` count is zero. That
   *     count is the one action that materializes a round; once it ran,
-  *     the previous round's state and this round's [[Round.eager]]
-  *     leaves are dead and are freed by the RDDs created for them (not
-  *     left to the ContextCleaner, which only runs after a GC — a capped
-  *     heap OOM'd on that race). Non-convergence is refused.
+  *     the previous round's state is dead and is freed by the RDD created
+  *     for it (not left to the ContextCleaner, which only runs after a
+  *     GC — a capped heap OOM'd on that race). Non-convergence is refused.
   *
   * Jobs a round runs are described `"<loop> round <r>"`; the caller's
   * job description is restored afterwards and the job group is never
   * touched (benchmarks attribute their counters by job group). */
 object Rounds {
 
-  /** [[untilStable]]'s refusal of a loop still changing after `maxIters`
-    * rounds; a caller that knows why a loop cannot converge catches this
-    * and names the cause. */
+  /** The refusal of a loop still changing after `maxIters` rounds; a
+    * caller that knows why a loop cannot converge catches this and names
+    * the cause. */
   final class NotConverged(loop: String, maxIters: Int, changed: Long)
     extends IllegalArgumentException(s"$loop: not converged after " +
       s"maxIters = $maxIters rounds ($changed still changing); raise maxIters")
-
-  /** One [[untilStable]] round: [[eager]] for values it reads twice. */
-  final class Round private[Rounds] {
-    private[Rounds] val blocks = ArrayBuffer.empty[RDD[_]]
-
-    /** [[Rounds.eager]], freed once the round's state has materialized. */
-    def eager(df: DataFrame): DataFrame = {
-      val (leaf, rdd) = graftshim.eagerLeaf(df)
-      blocks += rdd
-      leaf
-    }
-  }
 
   /** `df` materialized now (one job) at `level` as a leaf with measured
     * statistics — for a value read more than once. */
   def eager(df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame =
     graftshim.eagerLeaf(df, level)._1
+
+  /** [[eager]], and the sum of `measure` over the leaf's rows, taken by
+    * the same one job. */
+  def eagerSum(df: DataFrame)(measure: InternalRow => Long): (DataFrame, Long) =
+    graftshim.eagerLeafSum(df, measure)
 
   /** The row count an [[eager]] leaf measured when it materialized. */
   def measuredRows(leaf: DataFrame): Long =
@@ -118,18 +113,17 @@ object Rounds {
     * `maxIters` of them; refuses (rather than returning a partial
     * fixpoint) when the count is still positive after the last one. */
   def untilStable(loop: String, init: DataFrame, maxIters: Int)(
-      step: (DataFrame, Round) => DataFrame)(changed: DataFrame => Long): DataFrame = {
+      step: DataFrame => DataFrame)(changed: DataFrame => Long): DataFrame = {
     var (state, size, dead) = roundZero(init)
     var (c, r) = (1L, 0)
     while (c > 0 && r < maxIters) {
       r += 1
-      val round = new Round
       val (next, rdd) = described(init.sparkSession, s"$loop round $r") {
-        val leaf = graftshim.lazyLeaf(step(state, round), size)
+        val leaf = graftshim.lazyLeaf(step(state), size)
         c = changed(leaf._1)
         leaf
       }
-      (dead ++ round.blocks).foreach(_.unpersist(blocking = false))
+      dead.foreach(_.unpersist(blocking = false))
       dead = Some(rdd)
       state = next
     }

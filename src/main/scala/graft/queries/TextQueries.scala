@@ -873,8 +873,8 @@ object TextQueries extends QueryModule {
   val dedupNgramJaccardSql: String = ngramJaccardSqlAt(100)
 
   /** Near-dup clusters: Jaccard pairs (≥ 0.20) → [[graft.operators.Dedup
-    * .connectedComponents]] min-label propagation → one canonical doc per
-    * cluster. This is the step that turns candidate pairs into an actual
+    * .connectedComponents]] (per-partition union-find) → one canonical doc
+    * per cluster. This is the step that turns candidate pairs into an actual
     * dedup decision (keep canonical, drop the rest) — the shape a corpus
     * cleaning pipeline materializes at 100 TB. Singletons keep their own
     * id as cluster_id. */

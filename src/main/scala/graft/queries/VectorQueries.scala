@@ -1063,8 +1063,8 @@ object VectorQueries extends QueryModule {
     * OTHER's top-k (mutuality kills the hub-node false positives plain
     * radius cuts suffer) AND cos ≥ [[MutualCosBp]]; candidates then
     * collapse into clusters via
-    * [[graft.operators.Dedup.connectedComponents]] (min-label
-    * propagation, the d_dedup_clusters recipe). Output: one row per
+    * [[graft.operators.Dedup.connectedComponents]] (per-partition
+    * union-find, the d_dedup_clusters recipe). Output: one row per
     * clustered vector (singletons dropped) with its cluster id and
     * size. Scale shape: the graph build's cell equi-join + bounded
     * TopK, one self-join of the O(n·k) edge list on (a, b), CC over the

@@ -372,7 +372,7 @@ object FsImageSource {
       col("parent").as("cursor"))
     val rounds = 32 - Integer.numberOfLeadingZeros(maxDepth - 1) // ⌈log₂ maxDepth⌉
     val walked =
-      try Rounds.untilStable("fsimage dir paths", init, rounds) { (s, _) =>
+      try Rounds.untilStable("fsimage dir paths", init, rounds) { s =>
         s.join(s.select(col("id").as("cursor"), col("suffix").as("up"),
             col("cursor").as("next")), Seq("cursor"), "left_outer")
           .select(col("id"), concat(coalesce(col("up"), lit("")), col("suffix")).as("suffix"),

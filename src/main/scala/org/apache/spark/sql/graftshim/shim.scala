@@ -58,10 +58,23 @@ package object graftshim {
     * blocks (the one job that materializes them) times the row width
     * Catalyst assumes. */
   def eagerLeaf(df: Dataset[_], level: StorageLevel = StorageLevel.MEMORY_AND_DISK)
-      : (DataFrame, RDD[_]) = leaf(df, level, { lr =>
-    val rows = BigInt(lr.rdd.count())
+      : (DataFrame, RDD[_]) = leaf(df, level, lr => measured(lr, lr.rdd.count()))
+
+  /** [[eagerLeaf]] at MEMORY_AND_DISK whose one materializing job also
+    * sums `measure` over the leaf's rows; returns the leaf and that sum. */
+  def eagerLeafSum(df: Dataset[_], measure: catalyst.InternalRow => Long): (DataFrame, Long) = {
+    var sum = 0L
+    val (leaf, _) = this.leaf(df, StorageLevel.MEMORY_AND_DISK, { lr =>
+      val (rows, s) = lr.rdd.aggregate((0L, 0L))(
+        (a, r) => (a._1 + 1, a._2 + measure(r)), (a, b) => (a._1 + b._1, a._2 + b._2))
+      sum = s
+      measured(lr, rows)
+    })
+    (leaf, sum)
+  }
+
+  private def measured(lr: LogicalRDD, rows: BigInt): Statistics =
     Statistics(EstimationUtils.getOutputSize(lr.output, rows), Some(rows))
-  })
 
   /** True iff `df` already is a checkpoint (or other RDD-backed) leaf. */
   def isLeaf(df: Dataset[_]): Boolean = df.queryExecution.analyzed.isInstanceOf[LogicalRDD]

@@ -18,11 +18,26 @@ class RoundsSpec extends SparkSpecBase {
     ((0L until n - 1).map(i => (i, i + 1)).toDF("doc_a", "doc_b"),
       (0L until n).toDF("doc_id"))
 
+  /** Min-label propagation over an n-node path on [[Rounds.untilStable]]:
+    * plain hops, one path node per round, each round's plan a self-join of
+    * the previous round's state. `log` sees every round's plan. */
+  private def pathCc(n: Long, log: DataFrame => DataFrame = identity): DataFrame = {
+    val sym = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("nbr", "doc_id")
+    Rounds.untilStable("path cc", (0L until n).map(i => (i, i))
+        .toDF("doc_id", "cluster_id"), maxIters = 2 * n.toInt) { s =>
+      val l = s.select(col("doc_id"), col("cluster_id"))
+      log(sym.join(l, "doc_id").select(col("nbr").as("doc_id"), col("cluster_id"))
+        .unionByName(l).groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
+        .join(l.select(col("doc_id"), col("cluster_id").as("prev")), "doc_id"))
+    }(s => s.filter(col("cluster_id") < col("prev")).count())
+  }
+
   test("CC on a 2,000-node path keeps every round leaf's size estimate below 2^63") {
-    // every plan an action runs during CC (each round's step, eager
-    // leaves and changed count) reads the previous rounds' state as
-    // checkpoint leaves; a leaf that inherits the estimate of the plan it
-    // cut squares it per self-join round (11,387 bits by round 4)
+    // every plan an action runs during CC (each level's leaf and the final
+    // composition) and during a min-label loop of several self-joining
+    // rounds reads earlier state as checkpoint leaves; a leaf that
+    // inherits the estimate of the plan it cut squares it per self-join
+    // round (11,387 bits by round 4)
     val sizes = new java.util.concurrent.ConcurrentLinkedQueue[BigInt]()
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
@@ -34,13 +49,15 @@ class RoundsSpec extends SparkSpecBase {
     }
     val (pairs, verts) = path(2000)
     spark.listenerManager.register(listener)
-    val (out, jobs) =
-      try jobsDuring(Dedup.connectedComponents(pairs, verts).collect())
+    val ((out, _), (hops, jobs)) =
+      try (jobsDuring(Dedup.connectedComponents(pairs.repartition(3), verts).collect()),
+        jobsDuring(pathCc(12).filter(col("cluster_id") =!= 0L).count()))
       finally spark.listenerManager.unregister(listener)
     val got = out.get.map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == 2000 && got.values.forall(_ == 0L))
-    val rounds = jobs.filter(_.startsWith("cc round ")).distinct
-    assert(rounds.size >= 3, s"expected several CC rounds, saw $rounds")
+    assert(hops.get == 0L)
+    val rounds = jobs.filter(_.startsWith("path cc round ")).distinct
+    assert(rounds.size >= 3, s"expected several self-joining rounds, saw $rounds")
     import scala.jdk.CollectionConverters._
     val all = sizes.asScala.toSeq
     assert(all.nonEmpty)
@@ -49,12 +66,14 @@ class RoundsSpec extends SparkSpecBase {
 
   test("untilStable names maxIters when it refuses a loop that has not converged") {
     val e = intercept[IllegalArgumentException] {
-      Rounds.untilStable("toy", spark.range(4).toDF("x"), maxIters = 3)((s, _) => s)(_ => 1L)
+      Rounds.untilStable("toy", spark.range(4).toDF("x"), maxIters = 3)(s => s)(_ => 1L)
     }
     assert(e.getMessage.contains("maxIters = 3"), e.getMessage)
-    val (pairs, verts) = path(40) // diameter 39: one round cannot settle it
+    // the path's edges dealt to 2 partitions: neither holds all of it, so
+    // one level cannot settle it
+    val (pairs, verts) = path(40)
     val cc = intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(pairs, verts, maxIters = 1)
+      Dedup.connectedComponents(pairs.repartition(2), verts, maxIters = 1)
     }
     assert(cc.getMessage.contains("maxIters = 1"), cc.getMessage)
   }
@@ -62,26 +81,25 @@ class RoundsSpec extends SparkSpecBase {
   test("after a run only the final round's leaves are still persisted") {
     val sc = spark.sparkContext
     sc.getPersistentRDDs.foreach { case (_, r) => r.unpersist(true) }
-    // a toy countdown: every round makes one eager leaf and one state
-    // leaf; 8 rounds, of which only the last state may stay
+    // a toy countdown: every round makes one state leaf; 8 rounds, of
+    // which only the last state may stay
     val done = Rounds.untilStable("toy", spark.range(8).toDF("x"), maxIters = 20) {
-      (s, round) => round.eager(s.select(greatest(col("x") - 1, lit(0L)).as("x")))
+      s => s.select(greatest(col("x") - 1, lit(0L)).as("x"))
     }(_.filter(col("x") > 0).count())
     assert(sc.getPersistentRDDs.size == 1, sc.getPersistentRDDs.values.mkString(", "))
     assert(done.agg(max(col("x"))).head().getLong(0) == 0L) // keeps `done` reachable above
     sc.getPersistentRDDs.foreach { case (_, r) => r.unpersist(true) }
-    // CC over a diameter-19 chain (several rounds of 3 eager leaves and a
-    // state each): besides the final round's state only the two staged
-    // edge tables (the pair checkpoint and its symmetric layout) may
-    // remain, and those two are unreachable once CC returns, so the
-    // ContextCleaner may already have freed them
+    // CC over a diameter-19 chain in 3 partitions: its result composes
+    // every level's label map, so exactly its level leaves remain, one
+    // per level, and nothing else it made
     val (pairs, verts) = path(20)
-    val cc = Dedup.connectedComponents(pairs, verts)
-    assert(cc.collect().length == 20)
+    val (cc, jobs) = jobsDuring(Dedup.connectedComponents(pairs.repartition(3), verts))
+    val levels = jobs.filter(_.startsWith("cc round ")).distinct.size
+    assert(cc.get.collect().length == 20)
     val residue = sc.getPersistentRDDs.size
-    assert(residue >= 1 && residue <= 3, s"$residue persisted RDDs left after CC — " +
-      "superseded round checkpoints are leaking to the async cleaner")
-    assert(cc.count() == 20) // keeps the final state reachable above
+    assert(levels >= 2 && residue == levels, s"$residue persisted RDDs left after " +
+      s"$levels CC levels: ${sc.getPersistentRDDs.values.mkString(", ")}")
+    assert(cc.get.count() == 20) // keeps the level leaves reachable above
   }
 
   test("a fixed loop runs no more jobs per round than Lpa.propagateLaid did before Rounds") {
@@ -151,17 +169,9 @@ class RoundsSpec extends SparkSpecBase {
   }
 
   test("per-round planning time stays bounded on a long path graph") {
-    val n = 24L
-    val sym = (0L until n - 1).flatMap(i => Seq((i, i + 1), (i + 1, i))).toDF("nbr", "doc_id")
     // untilStable: plain min-label hops, one path node per round
     val cc = new PlanLog
-    val labels = Rounds.untilStable("path cc", (0L until n).map(i => (i, i))
-        .toDF("doc_id", "cluster_id"), maxIters = 2 * n.toInt) { (s, _) =>
-      val l = s.select(col("doc_id"), col("cluster_id"))
-      cc(sym.join(l, "doc_id").select(col("nbr").as("doc_id"), col("cluster_id"))
-        .unionByName(l).groupBy(col("doc_id")).agg(min(col("cluster_id")).as("cluster_id"))
-        .join(l.select(col("doc_id"), col("cluster_id").as("prev")), "doc_id"))
-    }(s => s.filter(col("cluster_id") < col("prev")).count())
+    val labels = pathCc(24, cc(_))
     assert(labels.filter(col("cluster_id") =!= 0L).count() == 0L)
     cc.assertBounded("untilStable")
     // nested: a 2-core peel of a 40-node path loses its two ends per round
