@@ -15,7 +15,7 @@ import graft.functions.IECBinaryImpl
   *             dupnames | du | compaction | ext | sections | snapshots |
   *             refs | diffs | openfiles | cachepools | cache | secrets |
   *             diff (image-to-image namespace diff: `diff <before>
-  *             --against <after>`; -p/-distributed apply to both sides) |
+  *             --against <after>`; -p applies to both sides) |
   *             incrsummary | incrhistogram (after-image report maintained
   *             from the before image + diff delta, O(|diff|) — same
   *             two-image call shape as diff)
@@ -36,19 +36,24 @@ import graft.functions.IECBinaryImpl
   *   -a <age>          age filter like 60d / 12h / 1y (userusage)
   *   -u <user>         user (userusage)
   *   --out <dir>       output dir for csv/json
-  *   --distributed     use the ranged-parallel fsimage loader; summary,
-  *                     growth, ext and dupnames without -p skip its path
-  *                     resolution (no column they read needs a path)
+  *   --distributed     accepted for old command lines; selects nothing
   * }}}
+  *
+  * Every command loads through [[FsImageSource.inodesDistributed]];
+  * summary, growth, ext and dupnames without -p skip its path resolution
+  * (no column they read needs a path). A zlib-compressed image inflates
+  * its INODE and INODE_DIR sections once into hidden side files next to
+  * the image (`.<image>.graft-INODE`, reused while newer than the image),
+  * so the image's directory must be writable.
   */
 object Tool {
 
   /** The commands whose report reads neither `path` nor `depth`
     * (`summaryByUser`: owner and type/size sums, `-fun` filters on owner;
     * `growthProfile`: mtime; `extensionReport` and `dupNames`: the inode
-    * name). With `--distributed` and no `-p` subtree they run on the
-    * loader's parsed rows, paths pending: resolving every directory path
-    * costs the load a dozen Spark jobs that such a report never reads.
+    * name). With no `-p` subtree they run on the loader's parsed rows,
+    * paths pending: resolving every directory path costs the load a
+    * dozen Spark jobs that such a report never reads.
     * Every other command, and every `-p` run, resolves paths first. */
   private val PathFree = Set("summary", "growth", "ext", "dupnames")
 
@@ -69,7 +74,8 @@ object Tool {
   /** Command dispatch (separated from main so specs can drive every
     * command end-to-end against a generated image without stopping the
     * shared session). `paths` carries repeated `-p` occurrences; a lone
-    * `-p a,b` in `opts` is equivalent (both forms union the subtrees). */
+    * `-p a,b` in `opts` is equivalent (both forms union the subtrees).
+    * No switch in `flags` changes the result. */
   def run(spark: org.apache.spark.sql.SparkSession, cmd: String, image: String,
           opts: Map[String, String], flags: Set[String],
           paths: Seq[String] = Seq.empty): DataFrame = {
@@ -87,14 +93,25 @@ object Tool {
         FsImageSource.delegationKeys(spark, image))
       case _           => ()
     }
-    import org.apache.spark.sql.functions.{col, lit}
-    val dirs =
-      if (paths.nonEmpty) paths.flatMap(_.split(",")).distinct
-      else opts.getOrElse("-p", "/").split(",").toSeq
+    val dirs = subtrees(opts, paths)
     val all =
-      if (!flags.contains("--distributed")) FsImageSource.inodes(spark, image)
-      else if (PathFree(cmd) && dirs == Seq("/")) FsImageSource.inodesPending(spark, image).rows
+      if (PathFree(cmd) && dirs == Seq("/")) FsImageSource.inodesPending(spark, image).rows
       else FsImageSource.inodesDistributed(spark, image)
+    report(spark, cmd, image, all, opts, dirs)
+  }
+
+  /** The `-p` subtrees: repeated `-p` occurrences, else a lone `-p a,b`,
+    * else "/". */
+  private[graft] def subtrees(opts: Map[String, String], paths: Seq[String]): Seq[String] =
+    if (paths.nonEmpty) paths.flatMap(_.split(",")).distinct
+    else opts.getOrElse("-p", "/").split(",").toSeq
+
+  /** `cmd`'s report over `all`, the image's inode rows, restricted to the
+    * `dirs` subtrees. */
+  private[graft] def report(spark: org.apache.spark.sql.SparkSession, cmd: String,
+                            image: String, all: DataFrame, opts: Map[String, String],
+                            dirs: Seq[String]): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
     // require a '/' boundary after the prefix: -p /data must match
     // /data and /data/x but NOT the sibling /database
     def subtree(df: DataFrame, pathCol: String): DataFrame =
@@ -123,14 +140,11 @@ object Tool {
     // image-to-image namespace diff — what changed between two fsimages
     // (added/removed/modified by path): `diff <before> --against <after>`.
     // Positional arg 2 is the BEFORE image (consistent with every other
-    // command's image slot); -p restricts both sides to the subtree;
-    // --distributed applies to both loads (the DiffBench-soaked shape).
+    // command's image slot); -p restricts both sides to the subtree.
     if (cmd == "diff" || cmd == "incrsummary" || cmd == "incrhistogram") {
       val after = opts.getOrElse("--against",
         throw new IllegalArgumentException(s"$cmd needs --against <afterImage>"))
-      val afterAll =
-        if (flags.contains("--distributed")) FsImageSource.inodesDistributed(spark, after)
-        else FsImageSource.inodes(spark, after)
+      val afterAll = FsImageSource.inodesDistributed(spark, after)
       val diff = Reports.namespaceDiff(inodes, subtree(afterAll, "path"))
       return cmd match {
         case "diff" => diff
@@ -206,7 +220,8 @@ object Tool {
 
   /** Boolean switches (no operand). Everything else starting with `-` is a
     * `-key value` pair — a positional walk, not sliding(2,2), so a switch
-    * before a pair can't shift the pairing. */
+    * before a pair can't shift the pairing. `--distributed` is kept so old
+    * command lines parse; it selects nothing. */
   private val Switches = Set("--distributed", "-v", "-vv")
 
   /** → (opts, flags, paths): repeated `-p` accumulates into `paths` in

@@ -2024,30 +2024,34 @@ object Analytics extends QueryModule {
     * sfDir, cutover conf): r13, the same staging posture as
     * [[coOrderSymStaged]]. The cutover conf is part
     * of the key so a spec that forces the shuffled plan can never be
-    * served the broadcast-mode layout. */
+    * served the broadcast-mode layout. Its jobs, the AQE stages that
+    * the edge list and the degree join submit included, are described
+    * `pagerank staging`. */
   private val pagerankCoreMemo =
     new graft.operators.ChainMemo[(DataFrame, DataFrame, Long, Boolean)]()
   private def pagerankCore(spark: SparkSession, sfDir: String)
       : (DataFrame, DataFrame, Long, Boolean) =
     pagerankCoreMemo.getOrBuild(spark,
       s"$sfDir|${graft.operators.GraphScale.broadcastMaxNodes(spark)}") {
-      // memoized checkpoint BEFORE the union doubles the lineage (and deg
-      // doubles it again): without it the expansion+distinct re-derives 4×
-      // inside er's materialization (measured: half the query's wall time)
-      val und = coOrderEdges(spark, sfDir)
-      val e = und.union(und.select(col("v").as("u"), col("u").as("v")))
-      // deg is |V| rows — checkpointed so the node count AND the er join
-      // both reuse one materialization
-      val deg = e.groupBy(col("u")).agg(count(lit(1)).as("outd")).localCheckpoint()
-      val nn = deg.count() // measured node count drives the cutover
-      val useBroadcast = graft.operators.GraphScale.useBroadcast(spark, nn)
-      // exactly ONE edge-table materialization in either mode (the r8 soak
-      // lesson: checkpointing a base copy AND a repartitioned copy held the
-      // 2× edge table and starved a capped heap). Checkpointed as it comes
-      // in either mode: a checkpoint keeps no layout (LayoutSpec), so each
-      // of the 5 shuffled-mode merge joins shuffles and sorts it anyway
-      val er = e.join(deg, "u").localCheckpoint()
-      (er, deg, nn, useBroadcast)
+      graft.operators.Rounds.described(spark, "pagerank staging") {
+        // memoized checkpoint BEFORE the union doubles the lineage (and deg
+        // doubles it again): without it the expansion+distinct re-derives 4×
+        // inside er's materialization (measured: half the query's wall time)
+        val und = coOrderEdges(spark, sfDir)
+        val e = und.union(und.select(col("v").as("u"), col("u").as("v")))
+        // deg is |V| rows — checkpointed so the node count AND the er join
+        // both reuse one materialization
+        val deg = e.groupBy(col("u")).agg(count(lit(1)).as("outd")).localCheckpoint()
+        val nn = deg.count() // measured node count drives the cutover
+        val useBroadcast = graft.operators.GraphScale.useBroadcast(spark, nn)
+        // exactly ONE edge-table materialization in either mode (the r8 soak
+        // lesson: checkpointing a base copy AND a repartitioned copy held the
+        // 2× edge table and starved a capped heap). Checkpointed as it comes
+        // in either mode: a checkpoint keeps no layout (LayoutSpec), so each
+        // of the 5 shuffled-mode merge joins shuffles and sorts it anyway
+        val er = e.join(deg, "u").localCheckpoint()
+        (er, deg, nn, useBroadcast)
+      }
     }
 
   def qPagerank(spark: SparkSession, sfDir: String,

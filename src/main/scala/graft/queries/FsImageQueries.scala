@@ -6,12 +6,15 @@ import graft.sources.FsImageSource
 import graft.sources.fsimage.ImageGen
 
 /** Driver-oracle coverage for the fsimage source (SURVEY §2.1): a
-  * deterministic generated image is parsed end-to-end (EC consumed-size
-  * formula, ACL decode, symlinks, atime/storage-policy all exercised), the
-  * parsed rows are exported to parquet, and the DuckDB oracle re-derives
-  * the same aggregate from that export. The specs in FsImageSourceSpec pin
-  * the parser to the generator's independently-computed ground truth; this
-  * query additionally runs it through the driver's correctness gate. */
+  * deterministic generated image is loaded end-to-end through
+  * [[FsImageSource.inodesDistributed]], the loader the CLI and the
+  * benchmark run (EC consumed-size formula, ACL decode, symlinks,
+  * atime/storage-policy, path resolution all exercised); the loaded rows
+  * are exported to parquet once, every query reads that export back, and
+  * the DuckDB oracle re-derives the same result from the same files. The
+  * specs in FsImageSourceSpec pin the loader to the generator's
+  * independently-computed ground truth; these queries additionally run it
+  * through the driver's correctness gate. */
 object FsImageQueries extends QueryModule {
 
   /** Absolute paths — the oracle SQL runs in DuckDB outside the JVM, so
@@ -55,32 +58,37 @@ object FsImageQueries extends QueryModule {
     }
   }
 
-  /** Parses the image and (re)writes the parquet export the DuckDB oracle
-    * reads — any fsimage query may run first, so all go through here.
-    * Memoized per session (the Namespace.memo pattern): Bench's min-of-2
-    * over three fsimage queries would otherwise re-parse the image and
-    * rewrite the export six times. */
+  /** Loads the image and writes the parquet exports the DuckDB oracle
+    * reads, once per process (the image is deterministic and the export
+    * dirs are this process's own) — any fsimage query may run first, so
+    * all go through here. Returns the inode export read back, memoized per
+    * session (the Namespace.memo pattern): the queries read the rows the
+    * oracle reads, and none re-runs the load's jobs. A second session
+    * rewriting the export would pull the files from under the first
+    * session's read-back, hence one write per process. */
+  private var exported = false
   private val exportMemo = scala.collection.mutable.Map[String, DataFrame]()
   private def ensureExport(spark: SparkSession): DataFrame = synchronized {
-    exportMemo.getOrElseUpdate(
-      org.apache.spark.sql.graftshim.sessionKey(spark), {
-        ensureImage()
-        FsImageSource.snapshotDiffs(spark, ImagePath)
-          .write.mode("overwrite").parquet(DiffExportDir)
-        FsImageSource.filesUnderConstruction(spark, ImagePath)
-          .write.mode("overwrite").parquet(UcExportDir)
-        FsImageSource.cachePools(spark, ImagePath)
-          .write.mode("overwrite").parquet(PoolExportDir)
-        FsImageSource.cacheDirectives(spark, ImagePath)
-          .write.mode("overwrite").parquet(DirectiveExportDir)
-        FsImageSource.delegationKeys(spark, ImagePath)
-          .write.mode("overwrite").parquet(KeyExportDir)
-        FsImageSource.delegationTokens(spark, ImagePath)
-          .write.mode("overwrite").parquet(TokenExportDir)
-        val df = FsImageSource.inodes(spark, ImagePath)
-        df.write.mode("overwrite").parquet(ExportDir)
-        df
-      })
+    if (!exported) {
+      ensureImage()
+      FsImageSource.snapshotDiffs(spark, ImagePath)
+        .write.mode("overwrite").parquet(DiffExportDir)
+      FsImageSource.filesUnderConstruction(spark, ImagePath)
+        .write.mode("overwrite").parquet(UcExportDir)
+      FsImageSource.cachePools(spark, ImagePath)
+        .write.mode("overwrite").parquet(PoolExportDir)
+      FsImageSource.cacheDirectives(spark, ImagePath)
+        .write.mode("overwrite").parquet(DirectiveExportDir)
+      FsImageSource.delegationKeys(spark, ImagePath)
+        .write.mode("overwrite").parquet(KeyExportDir)
+      FsImageSource.delegationTokens(spark, ImagePath)
+        .write.mode("overwrite").parquet(TokenExportDir)
+      FsImageSource.inodesDistributed(spark, ImagePath)
+        .write.mode("overwrite").parquet(ExportDir)
+      exported = true
+    }
+    exportMemo.getOrElseUpdate(org.apache.spark.sql.graftshim.sessionKey(spark),
+      spark.read.parquet(ExportDir))
   }
 
   /** Whole-image accounting over the parsed inode table: type counts,

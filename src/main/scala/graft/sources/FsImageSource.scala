@@ -1,6 +1,5 @@
 package graft.sources
 
-import java.io.RandomAccessFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, concat, length, lit, translate, when}
 import org.apache.spark.storage.StorageLevel
@@ -14,44 +13,43 @@ import graft.sources.fsimage.FsImageFormat._
   * n_xattr, xattrs), so every report in [[graft.operators.Reports]] runs
   * unchanged on real namenode metadata.
   *
-  * Two loaders:
-  *  - [[inodes]]: driver-side parse (the reference's posture — its
-  *    FsImageLoader is fully in-memory, lib/.../core/FsImageLoader.java:286).
-  *    Right for ad-hoc images up to a few million inodes.
-  *  - [[inodesDistributed]]: the scale path. The driver never holds a
-  *    section, the directory tree or anything O(#dirs) or O(#inodes): it
-  *    streams the INODE/INODE_DIR sections once to find message-aligned
-  *    chunk boundaries (O(buffer) memory, [[FsImageFormat.scanRanges]];
-  *    chunk = min(targetChunkBytes, max(64 KiB, section / cores)), so a
-  *    small section still spreads over the cluster's cores) and ships only
-  *    (start, end) offset pairs; each task reads its own byte range via the
-  *    Hadoop FileSystem API ([[FsImageFormat.readRange]] — file:// and DFS
-  *    paths alike) and parses it straight into encoded [[FsInode]] rows,
-  *    path and depth pending. That parse is a stage of its own,
-  *    [[inodesPending]], which scans the INODE_DIR ranges only when its
-  *    edges are read: a report that reads neither `path` nor `depth`
-  *    (`graft.Tool`'s `summary`, `growth`, `ext` and `dupnames` without a
-  *    `-p` subtree) parses in its own first stage and starts none of the
-  *    jobs below. [[inodesDistributed]] is that stage plus path
-  *    resolution:
-  *     1. a narrow (id, ftype, name, parent) table, joined from those rows
-  *        and the INODE_DIR edges, materialized once with measured
-  *        statistics ([[graft.operators.Rounds.eager]]), so the joins
-  *        against it and the dir-path table plan from their real size —
-  *        broadcasts at this repository's image sizes, shuffles at fleet
-  *        scale;
-  *     2. directory paths by pointer jumping ([[dirPathsDistributed]]:
-  *        O(log depth) rounds on [[graft.operators.Rounds.untilStable]]);
-  *     3. every inode's (id, path, depth) from its parent's path, measured
-  *        the same way, and one join of the wide rows to it.
-  *    The O(#inodes) materializations (the parsed rows, the narrow and the
-  *    path tables) are DISK_ONLY: they stream to the disk store and never
-  *    compete with execution memory — the difference between completing
-  *    and OOMing under a 2 GiB cap at 10⁷–10⁸ inodes. Zlib images are not
-  *    splittable, so their sections are inflated once, streaming, to a
-  *    side file that the ranged reads then target — on a cluster, point
-  *    the side file at shared storage (or store scale images uncompressed,
-  *    which is also the Hadoop default for large fsimages).
+  * One inode loader, [[inodesDistributed]], serves the CLI, the oracle
+  * export and the benchmark. HFSA's FsImageLoader parses the image and
+  * walks its tree in driver memory (PAPER.md §1); here the driver never
+  * holds a section, the directory tree or anything O(#dirs) or
+  * O(#inodes): it streams the INODE/INODE_DIR sections once to find
+  * message-aligned chunk boundaries (O(buffer) memory,
+  * [[FsImageFormat.scanRanges]]; chunk = min(targetChunkBytes, max(64 KiB,
+  * section / cores)), so a small section still spreads over the cluster's
+  * cores) and ships only (start, end) offset pairs; each task reads its
+  * own byte range via the Hadoop FileSystem API ([[FsImageFormat.readRange]]
+  * — file:// and DFS paths alike) and parses it straight into encoded
+  * [[FsInode]] rows, path and depth pending. That parse is a stage of its
+  * own, [[inodesPending]], which scans the INODE_DIR ranges only when its
+  * edges are read: a report that reads neither `path` nor `depth`
+  * (`graft.Tool`'s `summary`, `growth`, `ext` and `dupnames` without a
+  * `-p` subtree) parses in its own first stage and starts none of the
+  * jobs below. [[inodesDistributed]] is that stage plus path resolution:
+  *  1. a narrow (id, ftype, name, parent) table, joined from those rows
+  *     and the INODE_DIR edges, materialized once with measured
+  *     statistics ([[graft.operators.Rounds.eager]]), so the joins
+  *     against it and the dir-path table plan from their real size —
+  *     broadcasts at this repository's image sizes, shuffles at fleet
+  *     scale;
+  *  2. directory paths by pointer jumping ([[dirPathsDistributed]]:
+  *     O(log depth) rounds on [[graft.operators.Rounds.untilStable]]);
+  *  3. every inode's (id, path, depth) from its parent's path, measured
+  *     the same way, and one join of the wide rows to it.
+  * The O(#inodes) materializations (the parsed rows, the narrow and the
+  * path tables) are DISK_ONLY: they stream to the disk store and never
+  * compete with execution memory — the difference between completing and
+  * OOMing under a 2 GiB cap at 10⁷–10⁸ inodes. Zlib images are not
+  * splittable, so their sections are inflated once, streaming, to a side
+  * file next to the image that the ranged reads then target — on a
+  * cluster, point the side file at shared storage (or store scale images
+  * uncompressed, which is also the Hadoop default for large fsimages).
+  * The small sections (string table, EC policies, snapshots, caches,
+  * secrets, …) are read whole on the driver ([[sectionBytes]]).
   */
 object FsImageSource {
 
@@ -71,10 +69,16 @@ object FsImageSource {
   /** Hadoop's fixed root inode id (INodeId.ROOT_INODE_ID). */
   val RootInodeId = 16385L
 
-  def inodes(spark: SparkSession, imagePath: String): DataFrame = {
-    val rows = loadRows(imagePath)
-    import spark.implicits._
-    spark.createDataset(rows).toDF()
+  /** One small section's uncompressed bytes, read whole on the driver
+    * through the session's Hadoop FileSystem (the resolution the
+    * executors' ranged reads use); None when the image has no such
+    * section. */
+  private[sources] def sectionBytes(spark: SparkSession, imagePath: String,
+                                    name: String): Option[Array[Byte]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val summary = FsImageFormat.readSummary(imagePath, conf)
+    summary.sections.find(_.name == name).map(sec => FsImageFormat.maybeDecompress(
+      FsImageFormat.readSection(imagePath, sec, conf), summary.codec))
   }
 
   final case class FsSection(name: String, length: Long, offset: Long,
@@ -100,18 +104,10 @@ object FsImageSource {
     * snapshotted directory's inode id — join on inodes.id for the path).
     * Empty when the image has no SNAPSHOT section. */
   def snapshots(spark: SparkSession, imagePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
     import spark.implicits._
-    val rows = summary.sections.find(_.name == "SNAPSHOT") match {
-      case None => Seq.empty[FsSnapshot]
-      case Some(sec) =>
-        val bytes = FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, sec, conf), summary.codec)
-        FsImageFormat.parseSnapshots(bytes).snapshots
-          .map(s => FsSnapshot(s.snapshotId, s.name, s.rootId))
-    }
-    spark.createDataset(rows).toDF()
+    spark.createDataset(sectionBytes(spark, imagePath, "SNAPSHOT").toSeq.flatMap(bytes =>
+      FsImageFormat.parseSnapshots(bytes).snapshots
+        .map(s => FsSnapshot(s.snapshotId, s.name, s.rootId)))).toDF()
   }
 
   final case class FsSnapshotDiff(inode_id: Long, diff_type: String,
@@ -123,19 +119,11 @@ object FsImageSource {
     * directories. Join inode_id on inodes.id for the live path. Empty
     * when the image carries no snapshot diffs. */
   def snapshotDiffs(spark: SparkSession, imagePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
     import spark.implicits._
-    val rows = summary.sections.find(_.name == "SNAPSHOT_DIFF") match {
-      case None => Seq.empty[FsSnapshotDiff]
-      case Some(sec) =>
-        val bytes = FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, sec, conf), summary.codec)
-        FsImageFormat.parseSnapshotDiffs(bytes).map(d =>
-          FsSnapshotDiff(d.inodeId, d.diffType, d.snapshotId, d.fileSize,
-            d.name, d.nCreated, d.nDeleted))
-    }
-    spark.createDataset(rows).toDF()
+    spark.createDataset(sectionBytes(spark, imagePath, "SNAPSHOT_DIFF").toSeq.flatMap(bytes =>
+      FsImageFormat.parseSnapshotDiffs(bytes).map(d =>
+        FsSnapshotDiff(d.inodeId, d.diffType, d.snapshotId, d.fileSize,
+          d.name, d.nCreated, d.nDeleted)))).toDF()
   }
 
   final case class FsUcEntry(inode_id: Long, full_path: String)
@@ -148,18 +136,10 @@ object FsImageSource {
     * no open files. The reference drops this section entirely
     * (FsImageLoader.java loads only string/inode/dir sections). */
   def filesUnderConstruction(spark: SparkSession, imagePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
     import spark.implicits._
-    val rows = summary.sections.find(_.name == "FILES_UNDERCONSTRUCTION") match {
-      case None => Seq.empty[FsUcEntry]
-      case Some(sec) =>
-        val bytes = FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, sec, conf), summary.codec)
-        FsImageFormat.parseFilesUnderConstruction(bytes)
-          .map(u => FsUcEntry(u.inodeId, u.fullPath))
-    }
-    spark.createDataset(rows).toDF()
+    spark.createDataset(sectionBytes(spark, imagePath, "FILES_UNDERCONSTRUCTION").toSeq
+      .flatMap(bytes => FsImageFormat.parseFilesUnderConstruction(bytes)
+        .map(u => FsUcEntry(u.inodeId, u.fullPath)))).toDF()
   }
 
   final case class FsCachePool(pool: String, owner: String, grp: String,
@@ -171,14 +151,8 @@ object FsImageSource {
                                     expiry_ms: Long, expiry_relative: Boolean)
 
   private def cacheSection(spark: SparkSession, imagePath: String)
-      : Option[FsImageFormat.CacheManagerSection] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
-    summary.sections.find(_.name == "CACHE_MANAGER").map { sec =>
-      FsImageFormat.parseCacheManager(FsImageFormat.maybeDecompress(
-        FsImageFormat.readSection(imagePath, sec, conf), summary.codec))
-    }
-  }
+      : Option[FsImageFormat.CacheManagerSection] =
+    sectionBytes(spark, imagePath, "CACHE_MANAGER").map(FsImageFormat.parseCacheManager)
 
   /** CACHE_MANAGER pools — the `hdfs cacheadmin -listPools` readout
     * (name, owner/group, mode octal, byte limit, max relative expiry,
@@ -210,14 +184,8 @@ object FsImageSource {
                                      master_key_id: Int, expiry_ms: Long)
 
   private def secretSection(spark: SparkSession, imagePath: String)
-      : Option[FsImageFormat.SecretManagerSection] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
-    summary.sections.find(_.name == "SECRET_MANAGER").map { sec =>
-      FsImageFormat.parseSecretManager(FsImageFormat.maybeDecompress(
-        FsImageFormat.readSection(imagePath, sec, conf), summary.codec))
-    }
-  }
+      : Option[FsImageFormat.SecretManagerSection] =
+    sectionBytes(spark, imagePath, "SECRET_MANAGER").map(FsImageFormat.parseSecretManager)
 
   /** SECRET_MANAGER delegation keys — master-key inventory (id, expiry,
     * key LENGTH only; material never leaves the parser). Empty when the
@@ -252,37 +220,24 @@ object FsImageSource {
     * inside that snapshot. Empty when the image has no renames across
     * snapshot boundaries. */
   def inodeReferences(spark: SparkSession, imagePath: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val summary = FsImageFormat.readSummary(imagePath, conf)
     import spark.implicits._
-    val rows = summary.sections.find(_.name == "INODE_REFERENCE") match {
-      case None => Seq.empty[FsInodeRef]
-      case Some(sec) =>
-        val bytes = FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, sec, conf), summary.codec)
-        FsImageFormat.parseInodeReferences(bytes)
-          .map(r => FsInodeRef(r.referredId, r.name, r.dstSnapshotId, r.lastSnapshotId))
-    }
-    spark.createDataset(rows).toDF()
+    spark.createDataset(sectionBytes(spark, imagePath, "INODE_REFERENCE").toSeq.flatMap(bytes =>
+      FsImageFormat.parseInodeReferences(bytes)
+        .map(r => FsInodeRef(r.referredId, r.name, r.dstSnapshotId, r.lastSnapshotId)))).toDF()
   }
 
   /** Merged EC policy table: the built-in five plus whatever the image's
     * ERASURE_CODING section adds (custom ids ≥ 64) — so custom-policy
     * files resolve real names and parity-true consumed sizes instead of
     * the documented `ec#id` / data-bytes fallback. Tiny (couple of
-    * policies), read driver-side, broadcast to the distributed loader. */
-  private def ecPolicies(summary: FsImageFormat.FileSummary, imagePath: String,
-                         conf: org.apache.hadoop.conf.Configuration)
+    * policies), read driver-side, broadcast to the loader's tasks. */
+  private def ecPolicies(spark: SparkSession, imagePath: String)
       : Map[Int, FsImageFormat.EcPolicy] =
-    summary.sections.find(_.name == "ERASURE_CODING") match {
-      case None => FsImageFormat.EcPoliciesById
-      case Some(sec) =>
-        val custom = FsImageFormat.parseErasureCoding(FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, sec, conf), summary.codec))
-        FsImageFormat.EcPoliciesById ++ custom.map(p => p.id -> p)
-    }
+    FsImageFormat.EcPoliciesById ++ sectionBytes(spark, imagePath, "ERASURE_CODING").toSeq
+      .flatMap(FsImageFormat.parseErasureCoding).map(p => p.id -> p)
 
-  private def toInode(i: RawInode, path: String, strings: StringTables,
+  /** One parsed inode as an [[FsInode]] row at `path`. */
+  private[sources] def toInode(i: RawInode, path: String, strings: StringTables,
                       policies: Map[Int, FsImageFormat.EcPolicy] =
                         FsImageFormat.EcPoliciesById): FsInode =
     FsInode(path, i.name,
@@ -303,52 +258,10 @@ object FsImageSource {
       i.nsQuota, i.dsQuota, i.preferredBlockSize,
       i.underConstruction, i.ucClient, i.ucMachine)
 
-  /** Iterative memoized upward path walk, O(n) total — iterative (not
-    * recursive) so pathological directory depths can't overflow the stack,
-    * with a cycle guard so a corrupt image's parent loop raises a
-    * diagnosable error instead of recursing forever. */
-  private def pathResolver(byId: Map[Long, RawInode],
-                           parentOf: Long => Option[Long]): Long => String = {
-    val memo = new java.util.HashMap[Long, String]()
-    (start: Long) => {
-      if (start == RootInodeId || !byId.contains(start)) "/"
-      else {
-        val cached = memo.get(start)
-        if (cached != null) cached
-        else {
-          val seen = new java.util.HashSet[java.lang.Long]()
-          var chain = List.empty[Long] // head = nearest-root unresolved id
-          var id = start
-          var base: String = null
-          while (base == null) {
-            if (id == RootInodeId || !byId.contains(id)) base = "/"
-            else {
-              val c = memo.get(id)
-              if (c != null) base = c
-              else {
-                if (!seen.add(id)) throw new IllegalStateException(
-                  s"fsimage directory tree has a parent cycle at inode $id")
-                chain ::= id
-                id = parentOf(id).getOrElse(RootInodeId)
-              }
-            }
-          }
-          var p = base
-          chain.foreach { cid =>
-            p = (if (p == "/") "" else p) + "/" + byId(cid).name
-            memo.put(cid, p)
-          }
-          p
-        }
-      }
-    }
-  }
-
   /** Hard cap on directory-tree depth for the distributed path walk —
     * far above HDFS reality (dfs.namenode.fs-limits.max-directory-items
     * trees run ~10–40 deep); a walk that has not resolved by then means the
-    * image's parent edges form a cycle, and it raises the same diagnosis
-    * the driver loader's [[pathResolver]] cycle guard does. */
+    * image's parent edges form a cycle, and it raises that diagnosis. */
   private val MaxTreeDepth = 1024
 
   /** Distributed dir id → absolute path by pointer jumping on
@@ -356,10 +269,10 @@ object FsImageSource {
     * path(cursor) + suffix; a round joins the state to itself on cursor =
     * id, so after r rounds a cursor has jumped 2ʳ links and a tree of
     * depth d resolves in ⌈log₂ d⌉ rounds. A cursor that reaches root, or an
-    * id the table lacks (a dangling parent), attaches at root, exactly like
-    * the driver loader's [[pathResolver]]. Each round's one action is its
-    * count of unresolved rows — the only value the driver holds; a parent
-    * cycle never resolves, so the round cap raises the cycle diagnosis.
+    * id the table lacks (a dangling parent), attaches at root. Each
+    * round's one action is its count of unresolved rows — the only value
+    * the driver holds; a parent cycle never resolves, so the round cap
+    * raises the cycle diagnosis.
     *
     * @param dirs (id, name, parent) for every non-root directory; parent
     *             is RootInodeId when the image carries no edge for it
@@ -420,13 +333,8 @@ object FsImageSource {
     val secs = summary.sections.map(s => s.name -> s).toMap
 
     // String table: tiny (distinct users/groups/ACL names) — in-memory.
-    val strings = {
-      val st = secs.get("STRING_TABLE")
-        .map(s => FsImageFormat.maybeDecompress(
-          FsImageFormat.readSection(imagePath, s, hadoopConf), summary.codec))
-        .getOrElse(Array.emptyByteArray)
-      FsImageFormat.parseStringTable(st)
-    }
+    val strings = FsImageFormat.parseStringTable(
+      sectionBytes(spark, imagePath, "STRING_TABLE").getOrElse(Array.emptyByteArray))
 
     // Ranged-readable view of the INODE / INODE_DIR sections: the image
     // itself when uncompressed; a streamed-inflated side file per section
@@ -517,7 +425,7 @@ object FsImageSource {
     }
     // EC policy table (built-ins + the image's ERASURE_CODING section) and
     // string table: tiny, read once on the driver, broadcast
-    val bcPolicies = sc.broadcast(ecPolicies(summary, imagePath, hadoopConf))
+    val bcPolicies = sc.broadcast(ecPolicies(spark, imagePath))
     val bcStrings = sc.broadcast(strings)
 
     new Parsed(
@@ -540,8 +448,8 @@ object FsImageSource {
     val wide = parsed.rows.localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
 
     // The narrow (id, ftype, name, parent) table, parent root-attached
-    // when the image carries no edge for the inode (the driver loader's
-    // semantics); measured, so the joins below plan from its real size.
+    // when the image carries no edge for the inode; measured, so the joins
+    // below plan from its real size.
     val narrow = Rounds.eager(wide.select("id", "ftype", "name")
       .join(parsed.edges, Seq("id"), "left_outer")
       .withColumn("parent", coalesce(col("parent"), lit(RootInodeId))), StorageLevel.DISK_ONLY)
@@ -564,32 +472,5 @@ object FsImageSource {
 
     // One join of the wide rows to (id, path, depth), FsInode's columns.
     wide.drop("path", "depth").join(paths, "id").select(wide.columns.map(col).toIndexedSeq: _*)
-  }
-
-  /** Parses the image into namespace rows (driver-side). */
-  def loadRows(imagePath: String): Seq[FsInode] = {
-    val raf = new RandomAccessFile(imagePath, "r")
-    try {
-      val summary = FsImageFormat.readSummary(raf)
-      val secs = summary.sections.map(s => s.name -> s).toMap
-      def sec(name: String): Array[Byte] =
-        secs.get(name)
-          .map(s => FsImageFormat.maybeDecompress(FsImageFormat.readSection(raf, s), summary.codec))
-          .getOrElse(Array.emptyByteArray)
-
-      val strings = FsImageFormat.parseStringTable(sec("STRING_TABLE"))
-      val policies = FsImageFormat.EcPoliciesById ++
-        FsImageFormat.parseErasureCoding(sec("ERASURE_CODING")).map(p => p.id -> p)
-      val raw = FsImageFormat.parseInodes(sec("INODE"), policies).toVector
-      val dirEntries = FsImageFormat.parseDirEntries(sec("INODE_DIR")).toVector
-
-      val parentOf = new java.util.HashMap[Long, Long]()
-      dirEntries.foreach(e => e.children.foreach(c => parentOf.put(c, e.parent)))
-      val byId = raw.map(i => i.id -> i).toMap
-
-      val pathOf = pathResolver(byId,
-        id => if (parentOf.containsKey(id)) Some(parentOf.get(id).longValue()) else None)
-      raw.map(i => toInode(i, pathOf(i.id), strings, policies))
-    } finally raf.close()
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources.fsimage
 
-import java.io.{InputStream, RandomAccessFile}
+import java.io.InputStream
 import java.nio.ByteBuffer
 import scala.collection.mutable.ArrayBuffer
 
@@ -256,20 +256,9 @@ object FsImageFormat {
 
   // ----------------------------------------------------------------- parse
 
-  /** Reads the FileSummary from the image tail. */
-  def readSummary(raf: RandomAccessFile): FileSummary = {
-    val fileLen = raf.length()
-    raf.seek(fileLen - 4)
-    val summaryLen = raf.readInt()
-    val blob = new Array[Byte](summaryLen)
-    raf.seek(fileLen - 4 - summaryLen)
-    raf.readFully(blob)
-    parseSummaryBlob(blob)
-  }
-
-  /** Hadoop-FS variant — resolves the path exactly like the executor-side
-    * [[readRange]] does, so the distributed loader works on DFS paths (the
-    * java.io readers only see the driver's local filesystem). */
+  /** Reads the FileSummary from the image tail through the Hadoop
+    * FileSystem API — the path resolves exactly like the executor-side
+    * [[readRange]], so one path string serves local and DFS images. */
   def readSummary(path: String, conf: org.apache.hadoop.conf.Configuration): FileSummary = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(conf)
@@ -314,20 +303,8 @@ object FsImageFormat {
     FileSummary(ondisk, layout, codec, sections.result())
   }
 
-  def readSummary(path: String): FileSummary = {
-    val raf = new RandomAccessFile(path, "r")
-    try readSummary(raf) finally raf.close()
-  }
-
-  def readSection(raf: RandomAccessFile, s: Section): Array[Byte] = {
-    val out = new Array[Byte](s.length.toInt)
-    raf.seek(s.offset)
-    raf.readFully(out)
-    out
-  }
-
-  /** Hadoop-FS variant of [[readSection]] (driver side of the distributed
-    * loader — same path resolution as the executors'). */
+  /** One whole section's on-disk bytes, read on the driver (same path
+    * resolution as the executors'). */
   def readSection(path: String, s: Section,
                   conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -443,15 +420,8 @@ object FsImageFormat {
   }
 
   /** Streaming view of one section's uncompressed bytes — O(buffer) memory
-    * regardless of section size. */
-  def sectionRawStream(path: String, s: Section, codec: Option[String]): InputStream = {
-    val fin = new java.io.FileInputStream(path)
-    fin.getChannel.position(s.offset)
-    wrapSection(new BoundedInputStream(fin, s.length), codec)
-  }
-
-  /** Hadoop-FS variant of [[sectionRawStream]] — used by the distributed
-    * loader so driver pre-scans resolve the path like executors do. */
+    * regardless of section size; the driver's pre-scans resolve the path
+    * through the Hadoop FileSystem API like the executors do. */
   def sectionRawStream(path: String, s: Section, codec: Option[String],
                        conf: org.apache.hadoop.conf.Configuration): InputStream = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -592,7 +562,7 @@ object FsImageFormat {
   }
 
   /** Scans delimited-message boundaries without parsing bodies (in-memory
-    * variant of [[scanRanges]], used by tests and the driver loader). */
+    * variant of [[scanRanges]], used by tests). */
   def messageOffsets(bytes: Array[Byte]): Array[Int] = {
     val out = Array.newBuilder[Int]
     val r = new Reader(bytes, 0, bytes.length)
@@ -604,22 +574,15 @@ object FsImageFormat {
     out.result()
   }
 
-  /** Parses every whole delimited INode message in [from, to).
-    * `policies` extends the built-in EC table with the image's
-    * ERASURE_CODING section ([[parseErasureCoding]]) so custom-policy
-    * files get the real consumed-size formula. */
+  /** Parses every whole delimited INode message in [from, to). The INODE
+    * section is a header {lastInodeId=1, numInodes=2} then delimited INode
+    * {type=1, id=2, name=3, file=4, directory=5, symlink=6}; a range
+    * starts after the header. `policies` extends the built-in EC table
+    * with the image's ERASURE_CODING section ([[parseErasureCoding]]) so
+    * custom-policy files get the real consumed-size formula. */
   def parseInodeRange(bytes: Array[Byte], from: Int, to: Int,
                       policies: Map[Int, EcPolicy] = EcPoliciesById): Iterator[RawInode] =
     delimited(bytes, from, to - from).map(parseOneInode(_, policies))
-
-  /** INODE section: header {lastInodeId=1, numInodes=2} then delimited
-    * INode {type=1, id=2, name=3, file=4, directory=5, symlink=6}. */
-  def parseInodes(bytes: Array[Byte],
-                  policies: Map[Int, EcPolicy] = EcPoliciesById): Iterator[RawInode] = {
-    val it = delimited(bytes, 0, bytes.length)
-    if (it.hasNext) it.next() // header — counts not needed, we stream
-    it.map(parseOneInode(_, policies))
-  }
 
   private val NoAcl = Array.empty[Int]
   private val NoXAttrNames = Array.empty[Int]
@@ -779,13 +742,10 @@ object FsImageFormat {
         uc, ucClient, ucMachine)
   }
 
-  /** Parses every whole delimited DirEntry message in [from, to). */
+  /** Parses every whole delimited DirEntry message in [from, to) of the
+    * INODE_DIR section: delimited DirEntry {parent=1, children=2 packed}. */
   def parseDirRange(bytes: Array[Byte], from: Int, to: Int): Iterator[DirEntry] =
     delimited(bytes, from, to - from).map(parseOneDirEntry)
-
-  /** INODE_DIR section: delimited DirEntry {parent=1, children=2 packed}. */
-  def parseDirEntries(bytes: Array[Byte]): Iterator[DirEntry] =
-    delimited(bytes, 0, bytes.length).map(parseOneDirEntry)
 
   private def parseOneDirEntry(m: Reader): DirEntry = {
       var parent = 0L

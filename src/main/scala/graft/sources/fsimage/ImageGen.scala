@@ -43,7 +43,11 @@ object ImageGen {
                            // this set yields exact "modified" ground
                            // truth for the namespace-diff soak (same
                            // path, different size)
-                           sizeShiftEvery: Int = 0)
+                           sizeShiftEvery: Int = 0,
+                           // every section a zlib stream, FileSummary
+                           // codec = DefaultCodec (Hadoop's
+                           // dfs.image.compress)
+                           zlib: Boolean = false)
 
   /** SECRET_MANAGER ground truth: master key `keyId` (1-based) expires
     * at a staggered per-key day boundary. */
@@ -168,7 +172,11 @@ object ImageGen {
     val located = Seq.newBuilder[(String, Long, Long)]
     def section(name: String)(f: W => Unit): Unit = {
       val cs = new CountingStream(buf)
-      f(new W(cs))
+      if (zlib) {
+        val deflater = new java.util.zip.Deflater()
+        val z = new java.util.zip.DeflaterOutputStream(cs, deflater, 1 << 16)
+        f(new W(z)); z.finish(); deflater.end()
+      } else f(new W(cs))
       located += ((name, cs.count, offset))
       offset += cs.count
     }
@@ -493,6 +501,7 @@ object ImageGen {
     summary.delimited { fsm =>
       fsm.tag(1, 0).varint(1)
       fsm.tag(2, 0).varint(0xFFFFFFBFL) // layout -65 as uint
+      if (zlib) fsm.str(3, FsImageFormat.ZlibCodec)
       located.result().foreach { case (name, len, off) =>
         fsm.msg(4)(sec => { sec.str(1, name); sec.tag(2, 0).varint(len); sec.tag(3, 0).varint(off) })
       }

@@ -219,7 +219,7 @@ class ToolAndSqlSpec extends SparkSpecBase {
       assert(diff("added") == 2L)
       assert(diff("removed") == 5L)
       assert(diff("modified") == 2L) // files 0 and 100
-      // --distributed drives both loads through the ranged loader
+      // --distributed is accepted and selects nothing
       val dist = Tool.run(spark, "diff", a, Map("--against" -> b),
         Set("--distributed")).groupBy("change").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -233,7 +233,7 @@ class ToolAndSqlSpec extends SparkSpecBase {
       import graft.operators.Reports
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(_.toSeq).toSet
-      val afterIno = FsImageSource.inodes(spark, b)
+      val afterIno = FsImageSource.inodesDistributed(spark, b)
       val incrSum = Tool.run(spark, "incrsummary", a, Map("--against" -> b), Set.empty)
       assert(rows(incrSum) === rows(
         Reports.filesSummary(afterIno).orderBy("owner")))

@@ -7,8 +7,11 @@ import org.apache.spark.sql.functions._
 /** Validates the from-scratch fsimage parser against the reference's
   * documented test image content (reference lib/.../core/
   * FsImageLoaderTest.java:27-62 + loadAndVisit expectations:
-  * 16 files, 14 dirs, Σ size 356417536, 3 users, 3 groups). */
+  * 16 files, 14 dirs, Σ size 356417536, 3 users, 3 groups), and the
+  * ranged loader against the driver-side walk in
+  * [[FsImageSourceSpec.Reference]]. */
 class FsImageSourceSpec extends SparkSpecBase {
+  import FsImageSourceSpec.Reference
 
   private val H3 = "/root/reference/lib/src/test/resources/fsi_small_h3_2.img"
   private val H2 = "/root/reference/lib/src/test/resources/fsi_small_h2x.img"
@@ -18,7 +21,7 @@ class FsImageSourceSpec extends SparkSpecBase {
   for ((label, img) <- Seq("hadoop3" -> H3, "hadoop2" -> H2)) {
     test(s"$label image: counts, sizes, owners match the documented content") {
       assume(haveImages)
-      val df = FsImageSource.inodes(spark, img).cache()
+      val df = FsImageSource.inodesDistributed(spark, img).cache()
 
       val byType = df.groupBy("ftype").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -52,7 +55,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     assume(haveImages)
     val img = "/root/reference/lib/src/test/resources/fsimage_d800_f210k_compressed.img"
     val t0 = System.nanoTime()
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img).cache()
     val byType = df.groupBy("ftype").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     info(f"parse+load took ${(System.nanoTime() - t0) / 1e9}%.2fs: $byType")
@@ -69,12 +72,34 @@ class FsImageSourceSpec extends SparkSpecBase {
   test("distributed ranged parse agrees with the driver loader exactly") {
     assume(haveImages)
     val img = "/root/reference/lib/src/test/resources/fsimage_d800_f210k_compressed.img"
-    val a = FsImageSource.inodes(spark, img)
+    val a = Reference.inodes(spark, img)
     val b = FsImageSource.inodesDistributed(spark, img, parallelism = 7)
     assert(b.count() == a.count())
     // symmetric difference on the full row set must be empty
     assert(a.exceptAll(b).count() == 0)
     assert(b.exceptAll(a).count() == 0)
+  }
+
+  test("zlib (DefaultCodec) image: sections inflate to side files, rows match the reference") {
+    import graft.sources.fsimage.{FsImageFormat, ImageGen}
+    val dir = java.nio.file.Files.createTempDirectory("graft_zlib").toFile
+    val img = new java.io.File(dir, "z.img").getPath
+    val gen = ImageGen.write(img, ImageGen.GenSpec(nDirs = 6, nFiles = 300,
+      chainDirs = 3, aclEvery = 10, ecEvery = 7, ucEvery = 20, zlib = true))
+    assert(FsImageSource.sections(spark, img).select("codec").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq(FsImageFormat.ZlibCodec))
+    val df = FsImageSource.inodesDistributed(spark, img, parallelism = 3).cache()
+    assert(df.count() == 1 + 6 + 300)
+    assert(df.agg(sum("csize")).head.getLong(0) == gen.sumConsumed)
+    assert(df.filter(col("path") === "/dir_0/dir_1/dir_2").count() == 1)
+    // the reference inflates whole sections in memory; the loader ranges
+    // over side files it inflated next to the image
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(df).isEmpty && df.exceptAll(ref).isEmpty)
+    for (sec <- Seq("INODE", "INODE_DIR"))
+      assert(new java.io.File(dir, s".z.img.graft-$sec").isFile, sec)
+    df.unpersist()
+    dir.listFiles().foreach(_.delete())
   }
 
   test("synthetic 1M-inode image: ranged distributed parse, counts, reports") {
@@ -85,15 +110,14 @@ class FsImageSourceSpec extends SparkSpecBase {
     val expectedSum = graft.sources.fsimage.ImageGen.write(img, nDirs, nFiles)
 
     val t0 = System.nanoTime()
-    val driver = FsImageSource.inodes(spark, img)
-    val nD = driver.count()
+    val nD = Reference.rows(spark, img).length.toLong
     val tDriver = (System.nanoTime() - t0) / 1e9
     val t1 = System.nanoTime()
     // small target chunk so the ranged path genuinely runs multi-split
     val dist = FsImageSource.inodesDistributed(spark, img, targetChunkBytes = 4L << 20).cache()
     val nX = dist.count()
     val tDist = (System.nanoTime() - t1) / 1e9
-    info(f"1M inodes: driver=$tDriver%.2fs distributed=$tDist%.2fs")
+    info(f"1M inodes: reference=$tDriver%.2fs distributed=$tDist%.2fs")
     assert(nD == 1 + nDirs + nFiles)
     assert(nX == nD)
 
@@ -115,7 +139,7 @@ class FsImageSourceSpec extends SparkSpecBase {
       ImageGen.GenSpec(nDirs = 5, nFiles = 2000, ecEvery = 3))
     assert(gen.nEcFiles == 667)
 
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img, parallelism = 5).cache()
     // total consumed must equal the generator's independently computed sum
     assert(df.agg(sum(when(col("ftype") === "F", col("csize")))).head.getLong(0) == gen.sumConsumed)
     // EC files: repl=0 but csize > size (parity overhead), policy surfaced
@@ -130,9 +154,9 @@ class FsImageSourceSpec extends SparkSpecBase {
     val p = FsImageFormat.EcPoliciesById(1)
     val b = 7L * (1L << 20) // 7 cells over 6 data units → 2 rows
     assert(FsImageFormat.ecBlockConsumed(b, p) == b + 2L * 3 * (1L << 20))
-    // distributed loader agrees
-    val dist = FsImageSource.inodesDistributed(spark, img, parallelism = 5)
-    assert(dist.exceptAll(df).count() == 0 && df.exceptAll(dist).count() == 0)
+    // the reference walk agrees
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(df).count() == 0 && df.exceptAll(ref).count() == 0)
     df.unpersist()
     new java.io.File(img).delete()
   }
@@ -145,13 +169,13 @@ class FsImageSourceSpec extends SparkSpecBase {
     // quota dirs 0/2/4 — nested quotas must roll inner usage outward
     ImageGen.write(img, ImageGen.GenSpec(nDirs = 6, nFiles = 60,
       chainDirs = 4, quotaEvery = 2))
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img, parallelism = 3).cache()
     assert(df.filter(col("path") === "/dir_0/dir_1/dir_2/dir_3").count() == 1)
     assert(df.filter(col("path") === "/dir_4").count() == 1)
     // files round-robin: i%6==3 → under the chain tail at depth 5
     assert(df.filter(col("path") === "/dir_0/dir_1/dir_2/dir_3/f_3.dat").count() == 1)
-    val dist = FsImageSource.inodesDistributed(spark, img, parallelism = 3)
-    assert(dist.exceptAll(df).count() == 0 && df.exceptAll(dist).count() == 0)
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(df).count() == 0 && df.exceptAll(ref).count() == 0)
     // nested quota rollup: dir_0's namespace usage counts the whole chain
     // below it (dirs 1-3 + their files), not just direct children
     val q = graft.operators.Reports.quotaReport(df).collect()
@@ -170,7 +194,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     val img = new java.io.File(dir, "acl.img").getPath
     ImageGen.write(img, ImageGen.GenSpec(nDirs = 4, nFiles = 100, aclEvery = 10))
 
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img).cache()
     val withAcl = df.filter(col("n_acl") > 0)
     assert(withAcl.filter(col("ftype") === "F").count() == 10)
     assert(withAcl.filter(col("ftype") === "D").count() == 1) // dir_0
@@ -196,7 +220,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     val gen = ImageGen.write(img, ImageGen.GenSpec(nDirs = 4, nFiles = 100, xattrEvery = 10))
     assert(gen.nXattrFiles == 10)
 
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img, parallelism = 3).cache()
     val withX = df.filter(col("n_xattr") > 0)
     assert(withX.filter(col("ftype") === "F").count() == 10)
     assert(withX.filter(col("ftype") === "D").count() == 1) // dir_0
@@ -215,9 +239,9 @@ class FsImageSourceSpec extends SparkSpecBase {
     assert(st.map(_.getAs[String]("path")).toSeq == Seq("/dir_0", "/dir_0/f_0.dat"))
     assert(st.forall(_.getAs[Int]("n_xattr") == 2))
 
-    // distributed loader carries the new columns identically
-    val dist = FsImageSource.inodesDistributed(spark, img, parallelism = 3)
-    assert(dist.exceptAll(df).count() == 0 && df.exceptAll(dist).count() == 0)
+    // the reference walk carries the same columns identically
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(df).count() == 0 && df.exceptAll(ref).count() == 0)
     df.unpersist()
     new java.io.File(img).delete()
   }
@@ -229,7 +253,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     ImageGen.write(img, ImageGen.GenSpec(nDirs = 3, nFiles = 30,
       nSymlinks = 5, withAtime = true))
 
-    val df = FsImageSource.inodes(spark, img).cache()
+    val df = FsImageSource.inodesDistributed(spark, img).cache()
     val links = df.filter(col("ftype") === "S").collect()
     assert(links.length == 5)
     val l0 = links.find(_.getAs[String]("name") == "link_0").get
@@ -263,7 +287,7 @@ class FsImageSourceSpec extends SparkSpecBase {
       (0 until 3).map(i => (i, s"snap_$i")))
     // every snapshot root points at dir_0's inode — resolvable via the
     // inode table (the documented join)
-    val dir0 = FsImageSource.inodes(spark, img)
+    val dir0 = FsImageSource.inodesDistributed(spark, img)
       .filter(col("name") === "dir_0").head.getAs[Long]("id")
     assert(snaps.forall(_.getAs[Long]("root_id") == dir0))
 
@@ -314,7 +338,7 @@ class FsImageSourceSpec extends SparkSpecBase {
 
     val uc = FsImageSource.filesUnderConstruction(spark, img).collect()
     assert(uc.length == 5)
-    val inodes = FsImageSource.inodes(spark, img).cache()
+    val inodes = FsImageSource.inodesDistributed(spark, img).cache()
     // section fullPath must agree with the tree-resolved inode path, and
     // the per-inode feature must mark exactly the section's inodes
     val resolved = inodes.select(col("id"), col("path"), col("under_construction"),
@@ -341,11 +365,9 @@ class FsImageSourceSpec extends SparkSpecBase {
     assert(rep.map(_.getAs[String]("path")).toSeq === rep.map(_.getAs[String]("path")).toSeq.sorted)
     assert(rep.forall(_.getAs[String]("uc_client").startsWith("DFSClient_NONMAPREDUCE_")))
 
-    // distributed loader surfaces the same three UC columns
-    val dist = FsImageSource.inodesDistributed(spark, img)
-      .filter(col("under_construction"))
-      .select(col("id"), col("uc_client")).collect()
-    assert(dist.length == 5 && dist.forall(_.getAs[String]("uc_client").nonEmpty))
+    // the reference walk agrees row for row, the three UC columns included
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(inodes).isEmpty && inodes.exceptAll(ref).isEmpty)
 
     // empty case: no section → empty frame with the documented schema,
     // no inode flagged
@@ -353,8 +375,9 @@ class FsImageSourceSpec extends SparkSpecBase {
     ImageGen.write(img2, ImageGen.GenSpec(nDirs = 2, nFiles = 5))
     val none = FsImageSource.filesUnderConstruction(spark, img2)
     assert(none.count() == 0 && none.columns.toSeq == Seq("inode_id", "full_path"))
-    assert(FsImageSource.inodes(spark, img2).filter(col("under_construction")).count() === 0)
-    assert(Reports.openFiles(FsImageSource.inodes(spark, img2), none).count() === 0)
+    val inodes2 = FsImageSource.inodesDistributed(spark, img2)
+    assert(inodes2.filter(col("under_construction")).count() === 0)
+    assert(Reports.openFiles(inodes2, none).count() === 0)
     inodes.unpersist()
     new java.io.File(img).delete()
     new java.io.File(img2).delete()
@@ -367,7 +390,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     val s = ImageGen.write(img, ImageGen.GenSpec(nDirs = 3, nFiles = 30,
       ecEvery = 4, ecCustom = true))
 
-    val inodes = FsImageSource.inodes(spark, img).cache()
+    val inodes = FsImageSource.inodesDistributed(spark, img).cache()
     val ecRows = inodes.filter(col("ec_policy") =!= "").collect()
     assert(ecRows.length == s.nEcFiles && s.nEcFiles == 8)
     // name DERIVED from codec+schema+cell (the section omits it)
@@ -382,17 +405,13 @@ class FsImageSourceSpec extends SparkSpecBase {
       assert(r.getAs[Long]("csize") ==
         FsImageFormat.ecBlockConsumed(r.getAs[Long]("size"), custom), r.toString)
     }
-    // the distributed loader broadcasts the same policy table
-    val dist = FsImageSource.inodesDistributed(spark, img)
-      .filter(col("ec_policy") =!= "")
-      .agg(org.apache.spark.sql.functions.sum("csize"),
-        org.apache.spark.sql.functions.count("*")).collect()(0)
-    assert(dist.getLong(1) == s.nEcFiles)
-    assert(dist.getLong(0) == ecRows.map(_.getAs[Long]("csize")).sum)
+    // the reference walk, which reads the policy table itself, agrees
+    val ref = Reference.inodes(spark, img)
+    assert(ref.exceptAll(inodes).isEmpty && inodes.exceptAll(ref).isEmpty)
     // without the section, built-in ids keep resolving from the static table
     val img2 = new java.io.File(dir, "builtin_ec.img").getPath
     ImageGen.write(img2, ImageGen.GenSpec(nDirs = 2, nFiles = 8, ecEvery = 4))
-    val builtin = FsImageSource.inodes(spark, img2)
+    val builtin = FsImageSource.inodesDistributed(spark, img2)
       .filter(col("ec_policy") =!= "").collect()
     assert(builtin.length == 2 &&
       builtin.forall(_.getAs[String]("ec_policy") == "RS-6-3-1024k"))
@@ -497,7 +516,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     // report: every directive resolves its file (paths are real), so
     // bytes_needed = size × repl (cacheadmin semantics) and
     // bytes_cached_max = the same fully-cached bound
-    val inodes = FsImageSource.inodes(spark, img).cache()
+    val inodes = FsImageSource.inodesDistributed(spark, img).cache()
     val rep = Reports.cacheReport(inodes,
       FsImageSource.cacheDirectives(spark, img),
       FsImageSource.cachePools(spark, img)).collect()
@@ -555,7 +574,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     assert(refs.filter(_.getAs[Int]("last_snapshot_id") >= 0)
       .forall(_.getAs[String]("name").startsWith("old_name_")))
     // every referred id resolves through the inode table (documented join)
-    val inodeIds = FsImageSource.inodes(spark, img)
+    val inodeIds = FsImageSource.inodesDistributed(spark, img)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(refs.forall(r => inodeIds(r.getAs[Long]("referred_id"))))
 
@@ -571,7 +590,7 @@ class FsImageSourceSpec extends SparkSpecBase {
 
   test("HFSA reports run unchanged on fsimage data") {
     assume(haveImages)
-    val df = FsImageSource.inodes(spark, H3)
+    val df = FsImageSource.inodesDistributed(spark, H3)
 
     val summary = Reports.summaryByUser(df).collect()
     assert(summary.map(_.getAs[String]("owner")).toSet == Set("mm", "root", "foo"))
@@ -593,7 +612,7 @@ class FsImageSourceSpec extends SparkSpecBase {
   test("dir child counts match FsImageData.getNumChildren expectations") {
     assume(haveImages)
     // reference FsImageLoaderTest.java:233-236
-    val counts = Reports.dirChildCounts(FsImageSource.inodes(spark, H3)).collect()
+    val counts = Reports.dirChildCounts(FsImageSource.inodesDistributed(spark, H3)).collect()
       .map(r => r.getAs[String]("dir") -> r.getAs[Long]("n_children")).toMap
     assert(counts("/datalake") == 3)
     assert(counts("/test3") == 3)
@@ -604,7 +623,8 @@ class FsImageSourceSpec extends SparkSpecBase {
 
   test("namespace diff: driver and distributed loads produce IDENTICAL diff rows at 1M inodes") {
     // the DiffBench soak's correctness anchor at spec scale: the SAME
-    // image pair diffed through BOTH loaders must agree row-for-row
+    // image pair diffed through the loader and through the reference walk
+    // (the driver loader) must agree row-for-row
     // (order-independent fingerprint over every column — the ImageBench
     // row-identity recipe), and the counts must equal ImageGen ground
     // truth exactly (adds = new files, removes = dropped symlinks,
@@ -623,7 +643,7 @@ class FsImageSourceSpec extends SparkSpecBase {
         sizeShiftEvery = 1000))
     def diffOf(load: String => org.apache.spark.sql.DataFrame) =
       Reports.namespaceDiff(load(imgA), load(imgB)).localCheckpoint()
-    val dDrv = diffOf(FsImageSource.inodes(spark, _))
+    val dDrv = diffOf(Reference.inodes(spark, _))
     val dDist = diffOf(FsImageSource.inodesDistributed(spark, _))
     def fp(df: org.apache.spark.sql.DataFrame): Long =
       df.select(pmod(xxhash64(df.columns.sorted.map(col): _*),
@@ -648,7 +668,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     graft.sources.fsimage.ImageGen.write(img2, nDirs = 10, nFiles = 120)
 
     val diff = Reports.namespaceDiff(
-      FsImageSource.inodes(spark, img1), FsImageSource.inodes(spark, img2))
+      FsImageSource.inodesDistributed(spark, img1), FsImageSource.inodesDistributed(spark, img2))
     val byChange = diff.groupBy("change").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(byChange("added") == 20) // f_100..f_119
@@ -658,7 +678,7 @@ class FsImageSourceSpec extends SparkSpecBase {
 
   test("summary sort options, user filter, id lookup, per-user buckets") {
     assume(haveImages)
-    val df = FsImageSource.inodes(spark, H3)
+    val df = FsImageSource.inodesDistributed(spark, H3)
 
     // block-count sort puts mm (14 blocks) first; regex filter keeps 2 users
     val byBlocks = Reports.summaryByUser(df, sortBy = "bc").collect()
@@ -680,8 +700,8 @@ class FsImageSourceSpec extends SparkSpecBase {
   test("distributed path walk: cycle guard raises instead of looping; dangling parent root-attaches") {
     import spark.implicits._
     // a → b → a parent cycle in the dir table: the frontier never drains,
-    // so the depth cap must raise the same diagnosis the driver loader's
-    // pathResolver cycle guard gives — never an infinite job loop
+    // so the depth cap must raise the same diagnosis the reference walk's
+    // cycle guard gives — never an infinite job loop
     val cyc = Seq((20000L, "a", 20001L), (20001L, "b", 20000L))
       .toDF("id", "name", "parent")
     val e = intercept[IllegalStateException] {
@@ -690,7 +710,7 @@ class FsImageSourceSpec extends SparkSpecBase {
     assert(e.getMessage.contains("parent cycle"))
 
     // a dir whose parent id is absent from the dir table attaches at
-    // root (the driver loader's semantics), and normal chains resolve
+    // root (the reference walk's semantics), and normal chains resolve
     val dirs = Seq(
       (20010L, "top", FsImageSource.RootInodeId),
       (20011L, "mid", 20010L),
@@ -744,15 +764,91 @@ class FsImageSourceSpec extends SparkSpecBase {
   }
 
   test("Tool summary --distributed on the session image resolves no path") {
-    val (rows, jobs) = jobsDuring(graft.Tool.run(spark, "summary", sessionImage,
-      Map.empty, Set("--distributed")).collect())
-    val byOwner = rows.get
-    assert(byOwner.length == 20)
-    assert(byOwner.map(_.getAs[Long]("n_files")).sum == 30000L)
-    assert(byOwner.map(_.getAs[Long]("n_dirs")).sum == 301L) // root included
-    info(s"${jobs.size} jobs")
-    // 4 jobs (parse + aggregate, the sort's sample, the result); with the
-    // load's path resolution in front it ran 14 here
-    assertJobBudget(jobs, 6)
+    // the switch selects nothing: with and without it, the same route
+    for (flags <- Seq(Set("--distributed"), Set.empty[String])) {
+      val (rows, jobs) = jobsDuring(graft.Tool.run(spark, "summary", sessionImage,
+        Map.empty, flags).collect())
+      val byOwner = rows.get
+      assert(byOwner.length == 20)
+      assert(byOwner.map(_.getAs[Long]("n_files")).sum == 30000L)
+      assert(byOwner.map(_.getAs[Long]("n_dirs")).sum == 301L) // root included
+      info(s"flags $flags: ${jobs.size} jobs")
+      assert(!jobs.exists(_.startsWith("fsimage dir paths")), s"flags $flags: $jobs")
+      // 4 jobs (parse + aggregate, the sort's sample, the result); with the
+      // load's path resolution in front it ran 14 here
+      assertJobBudget(jobs, 6)
+    }
+  }
+}
+
+object FsImageSourceSpec {
+  import graft.sources.fsimage.FsImageFormat
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+
+  /** The driver-side loader [[FsImageSource]] once carried beside the
+    * ranged one (HFSA FsImageLoader's posture): every section read whole
+    * on the driver, every inode parsed in one pass, and paths from an
+    * iterative memoized upward walk over an in-memory parent map. It
+    * shares the message decoders and the row mapping
+    * ([[FsImageSource.toInode]]) with the loader, so what it checks is the
+    * loader's range scans and splits, its zlib side files, its join of
+    * rows to INODE_DIR edges and its distributed path walk. */
+  object Reference {
+    def inodes(spark: SparkSession, imagePath: String): DataFrame = {
+      import spark.implicits._
+      spark.createDataset(rows(spark, imagePath)).toDF()
+    }
+
+    def rows(spark: SparkSession, imagePath: String): Seq[FsImageSource.FsInode] = {
+      def sec(name: String): Array[Byte] =
+        FsImageSource.sectionBytes(spark, imagePath, name).getOrElse(Array.emptyByteArray)
+      val strings = FsImageFormat.parseStringTable(sec("STRING_TABLE"))
+      val policies = FsImageFormat.EcPoliciesById ++
+        FsImageFormat.parseErasureCoding(sec("ERASURE_CODING")).map(p => p.id -> p)
+      val inodeSec = sec("INODE")
+      // the INODE section's first message is its header
+      val first = FsImageFormat.messageOffsets(inodeSec).lift(1).getOrElse(inodeSec.length)
+      val raw = FsImageFormat.parseInodeRange(inodeSec, first, inodeSec.length, policies).toVector
+      val dirSec = sec("INODE_DIR")
+      val parentOf: Map[Long, Long] = FsImageFormat.parseDirRange(dirSec, 0, dirSec.length)
+        .flatMap(e => e.children.iterator.map(_ -> e.parent)).toMap
+      val pathOf = pathResolver(raw.map(i => i.id -> i.name).toMap, parentOf.get)
+      raw.map(i => FsImageSource.toInode(i, pathOf(i.id), strings, policies))
+    }
+
+    /** Iterative memoized upward path walk, O(n) total — iterative (not
+      * recursive) so pathological directory depths can't overflow the
+      * stack, with a cycle guard so a corrupt image's parent loop raises a
+      * diagnosable error instead of recursing forever. An id with no
+      * parent edge, or a parent outside the image, attaches at root. */
+    private def pathResolver(nameOf: Map[Long, String],
+                             parentOf: Long => Option[Long]): Long => String = {
+      val memo = new java.util.HashMap[Long, String]()
+      (start: Long) => {
+        val seen = new java.util.HashSet[java.lang.Long]()
+        var chain = List.empty[Long] // head = nearest-root unresolved id
+        var id = start
+        var base: String = null
+        while (base == null) {
+          if (id == FsImageSource.RootInodeId || !nameOf.contains(id)) base = "/"
+          else {
+            val c = memo.get(id)
+            if (c != null) base = c
+            else {
+              if (!seen.add(id)) throw new IllegalStateException(
+                s"fsimage directory tree has a parent cycle at inode $id")
+              chain ::= id
+              id = parentOf(id).getOrElse(FsImageSource.RootInodeId)
+            }
+          }
+        }
+        var p = base
+        chain.foreach { cid =>
+          p = (if (p == "/") "" else p) + "/" + nameOf(cid)
+          memo.put(cid, p)
+        }
+        p
+      }
+    }
   }
 }

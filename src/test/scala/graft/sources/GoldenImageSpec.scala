@@ -4,9 +4,11 @@ import graft.SparkSpecBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Both fsimage loaders on a committed image, so the parser checks run on
-  * every machine (the real-image cases in [[FsImageSourceSpec]] need
-  * fixtures that are not always present). `fsimage/golden.img` is the
+/** The fsimage loader and the reference walk
+  * ([[FsImageSourceSpec.Reference]], the driver loader of these test
+  * names) on a committed image, so the parser checks run on every machine
+  * (the real-image cases in [[FsImageSourceSpec]] need fixtures that are
+  * not always present). `fsimage/golden.img` is the
   * output of
   * {{{
   * ImageGen.write(path, ImageGen.GenSpec(nDirs = 24, nFiles = 2000,
@@ -18,6 +20,7 @@ import org.apache.spark.sql.functions._
   * counts, written as literals so that neither a parser nor a generator
   * change can move them. */
 class GoldenImageSpec extends SparkSpecBase {
+  import FsImageSourceSpec.Reference
 
   private val Img = getClass.getResource("/fsimage/golden.img").getPath
 
@@ -39,18 +42,14 @@ class GoldenImageSpec extends SparkSpecBase {
     assert(deep.map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("D", 10)))
   }
 
-  test("driver loader matches the generator's totals") {
-    checkTotals(FsImageSource.inodes(spark, Img))
-  }
-
   test("distributed loader matches the generator's totals") {
     checkTotals(FsImageSource.inodesDistributed(spark, Img))
   }
 
   test("every inode-reading Tool command agrees between the two loaders") {
-    // with --distributed, summary/growth/ext/dupnames without -p run on
-    // rows whose paths were never resolved; a command that reads a path
-    // would read "" there and disagree with the driver loader's rows
+    // summary/growth/ext/dupnames without -p run on rows whose paths were
+    // never resolved; a command that reads a path would read "" there and
+    // disagree with the same report over the reference's resolved rows
     val cases: Seq[(String, Map[String, String], Seq[String])] = Seq(
       ("summary", Map.empty, Nil),
       ("summary", Map("-fun" -> "^user(1|2)$", "-s" -> "fc"), Nil),
@@ -72,20 +71,22 @@ class GoldenImageSpec extends SparkSpecBase {
       ("compaction", Map.empty, Nil),
       ("openfiles", Map.empty, Nil),
       ("cache", Map.empty, Nil))
+    val resolved = Reference.inodes(spark, Img)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
     for ((cmd, opts, paths) <- cases) {
-      def rows(flags: Set[String]) =
-        graft.Tool.run(spark, cmd, Img, opts, flags, paths).collect().map(_.toString).sorted.toSeq
-      val driver = rows(Set.empty)
-      assert(rows(Set("--distributed")) == driver, s"$cmd $opts $paths")
+      val want = rows(graft.Tool.report(spark, cmd, Img, resolved, opts,
+        graft.Tool.subtrees(opts, paths)))
+      assert(rows(graft.Tool.run(spark, cmd, Img, opts, Set.empty, paths)) == want,
+        s"$cmd $opts $paths")
       info(s"$cmd ${opts.map { case (k, v) => s"$k $v" }.mkString(" ")} " +
-        s"${paths.map("-p " + _).mkString(" ")}: ${driver.size} rows")
+        s"${paths.map("-p " + _).mkString(" ")}: ${want.size} rows")
     }
   }
 
   test("driver and distributed loaders agree row for row") {
-    val a = FsImageSource.inodes(spark, Img)
+    val a = Reference.inodes(spark, Img)
     val b = FsImageSource.inodesDistributed(spark, Img, parallelism = 3)
-    assert(a.exceptAll(b).isEmpty, "rows only the driver loader produced")
+    assert(a.exceptAll(b).isEmpty, "rows only the reference walk produced")
     assert(b.exceptAll(a).isEmpty, "rows only the distributed loader produced")
   }
 }

@@ -58,7 +58,9 @@ class FsImageFormatSpec extends AnyFunSuite {
       m.msg(5) { d => d.tag(1, 0).varint(42L); d.tag(4, 1).fixed64(0x1ED) }
     }
 
-    val inodes = FsImageFormat.parseInodes(w.toBytes).toVector
+    val bytes = w.toBytes
+    val afterHeader = FsImageFormat.messageOffsets(bytes)(1)
+    val inodes = FsImageFormat.parseInodeRange(bytes, afterHeader, bytes.length).toVector
     assert(inodes.length == 2)
     val f = inodes(0)
     assert(f.id == bigId && f.inodeType == 1 && f.name == "file_π")
@@ -82,7 +84,8 @@ class FsImageFormatSpec extends AnyFunSuite {
       m.tag(1, 0).varint(99)
       m.tag(2, 0).varint(7) // unpacked single
     }
-    val entries = FsImageFormat.parseDirEntries(w.toBytes).toVector
+    val bytes = w.toBytes
+    val entries = FsImageFormat.parseDirRange(bytes, 0, bytes.length).toVector
     assert(entries(0).parent == 16385)
     assert(entries(0).children.toSeq == Seq(16386L, 1L << 40, 3L))
     assert(entries(1).children.toSeq == Seq(7L))
