@@ -4,7 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Scale cutover policy for the iterative-graph family ([[KCore.peel]],
-  * `Analytics.qPagerank`; [[Lpa.propagate]] is always-shuffled).
+  * `Analytics.qPagerank`; [[Lpa.propagate]] is always-shuffled past its
+  * kernel). k-core's plan has three ranges of the staged edge table:
+  *   - up to [[GraphKernel.MaxRows]] rows, the [[GraphKernel]] runs every
+  *     round in one task (LPA's too; PageRank keeps its relational plans);
+  *   - past that, up to [[broadcastMaxNodes]] nodes, relational rounds
+  *     with a broadcast attach;
+  *   - past that, relational rounds through forced merge joins.
   *
   * The per-round broadcast attach — survivor set into a semi-join, rank
   * table into the edge join — is the right plan while the node table is

@@ -10,29 +10,30 @@ import org.apache.spark.sql.functions._
   * subgraph where every node keeps ≥ k neighbors (the standard cohesion
   * screen before community/centrality work).
   *
-  * Distributed shape: the SYMMETRIZED edge table is peeled for at most a
-  * fixed number of [[Rounds.nested]] rounds — each round is one
-  * map-side-combined degree `groupBy` plus two left-semi equi-joins
-  * against the (tiny, auto-broadcast) survivor set. A fixed round budget
-  * (rather than loop-until-converged) keeps the computation expressible
-  * as unrolled SQL for the DuckDB oracle; convergence is not assumed but
-  * CERTIFIED by the caller checking the final minimum degree ≥ k (the
-  * `stable` column in `q_kcore`). Survivor sets are nested, so a round
-  * that keeps every edge of its predecessor is the fixpoint: the peel
-  * stops there (on the perfbench co-order graph after round 4 of 8), and
-  * returns exactly the state the full budget would.
+  * Distributed shape: the SYMMETRIZED edge table is staged once as an
+  * eager leaf, and the peel runs at most a fixed number of synchronous
+  * rounds. A fixed round budget (rather than loop-until-converged) keeps
+  * the computation expressible as unrolled SQL for the DuckDB oracle;
+  * convergence is not assumed but CERTIFIED by the caller checking the
+  * final minimum degree ≥ k (the `stable` column in `q_kcore`). Survivor
+  * sets are nested, so a round that removes nothing is the fixpoint: the
+  * peel stops there (on the perfbench co-order graph after round 4 of 8)
+  * and returns exactly the state the full budget would. Three plans walk
+  * the same trajectory, chosen by the leaf's measured rows:
+  *   - up to [[GraphKernel.MaxRows]] rows (the perfbench graph, and the
+  *     co-order graph through sf0.1 at 2.4M rows), the whole peel is one
+  *     [[GraphKernel]] task inside the caller's action: no round job;
+  *   - past it, [[Rounds.nested]] rounds. Below [[GraphScale]]'s node
+  *     cutover each round is one map-side-combined degree `groupBy` plus
+  *     two left-semi equi-joins against the auto-broadcast survivor set;
+  *   - past the cutover, broadcast builds would accumulate in the driver
+  *     (the failure that OOM'd `q_lpa_communities` at sf1 before
+  *     [[Lpa.propagate]]'s forced-merge fix), so only the |V|-row alive
+  *     set is peeled, through forced merge joins.
   *
-  * At 100 TB: each round is O(|E|) shuffle work on the shrinking edge
-  * table, rounds = peel-cascade depth (measured 6 at both sf0.01 and
-  * sf0.1 on the co-order graph; bounded by graph degeneracy in the
-  * worst case). The per-round survivor attach switches AUTOMATICALLY on
-  * the node count: below [[GraphScale]]'s cutover the survivor set rides
-  * as a broadcast semi-join (map-side filter, no extra shuffle); past
-  * it, broadcast builds would accumulate in the driver — the exact
-  * failure that OOM'd `q_lpa_communities` at sf1 before
-  * [[Lpa.propagate]]'s forced-merge fix — so the peel flips to the LPA
-  * recipe: per round only the |V|-row alive set is peeled, through
-  * forced merge joins. */
+  * At 100 TB: each relational round is O(|E|) shuffle work, rounds =
+  * peel-cascade depth (measured 6 at both sf0.01 and sf0.1 on the
+  * co-order graph; bounded by graph degeneracy in the worst case). */
 object KCore {
 
   /** Peel `sym` (a SYMMETRIZED directed edge table with long columns
@@ -40,42 +41,84 @@ object KCore {
     * `rounds` rounds at threshold `k`. Returns the surviving symmetric
     * edge table. Peeling preserves symmetry: an edge survives iff BOTH
     * endpoints have degree ≥ k, a symmetric criterion, so the result is
-    * again a valid input (idempotent once converged). The broadcast vs
-    * shuffled survivor-attach plan is chosen from the node count (see
-    * [[GraphScale.nodeBound]]); both plans compute the identical
+    * again a valid input (idempotent once converged). A node's degree is
+    * its count of live rows, so a duplicate row counts twice, as
+    * `count(1)` does. The plan (see the object doc) is chosen from the
+    * staged table's measured rows; all three compute the identical
     * trajectory (spec-asserted on every KCoreSpec graph).
     *
-    * `modeOut` receives the chosen plan (`"broadcast"` / `"shuffled"`)
-    * — observability for `KCoreSpec`'s cutover test. A callback rather than a
-    * shared mutable global, so concurrent peels can't clobber each
+    * `modeOut` receives the chosen plan (`"kernel"` / `"broadcast"` /
+    * `"shuffled"`) — observability for `KCoreSpec`. A callback rather
+    * than a shared mutable global, so concurrent peels can't clobber each
     * other's observation. */
   def peel(sym: DataFrame, k: Int, rounds: Int,
            modeOut: String => Unit = _ => ()): DataFrame = {
     checkArgs(k, rounds)
-    // ONE edge materialization serves both plans (the r8 soak lesson: a
+    // ONE edge materialization serves every plan (the r8 soak lesson: a
     // plain checkpoint here plus a repartitioned one inside the shuffled
     // peel held TWO copies of the edge table and starved a capped heap)
     peelStaged(Rounds.eager(sym), k, rounds, modeOut)
   }
 
   /** [[peel]] over an edge table already staged as a [[Rounds.eager]]
-    * leaf, whose measured row count bounds its node count (callers that
-    * stage the table once per session — the co-order graph serves four
+    * leaf, whose measured row count picks the plan (callers that stage
+    * the table once per session — the co-order graph serves four
     * iterative rows — skip re-materializing it per consuming query). */
   def peelStaged(e: DataFrame, k: Int, rounds: Int,
                  modeOut: String => Unit = _ => ()): DataFrame = {
     checkArgs(k, rounds)
-    if (GraphScale.useBroadcast(e.sparkSession, GraphScale.nodeBound(e, "u"))) {
-      modeOut("broadcast"); peelBroadcast(e, k, rounds)
-    } else {
-      modeOut("shuffled"); peelShuffled(e, k, rounds)
-    }
+    if (GraphKernel.fits(e)) { modeOut("kernel"); kernel(e, k, rounds) }
+    else relational(e, k, rounds, modeOut)
   }
 
   private def checkArgs(k: Int, rounds: Int): Unit = {
     require(k >= 1, s"k-core threshold must be >= 1, got $k")
     require(rounds >= 1, s"peel rounds must be >= 1, got $rounds")
   }
+
+  /** The peel in one [[GraphKernel]] task. Each round counts every live
+    * node's rows to live nodes, all against the previous round's live
+    * set, then drops the nodes under `k`; a round that drops none is the
+    * fixpoint. Emits the rows whose two ends both live. */
+  private[operators] def kernel(e: DataFrame, k: Int, rounds: Int): DataFrame =
+    GraphKernel(e, ("u", "v")) { g =>
+      val live = Array.fill(g.n)(true)
+      val deg = new Array[Int](g.n)
+      var (r, dropped) = (0, true)
+      while (dropped && r < rounds) {
+        r += 1
+        var u = 0
+        while (u < g.n) {
+          if (live(u)) {
+            var d = 0
+            var j = g.off(u)
+            while (j < g.off(u + 1)) { if (live(g.adj(j))) d += 1; j += 1 }
+            deg(u) = d
+          }
+          u += 1
+        }
+        dropped = false
+        u = 0
+        while (u < g.n) {
+          if (live(u) && deg(u) < k) { live(u) = false; dropped = true }
+          u += 1
+        }
+      }
+      Iterator.range(0, g.n).filter(live(_)).flatMap { u =>
+        Iterator.range(g.off(u), g.off(u + 1)).map(g.adj(_)).filter(live(_))
+          .map(v => (g.id(u), g.id(v)))
+      }
+    }
+
+  /** The relational peel, broadcast or shuffled by [[GraphScale]]'s node
+    * cutover: the plans of an edge table past [[GraphKernel.MaxRows]]. */
+  private[operators] def relational(e: DataFrame, k: Int, rounds: Int,
+                                    modeOut: String => Unit): DataFrame =
+    if (GraphScale.useBroadcast(e.sparkSession, GraphScale.nodeBound(e, "u"))) {
+      modeOut("broadcast"); peelBroadcast(e, k, rounds)
+    } else {
+      modeOut("shuffled"); peelShuffled(e, k, rounds)
+    }
 
   /** Broadcast plan: per round, the shrinking edge table is filtered by
     * two broadcast left-semi joins against the (small) survivor set. */

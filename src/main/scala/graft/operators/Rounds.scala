@@ -6,10 +6,12 @@ import org.apache.spark.sql.graftshim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-/** The per-round policy of graft's iterative DataFrame loops (k-core,
-  * LPA, PageRank, BPE, the HNSW walks, the fsimage path walk), in one
-  * place. Two loops keep their own state and use only its parts: Lloyd's
-  * k-means keeps k centroid arrays on the driver, each of its rounds one
+/** The per-round policy of graft's iterative DataFrame loops (PageRank,
+  * BPE, the HNSW walks, the fsimage path walk, and k-core and LPA over an
+  * edge table past [[GraphKernel.MaxRows]] rows), in one place. Below that
+  * bound k-core and LPA run every round in one [[GraphKernel]] task and
+  * no round job. Two loops keep their own state and use only its parts:
+  * Lloyd's k-means keeps k centroid arrays on the driver, each of its rounds one
   * `treeAggregate` ([[KMeans]]); connected components keeps every level's
   * label map for the final composition, each level one [[eagerSum]]
   * leaf ([[Dedup.connectedComponents]]). Both describe their jobs through

@@ -1977,14 +1977,19 @@ object Analytics extends QueryModule {
     * per session now serves both (the same ChainMemo posture as the edge
     * list itself — within Bench every query's run 1 still rebuilds it).
     * The job that materializes it also counts its rows, which bound the
-    * node count ([[graft.operators.GraphScale.nodeBound]]). It is not
+    * node count ([[graft.operators.GraphScale.nodeBound]]) and pick the
+    * in-task kernel ([[graft.operators.GraphKernel.fits]]). It is not
     * partitioned or sorted first: a checkpoint keeps no layout
-    * (`LayoutSpec`), so the merge joins downstream shuffle it anyway. */
+    * (`LayoutSpec`), so the merge joins downstream shuffle it anyway. Its
+    * jobs, the edge list's AQE stages included, are described `co-order
+    * staging`. */
   private val symStagedMemo = new graft.operators.ChainMemo[DataFrame]()
   private def coOrderSymStaged(spark: SparkSession, sfDir: String): DataFrame =
     symStagedMemo.getOrBuild(spark, sfDir) {
-      val und = coOrderEdges(spark, sfDir)
-      graft.operators.Rounds.eager(und.union(und.select(col("v").as("u"), col("u").as("v"))))
+      graft.operators.Rounds.described(spark, "co-order staging") {
+        val und = coOrderEdges(spark, sfDir)
+        graft.operators.Rounds.eager(und.union(und.select(col("v").as("u"), col("u").as("v"))))
+      }
     }
 
   def qGraphTriangles(spark: SparkSession, sfDir: String): DataFrame =

@@ -25,7 +25,7 @@ object FsImageQueries extends QueryModule {
     * oracle reads whatever THIS process exported, and two concurrent
     * Verify/Bench processes no longer race on a shared parquet rewrite
     * (observed as a transient hash mismatch in r4). */
-  private val BaseDir =
+  private[queries] val BaseDir =
     new java.io.File("target/fsimage-oracle").getAbsolutePath
   private val Gen = ImageGen.GenSpec(nDirs = 50, nFiles = 5000,
     ecEvery = 4, aclEvery = 7, xattrEvery = 5, nSymlinks = 10,
@@ -65,10 +65,13 @@ object FsImageQueries extends QueryModule {
     * session (the Namespace.memo pattern): the queries read the rows the
     * oracle reads, and none re-runs the load's jobs. A second session
     * rewriting the export would pull the files from under the first
-    * session's read-back, hence one write per process. */
+    * session's read-back, hence one write per process. Each call first
+    * removes old exports of processes that have ended
+    * ([[sweepDeadExports]]). */
   private var exported = false
   private val exportMemo = scala.collection.mutable.Map[String, DataFrame]()
-  private def ensureExport(spark: SparkSession): DataFrame = synchronized {
+  private[queries] def ensureExport(spark: SparkSession): DataFrame = synchronized {
+    sweepDeadExports()
     if (!exported) {
       ensureImage()
       FsImageSource.snapshotDiffs(spark, ImagePath)
@@ -90,6 +93,23 @@ object FsImageQueries extends QueryModule {
     exportMemo.getOrElseUpdate(org.apache.spark.sql.graftshim.sessionKey(spark),
       spark.read.parquet(ExportDir))
   }
+
+  /** Removes the export dirs (`p<PID>`) of processes no longer alive,
+    * once untouched for [[ExportGraceMs]]. Every process writes its own
+    * export, so without this each Verify, Bench or spec JVM would leave
+    * ~450 KB behind. An export has to outlive the DuckDB compare of the
+    * run that wrote it, which reads it after that run's JVM has exited,
+    * hence the grace. A live process's dir, this one's included, stays. */
+  private def sweepDeadExports(): Unit = {
+    val cutoff = System.currentTimeMillis() - ExportGraceMs
+    Option(new java.io.File(BaseDir).listFiles()).toSeq.flatten
+      .filter(d => d.isDirectory && d.getName.matches("p\\d{1,18}") && d.lastModified < cutoff)
+      .filterNot(d => ProcessHandle.of(d.getName.drop(1).toLong).isPresent)
+      .foreach(org.apache.commons.io.FileUtils.deleteQuietly)
+  }
+
+  /** How long a dead process's export is kept after its last write. */
+  private[queries] val ExportGraceMs = 60L * 60 * 1000
 
   /** Whole-image accounting over the parsed inode table: type counts,
     * size/consumed/blocks sums (consumed covers the EC parity formula),

@@ -9,7 +9,9 @@ import org.apache.spark.sql.DataFrame
   * (6 falls first, which drops 5 to degree 1, which drops 4) — one
   * round is provably not enough, so the test pins the iterative part,
   * not just the degree filter. The peel stops at its fixpoint with the
-  * output of the full round budget, in fewer jobs. */
+  * output of the full round budget, in fewer jobs. Graphs this small run
+  * in the in-task kernel; the relational plans past its bound are
+  * reached through `KCore.relational`, and both walk one trajectory. */
 class KCoreSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -43,9 +45,15 @@ class KCoreSpec extends SparkSpecBase {
   private def rows(e: DataFrame): Seq[(Long, Long)] =
     e.as[(Long, Long)].collect().toSeq.sorted
 
+  /** The relational peel (the plan past the kernel's bound), broadcast or
+    * shuffled as [[GraphScale]] picks. */
+  private def relationalPeel(sym: DataFrame, k: Int, rounds: Int,
+                             modeOut: String => Unit = _ => ()): DataFrame =
+    KCore.relational(Rounds.eager(sym), k, rounds, modeOut)
+
   test("a peel that converges at round 3 of 8 stops there, with the 8-round output") {
     val (fixedOut, fixedJobs) = jobsDuring(rows(fixedPeel(g, k = 2, rounds = 8)))
-    val (out, jobs) = jobsDuring(rows(KCore.peel(g, k = 2, rounds = 8)))
+    val (out, jobs) = jobsDuring(rows(relationalPeel(g, k = 2, rounds = 8)))
     assert(out.get == fixedOut.get)
     assert(out.get.map(_._1).toSet == Set(1L, 2L, 3L))
     // round 4 keeps every edge of round 3: the fixpoint, so no round 5
@@ -57,10 +65,50 @@ class KCoreSpec extends SparkSpecBase {
   test("a peel that has not converged returns the same round-8 state as 8 fixed rounds") {
     // a 40-node path at k = 2 loses its two end nodes per round: 20 rounds
     val path = sym((1L until 40L).map(i => (i, i + 1)): _*)
-    val (out, jobs) = jobsDuring(rows(KCore.peel(path, k = 2, rounds = 8)))
+    val (out, jobs) = jobsDuring(rows(relationalPeel(path, k = 2, rounds = 8)))
     assert(out.get == rows(fixedPeel(path, k = 2, rounds = 8)))
     assert(out.get.map(_._1).toSet == (9L to 32L).toSet)
     assert(jobs.contains("kcore round 8"), jobs)
+    assert(rows(KCore.peel(path, k = 2, rounds = 8)) == out.get)
+  }
+
+  test("the kernel peel equals the relational peel round for round") {
+    val path = sym((1L until 40L).map(i => (i, i + 1)): _*)
+    // 3–4 twice: node 4 keeps degree 2 on the duplicate row alone, as
+    // count(1) counts it, after 5 and 6 peel off
+    val dup = g.union(sym((3L, 4L)))
+    val rnd = new scala.util.Random(11)
+    val random = (1 to 2).map { _ =>
+      sym((for { a <- 1L to 20L; b <- (a + 1) to 20L if rnd.nextDouble() < 0.2 }
+        yield (a, b)): _*)
+    }
+    val cases = Seq(("cascade", g, 2, 1 to 3), ("path", path, 2, Seq(8)),
+      ("duplicates", dup, 2, 1 to 4), ("empty core", g, 3, Seq(1, 3))) ++
+      random.zipWithIndex.flatMap { case (r, i) =>
+        Seq((s"random $i", r, 2, 1 to 4), (s"random $i", r, 3, 1 to 4)) }
+    val key = GraphScale.BroadcastMaxNodesKey
+    var mode = ""
+    for ((name, gr, k, roundsSeq) <- cases; r <- roundsSeq) {
+      val got = rows(KCore.kernel(Rounds.eager(gr), k, r))
+      assert(got == rows(relationalPeel(gr, k, r, mode = _)), s"$name k=$k rounds=$r")
+      assert(mode == "broadcast")
+      // the forced-shuffled cutover walks the same trajectory
+      spark.conf.set(key, "1")
+      try assert(got == rows(relationalPeel(gr, k, r, mode = _)), s"$name k=$k rounds=$r shuffled")
+      finally spark.conf.unset(key)
+      assert(mode == "shuffled")
+    }
+    assert(nodes(KCore.peel(dup, k = 2, rounds = 8)) === Set(1L, 2L, 3L, 4L))
+    assert(KCore.peel(g, k = 3, rounds = 3).count() === 0)
+  }
+
+  test("a peel of a graph that fits the kernel runs no round job") {
+    var mode = ""
+    val (n, jobs) = jobsDuring(KCore.peel(g, k = 2, rounds = 8, mode = _).count())
+    assert(n.get === 6L)
+    assert(mode === "kernel")
+    assert(!jobs.exists(_.startsWith("kcore round")), jobs)
+    assertJobBudget(jobs, 3) // the edge table's staging, then the count
   }
 
   test("peel refuses k = 0 before any Spark job starts") {
@@ -117,7 +165,7 @@ class KCoreSpec extends SparkSpecBase {
     spark.conf.set(key, "1")
     var mode = ""
     try {
-      val core = KCore.peel(g, k = 2, rounds = 3, mode = _)
+      val core = relationalPeel(g, k = 2, rounds = 3, mode = _)
       core.collect() // run to AQE-final so the plan assert sees reality
       assert(mode === "shuffled")
       // the LPA recipe: final survivor attach is a forced merge join,
@@ -129,7 +177,7 @@ class KCoreSpec extends SparkSpecBase {
       assert(core.count() === 6)
       // trajectory equality, not just fixpoint: a 1-round peel must
       // match the broadcast plan's 1-round result mid-cascade
-      assert(nodes(KCore.peel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
+      assert(nodes(relationalPeel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
       // and on seeded random graphs both plans agree round-for-round
       val rnd = new scala.util.Random(7)
       val edges = (for {
@@ -138,10 +186,10 @@ class KCoreSpec extends SparkSpecBase {
       val gr = sym(edges.toSeq: _*)
       for (r <- 1 to 4) {
         spark.conf.set(key, "1")
-        val shuffled = nodes(KCore.peel(gr, k = 2, rounds = r, mode = _))
+        val shuffled = nodes(relationalPeel(gr, k = 2, rounds = r, mode = _))
         assert(mode === "shuffled")
         spark.conf.unset(key)
-        val bcast = nodes(KCore.peel(gr, k = 2, rounds = r, mode = _))
+        val bcast = nodes(relationalPeel(gr, k = 2, rounds = r, mode = _))
         assert(mode === "broadcast")
         assert(shuffled === bcast, s"rounds=$r")
       }

@@ -6,7 +6,9 @@ import org.apache.spark.sql.DataFrame
 /** [[Lpa.propagate]] on a hand-built graph with known communities, plus
   * a brute-force cross-validation of the full synchronous trajectory
   * (mode-of-neighbors, min-label tie-break) on seeded random graphs —
-  * the [[KCoreSpec]] posture for the fourth graph primitive. */
+  * the [[KCoreSpec]] posture for the fourth graph primitive. Graphs
+  * this small run in the in-task kernel; the relational rounds past its
+  * bound are reached through `Lpa.relational`. */
 class LpaSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -55,6 +57,38 @@ class LpaSpec extends SparkSpecBase {
         }
       }
     }
+  }
+
+  private def rows(df: DataFrame): Seq[(Long, Long)] =
+    df.select("u", "lbl").as[(Long, Long)].collect().toSeq.sorted
+
+  test("the kernel equals the relational rounds round for round") {
+    val bridge = sym((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
+    val path = sym((1L until 40L).map(i => (i, i + 1)): _*)
+    // 1–3 twice: two votes for 3 outvote the smaller label 2
+    val dup = sym((1L, 2L), (1L, 3L), (1L, 3L))
+    val rnd = new scala.util.Random(11)
+    val random = (1 to 2).map { _ =>
+      sym((for { a <- 1L to 20L; b <- (a + 1) to 20L if rnd.nextDouble() < 0.2 }
+        yield (a, b)): _*)
+    }
+    val cases = Seq(("bridge", bridge, 1 to 4), ("path", path, Seq(8)),
+      ("duplicates", dup, 1 to 2), ("empty", sym(), Seq(1))) ++
+      random.zipWithIndex.map { case (r, i) => (s"random $i", r, 1 to 4) }
+    for ((name, g, roundsSeq) <- cases; r <- roundsSeq) {
+      val e = Rounds.eager(g)
+      assert(rows(Lpa.kernel(e, r)) == rows(Lpa.relational(e, r)), s"$name rounds=$r")
+    }
+    assert(labelsOf(Lpa.propagate(dup, rounds = 1))(1L) === 3L)
+    assert(Lpa.propagate(sym(), rounds = 2).count() === 0)
+  }
+
+  test("propagation over a graph that fits the kernel runs no round job") {
+    val g = sym((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (5L, 6L), (4L, 6L), (3L, 4L))
+    val (n, jobs) = jobsDuring(Lpa.propagate(g, rounds = 4).count())
+    assert(n.get === 6L)
+    assert(!jobs.exists(_.startsWith("lpa round")), jobs)
+    assertJobBudget(jobs, 3) // the edge table's staging, then the count
   }
 
   test("q_lpa_communities is a well-formed size histogram at sf0.001") {

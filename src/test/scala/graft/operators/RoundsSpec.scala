@@ -114,7 +114,7 @@ class RoundsSpec extends SparkSpecBase {
     val sc = spark.sparkContext
     sc.setJobDescription("caller")
     def jobs(rounds: Int): Seq[String] = {
-      val (out, js) = jobsDuring(Lpa.propagateLaid(e, rounds).collect())
+      val (out, js) = jobsDuring(Lpa.relational(e, rounds).collect())
       assert(out.isSuccess, out)
       js
     }
