@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
 /** Session-scoped memo for localCheckpoint'd plan chains — the `pqCore`
   * posture (r11), generalized so every family with a shared index/truth
   * build (PQ codebooks, the k-NN graph, the HNSW visited walk, the
-  * shingle pair-stats table, the unigram-LM DP, the co-order edge list,
+  * shingle pair-stats table, the unigram-LM DP, the staged co-order graph,
   * the namespace diff pair) uses ONE audited implementation instead of
   * re-growing the memo logic per family.
   *

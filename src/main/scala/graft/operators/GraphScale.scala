@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
   * kernel). k-core's plan has three ranges of the staged edge table:
   *   - up to [[GraphKernel.MaxRows]] rows, the [[GraphKernel]] runs every
   *     round in one task (LPA's too; PageRank keeps its relational plans);
-  *   - past that, up to [[broadcastMaxNodes]] nodes, relational rounds
+  *   - past that, up to [[BroadcastMaxNodes]] nodes, relational rounds
   *     with a broadcast attach;
   *   - past that, relational rounds through forced merge joins.
   *
@@ -26,18 +26,13 @@ import org.apache.spark.sql.functions.col
   * rows), and only a bound past the threshold pays for the exact count
   * before the plan flips to the shuffled one.
   *
-  * Default 10⁷ nodes ≈ 160 MB of (long, long) broadcast rows per round
-  * — comfortably under the 8 GB cap with headroom for round-to-round
-  * accumulation. Conf-overridable (`spark.graft.graph.broadcastMaxNodes`)
-  * so operators can tune per cluster, and so specs can force the
-  * shuffled plan on tiny graphs to assert trajectory equality. */
+  * The cutover is 10⁷ nodes ≈ 160 MB of (long, long) broadcast rows per
+  * round — comfortably under the 8 GB cap with headroom for
+  * round-to-round accumulation. */
 object GraphScale {
-  /** Runtime conf key: node count at or below which the per-round
-    * broadcast attach is used; above it, the forced-merge shuffled
-    * plan. */
-  val BroadcastMaxNodesKey = "spark.graft.graph.broadcastMaxNodes"
-
-  val DefaultBroadcastMaxNodes = 10000000L
+  /** Node count at or below which the per-round broadcast attach is
+    * used; above it, the forced-merge shuffled plan. */
+  val BroadcastMaxNodes = 10000000L
 
   /** Parse a long-valued tuning knob from runtime conf (falling back to
     * `envKey`, then `default`). A malformed value fails with the key
@@ -56,13 +51,9 @@ object GraphScale {
         }
     }
 
-  def broadcastMaxNodes(spark: SparkSession): Long =
-    longConf(spark, BroadcastMaxNodesKey, None, DefaultBroadcastMaxNodes)
-
   /** True iff a graph with `nNodes` measured nodes should attach its
     * per-round node-keyed table by broadcast. */
-  def useBroadcast(spark: SparkSession, nNodes: Long): Boolean =
-    nNodes <= broadcastMaxNodes(spark)
+  def useBroadcast(nNodes: Long): Boolean = nNodes <= BroadcastMaxNodes
 
   /** A node count of the edge table `edges` (a [[Rounds.eager]] leaf whose
     * nodes are the values of `nodeCol`) that is exact where it decides
@@ -71,7 +62,7 @@ object GraphScale {
     * exact distinct count. */
   def nodeBound(edges: DataFrame, nodeCol: String): Long = {
     val rows = Rounds.measuredRows(edges)
-    if (useBroadcast(edges.sparkSession, rows)) rows
+    if (useBroadcast(rows)) rows
     else edges.select(col(nodeCol)).distinct().count()
   }
 }

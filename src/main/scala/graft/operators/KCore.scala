@@ -45,30 +45,23 @@ object KCore {
     * its count of live rows, so a duplicate row counts twice, as
     * `count(1)` does. The plan (see the object doc) is chosen from the
     * staged table's measured rows; all three compute the identical
-    * trajectory (spec-asserted on every KCoreSpec graph).
-    *
-    * `modeOut` receives the chosen plan (`"kernel"` / `"broadcast"` /
-    * `"shuffled"`) — observability for `KCoreSpec`. A callback rather
-    * than a shared mutable global, so concurrent peels can't clobber each
-    * other's observation. */
-  def peel(sym: DataFrame, k: Int, rounds: Int,
-           modeOut: String => Unit = _ => ()): DataFrame = {
+    * trajectory (spec-asserted on every KCoreSpec graph, which calls
+    * each plan directly). */
+  def peel(sym: DataFrame, k: Int, rounds: Int): DataFrame = {
     checkArgs(k, rounds)
     // ONE edge materialization serves every plan (the r8 soak lesson: a
     // plain checkpoint here plus a repartitioned one inside the shuffled
     // peel held TWO copies of the edge table and starved a capped heap)
-    peelStaged(Rounds.eager(sym), k, rounds, modeOut)
+    peelStaged(Rounds.eager(sym), k, rounds)
   }
 
   /** [[peel]] over an edge table already staged as a [[Rounds.eager]]
     * leaf, whose measured row count picks the plan (callers that stage
-    * the table once per session — the co-order graph serves four
-    * iterative rows — skip re-materializing it per consuming query). */
-  def peelStaged(e: DataFrame, k: Int, rounds: Int,
-                 modeOut: String => Unit = _ => ()): DataFrame = {
+    * the table once per session — the co-order graph serves all six
+    * co-order rows — skip re-materializing it per consuming query). */
+  def peelStaged(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     checkArgs(k, rounds)
-    if (GraphKernel.fits(e)) { modeOut("kernel"); kernel(e, k, rounds) }
-    else relational(e, k, rounds, modeOut)
+    if (GraphKernel.fits(e)) kernel(e, k, rounds) else relational(e, k, rounds)
   }
 
   private def checkArgs(k: Int, rounds: Int): Unit = {
@@ -112,17 +105,13 @@ object KCore {
 
   /** The relational peel, broadcast or shuffled by [[GraphScale]]'s node
     * cutover: the plans of an edge table past [[GraphKernel.MaxRows]]. */
-  private[operators] def relational(e: DataFrame, k: Int, rounds: Int,
-                                    modeOut: String => Unit): DataFrame =
-    if (GraphScale.useBroadcast(e.sparkSession, GraphScale.nodeBound(e, "u"))) {
-      modeOut("broadcast"); peelBroadcast(e, k, rounds)
-    } else {
-      modeOut("shuffled"); peelShuffled(e, k, rounds)
-    }
+  private[operators] def relational(e: DataFrame, k: Int, rounds: Int): DataFrame =
+    if (GraphScale.useBroadcast(GraphScale.nodeBound(e, "u"))) peelBroadcast(e, k, rounds)
+    else peelShuffled(e, k, rounds)
 
   /** Broadcast plan: per round, the shrinking edge table is filtered by
     * two broadcast left-semi joins against the (small) survivor set. */
-  private def peelBroadcast(sym: DataFrame, k: Int, rounds: Int): DataFrame =
+  private[operators] def peelBroadcast(sym: DataFrame, k: Int, rounds: Int): DataFrame =
     Rounds.nested("kcore", sym, rounds) { e =>
       // out-degree == degree on a symmetric table; survivors broadcast
       // (both semi-joins share one broadcast exchange)
@@ -146,7 +135,7 @@ object KCore {
     * cumulative per-round filtering ≡ filtering by the final set). The
     * edge table is a checkpoint leaf, which keeps no layout, so every
     * merge join re-shuffles it. */
-  private def peelShuffled(e: DataFrame, k: Int, rounds: Int): DataFrame = {
+  private[operators] def peelShuffled(e: DataFrame, k: Int, rounds: Int): DataFrame = {
     val alive = Rounds.nested("kcore", e.select(col("u")).distinct(), rounds) { alive =>
       val av = alive.withColumnRenamed("u", "n").hint("merge")
       val deg = e.join(av, e("v") === av("n"))

@@ -69,8 +69,7 @@ object Triangles {
     * long columns (u, v), ids < 2³¹ so (degree, id) packs into one
     * orderable long. `statsOut` receives the split decision (a callback,
     * not shared mutable state — concurrent runs can't clobber each
-    * other's observation, the [[graft.queries.Analytics.qPagerank]]
-    * posture). */
+    * other's observation). */
   def summary(spark: SparkSession, edgesIn: DataFrame,
               statsOut: SplitStats => Unit = _ => ()): DataFrame = {
     val edges = edgesIn.select(col("u"), col("v"))

@@ -1937,10 +1937,47 @@ object Analytics extends QueryModule {
     GROUP BY d.event_type
     ORDER BY d.event_type"""
 
+  /** The co-order part graph, SYMMETRIZED (each undirected edge as both
+    * (u, v) and (v, u), no self-loops, no duplicate rows) and staged once
+    * per session as one [[graft.operators.Rounds.eager]] leaf: the one
+    * table all six co-order rows read (`q_kcore`, `q_lpa_communities`,
+    * `q_pagerank` and `q_link_predict` directly; `q_graph_triangles` and
+    * `q_triangles_approx` through its `u < v` half, [[coOrderEdges]]).
+    * One plan builds it: lineitem → each order's sorted distinct parts →
+    * the `u < v` pairs (map-side, orders hold ≤ 7 parts, never a corpus
+    * self-join) → `distinct` → each pair in both orientations. The job
+    * that materializes it also counts its rows, which bound the node
+    * count ([[graft.operators.GraphScale.nodeBound]]) and pick the in-task
+    * kernel ([[graft.operators.GraphKernel.fits]]). It is not partitioned
+    * or sorted first: a checkpoint keeps no layout (`LayoutSpec`), so the
+    * merge joins downstream shuffle it anyway. Its jobs, the AQE stages
+    * included, are described `co-order staging`. Within Bench every
+    * query's run 1 still rebuilds it ([[graft.operators.ChainMemo]]). */
+  private val symStagedMemo = new graft.operators.ChainMemo[DataFrame]()
+  private[queries] def coOrderSymStaged(spark: SparkSession, sfDir: String): DataFrame =
+    symStagedMemo.getOrBuild(spark, sfDir) {
+      graft.operators.Rounds.described(spark, "co-order staging") {
+        val und = Tables.lineitem(spark, sfDir)
+          .groupBy(col("l_orderkey"))
+          .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
+          .select(explode(QueryModule.sortedPairs(col("ps"))).as("p"))
+          .select(col("p.a").as("u"), col("p.b").as("v"))
+          .distinct()
+        graft.operators.Rounds.eager(und
+          .select(explode(array(struct(col("u"), col("v")),
+            struct(col("v").as("u"), col("u").as("v")))).as("e"))
+          .select(col("e.u"), col("e.v")))
+      }
+    }
+
+  /** The distinct undirected co-order edge list: the `u < v` half of
+    * [[coOrderSymStaged]]. */
+  private def coOrderEdges(spark: SparkSession, sfDir: String): DataFrame =
+    coOrderSymStaged(spark, sfDir).filter(col("u") < col("v"))
+
   /** Triangle counting + global clustering coefficient over the co-order
     * part graph (parts are connected when some order contains both):
-    * per-order map-side pair expansion (orders hold ≤7 parts — never a
-    * corpus self-join) → distinct edge list →
+    * the distinct edge list ([[coOrderEdges]]) →
     * [[graft.operators.Triangles.summary]] — degree-ordered orientation
     * (Suri & Vassilvitskii, WWW'11), per-edge sorted-adjacency
     * intersection (r10: replaces the wedge enumeration whose Σ C(od,2)
@@ -1949,49 +1986,6 @@ object Analytics extends QueryModule {
     * entry cap. Output is one row: |V|, |E|, wedge count Σ C(deg,2),
     * triangles, and the global clustering coefficient 3·T/wedges in
     * basis points. */
-  /** The distinct undirected co-order part edge list (u < v), memoized
-    * per (session, sfDir) — r12: all six iterative-graph rows
-    * (`q_graph_triangles`, `q_pagerank`, `q_kcore`, `q_lpa_communities`,
-    * `q_link_predict`, `q_triangles_approx`) re-derived the identical
-    * lineitem groupBy + pair expansion + distinct (~2 s each at sf0.1,
-    * BENCH_NOTES r7 "shared base-edge expansion"); the
-    * [[graft.operators.ChainMemo]] (pqCore posture) builds it once per
-    * session — the production shape, where the graph projection of a
-    * fact table is staged once and every graph algorithm reads it. */
-  private val coEdgesMemo = new graft.operators.ChainMemo[DataFrame]()
-  private def coOrderEdges(spark: SparkSession, sfDir: String): DataFrame =
-    coEdgesMemo.getOrBuild(spark, sfDir) {
-      Tables.lineitem(spark, sfDir)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_set(col("l_partkey"))).as("ps"))
-        .select(explode(QueryModule.sortedPairs(col("ps"))).as("p"))
-        .select(col("p.a").as("u"), col("p.b").as("v"))
-        .distinct()
-        .localCheckpoint(false) // lazy: first consumer materializes
-    }
-
-  /** The SYMMETRIZED co-order edge table, staged once per session as a
-    * [[graft.operators.Rounds.eager]] leaf — r13: `q_kcore` and
-    * `q_lpa_communities` each re-derived the 2·|E| table per consuming
-    * query on top of the (already memoized) edge list; one staged copy
-    * per session now serves both (the same ChainMemo posture as the edge
-    * list itself — within Bench every query's run 1 still rebuilds it).
-    * The job that materializes it also counts its rows, which bound the
-    * node count ([[graft.operators.GraphScale.nodeBound]]) and pick the
-    * in-task kernel ([[graft.operators.GraphKernel.fits]]). It is not
-    * partitioned or sorted first: a checkpoint keeps no layout
-    * (`LayoutSpec`), so the merge joins downstream shuffle it anyway. Its
-    * jobs, the edge list's AQE stages included, are described `co-order
-    * staging`. */
-  private val symStagedMemo = new graft.operators.ChainMemo[DataFrame]()
-  private def coOrderSymStaged(spark: SparkSession, sfDir: String): DataFrame =
-    symStagedMemo.getOrBuild(spark, sfDir) {
-      graft.operators.Rounds.described(spark, "co-order staging") {
-        val und = coOrderEdges(spark, sfDir)
-        graft.operators.Rounds.eager(und.union(und.select(col("v").as("u"), col("u").as("v"))))
-      }
-    }
-
   def qGraphTriangles(spark: SparkSession, sfDir: String): DataFrame =
     graft.operators.Triangles.summary(spark, coOrderEdges(spark, sfDir))
 
@@ -2000,72 +1994,51 @@ object Analytics extends QueryModule {
     * iteration bit-for-bit: total mass 10¹², rank_{i+1}(v) =
     * (15·S) div (100·N) + (85·Σᵤ rank_i(u) div deg(u)) div 100. The
     * Spark-first iterative-graph shape: the (u,v,outd) edge table is
-    * materialized ONCE (localCheckpoint) and each iteration is one
-    * equi-join + one map-side-combined groupBy on the destination, run
-    * as [[graft.operators.Rounds.fixed]] rounds. Top-20 by rank via
-    * TakeOrdered.
+    * derived from the session's staged co-order graph
+    * ([[coOrderSymStaged]]) and materialized ONCE (localCheckpoint), and
+    * each iteration is one equi-join + one map-side-combined groupBy on
+    * the destination, run as [[graft.operators.Rounds.fixed]] rounds.
+    * Top-20 by rank via TakeOrdered.
     *
     * The per-iteration rank attach switches AUTOMATICALLY on the
-    * measured node count ([[graft.operators.GraphScale]]): below the
+    * measured node count (the eager degree table's rows;
+    * [[graft.operators.GraphScale.useBroadcast]]): below the
     * cutover the rank table is BROADCAST — |nodes| longs, tiny next to
     * |edges|, so each iteration is a map-side join over the
     * checkpointed edge table plus ONE partial-agg shuffle onto the node
     * domain. Past the cutover, per-iteration broadcast builds
     * accumulate in the driver (the `q_lpa_communities` sf1 OOM class),
     * so the plan flips to the [[graft.operators.Lpa]] recipe: each
-    * iteration forced-merge-joins the |V|-row rank table (the edge table
-    * is laid out on `u` before its checkpoint, but the checkpoint keeps
-    * no layout, so the merge join shuffles it too). Both plans compute the identical integer trajectory
-    * (spec-asserted). */
+    * iteration forced-merge-joins the |V|-row rank table (the edge
+    * table's checkpoint keeps no layout, so the merge join shuffles it
+    * too). Both plans compute the identical integer trajectory
+    * (spec-asserted through [[pagerank]]). */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame =
-    qPagerank(spark, sfDir, _ => ())
+    pagerank(spark, sfDir, graft.operators.GraphScale.useBroadcast)
 
-  /** [[qPagerank]] with plan observability: `modeOut` receives the
-    * chosen attach plan (`"broadcast"` / `"shuffled"`) — a callback
-    * rather than a shared mutable global, so concurrent runs can't
-    * clobber each other's observation. */
-  /** PageRank's staged inputs — the degree-joined edge table, the degree
-    * table, the node count and the chosen mode — memoized per (session,
-    * sfDir, cutover conf): r13, the same staging posture as
-    * [[coOrderSymStaged]]. The cutover conf is part
-    * of the key so a spec that forces the shuffled plan can never be
-    * served the broadcast-mode layout. Its jobs, the AQE stages that
-    * the edge list and the degree join submit included, are described
-    * `pagerank staging`. */
-  private val pagerankCoreMemo =
-    new graft.operators.ChainMemo[(DataFrame, DataFrame, Long, Boolean)]()
-  private def pagerankCore(spark: SparkSession, sfDir: String)
-      : (DataFrame, DataFrame, Long, Boolean) =
-    pagerankCoreMemo.getOrBuild(spark,
-      s"$sfDir|${graft.operators.GraphScale.broadcastMaxNodes(spark)}") {
-      graft.operators.Rounds.described(spark, "pagerank staging") {
-        // memoized checkpoint BEFORE the union doubles the lineage (and deg
-        // doubles it again): without it the expansion+distinct re-derives 4×
-        // inside er's materialization (measured: half the query's wall time)
-        val und = coOrderEdges(spark, sfDir)
-        val e = und.union(und.select(col("v").as("u"), col("u").as("v")))
-        // deg is |V| rows — checkpointed so the node count AND the er join
-        // both reuse one materialization
-        val deg = e.groupBy(col("u")).agg(count(lit(1)).as("outd")).localCheckpoint()
-        val nn = deg.count() // measured node count drives the cutover
-        val useBroadcast = graft.operators.GraphScale.useBroadcast(spark, nn)
-        // exactly ONE edge-table materialization in either mode (the r8 soak
-        // lesson: checkpointing a base copy AND a repartitioned copy held the
-        // 2× edge table and starved a capped heap). Checkpointed as it comes
-        // in either mode: a checkpoint keeps no layout (LayoutSpec), so each
-        // of the 5 shuffled-mode merge joins shuffles and sorts it anyway
-        val er = e.join(deg, "u").localCheckpoint()
-        (er, deg, nn, useBroadcast)
-      }
-    }
-
-  def qPagerank(spark: SparkSession, sfDir: String,
-                modeOut: String => Unit): DataFrame = {
+  /** [[qPagerank]] with the per-round rank attach chosen by
+    * `broadcastAttach` from the measured node count, so a spec can run
+    * both plans on one small graph. Its staging reads the shared
+    * [[coOrderSymStaged]] leaf: the degree table is an eager leaf, whose
+    * measured rows are the node count, and the degree-joined edge table
+    * is checkpointed once. Those jobs are described `pagerank staging`. */
+  private[graft] def pagerank(spark: SparkSession, sfDir: String,
+                              broadcastAttach: Long => Boolean): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
     val S = 1000000000000L
     val iters = 5
-    val (er, deg, nn, useBroadcast) = pagerankCore(spark, sfDir)
-    modeOut(if (useBroadcast) "broadcast" else "shuffled")
+    val e = coOrderSymStaged(spark, sfDir)
+    val (er, deg) = graft.operators.Rounds.described(spark, "pagerank staging") {
+      val deg = graft.operators.Rounds.eager(e.groupBy(col("u")).agg(count(lit(1)).as("outd")))
+      // ONE edge-table materialization in either mode (the r8 soak lesson:
+      // checkpointing a base copy AND a repartitioned copy held the 2×
+      // edge table and starved a capped heap); a checkpoint keeps no
+      // layout (LayoutSpec), so each of the 5 shuffled-mode merge joins
+      // shuffles and sorts it anyway
+      (e.join(deg, "u").localCheckpoint(), deg)
+    }
+    val nn = graft.operators.Rounds.measuredRows(deg)
+    val useBroadcast = broadcastAttach(nn)
     val r0 = deg.select(col("u").as("node"), lit(S / nn).as("rank"))
     val r = graft.operators.Rounds.fixed("pagerank", r0, iters) { (r, _) =>
       val joined =
@@ -2162,7 +2135,7 @@ object Analytics extends QueryModule {
     qTrianglesApprox(spark, sfDir, 4L)
 
   def qTrianglesApprox(spark: SparkSession, sfDir: String, pInv: Long): DataFrame = {
-    // memoized checkpoint feeds the full count AND the sampled summary
+    // the staged leaf feeds the full count AND the sampled summary
     val edges = coOrderEdges(spark, sfDir)
     val gate = conv(substring(md5(concat(lit("tri_"),
       col("u").cast("string"), lit("_"), col("v").cast("string"))), 1, 12), 16, 10)
@@ -2820,9 +2793,8 @@ object Analytics extends QueryModule {
     * the corpus grows. */
   def qLinkPredict(spark: SparkSession, sfDir: String): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    // memoized checkpoint: sym doubles it; deg + both hops + anti reuse it
-    val und = coOrderEdges(spark, sfDir)
-    val sym = und.union(und.select(col("v").as("u"), col("u").as("v")))
+    // the staged leaf: deg and both hops read it
+    val sym = coOrderSymStaged(spark, sfDir)
     val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("d"))
     val seeds = deg.select(col("node").as("seed")).orderBy(col("seed")).limit(20)
     // hop1 IS the seeds' adjacency: it feeds the wedge expansion AND the

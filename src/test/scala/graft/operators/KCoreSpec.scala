@@ -11,7 +11,8 @@ import org.apache.spark.sql.DataFrame
   * not just the degree filter. The peel stops at its fixpoint with the
   * output of the full round budget, in fewer jobs. Graphs this small run
   * in the in-task kernel; the relational plans past its bound are
-  * reached through `KCore.relational`, and both walk one trajectory. */
+  * reached through `KCore.relational` (broadcast at these sizes) and
+  * `KCore.peelShuffled`, and all three walk one trajectory. */
 class KCoreSpec extends SparkSpecBase {
   import spark.implicits._
 
@@ -47,9 +48,11 @@ class KCoreSpec extends SparkSpecBase {
 
   /** The relational peel (the plan past the kernel's bound), broadcast or
     * shuffled as [[GraphScale]] picks. */
-  private def relationalPeel(sym: DataFrame, k: Int, rounds: Int,
-                             modeOut: String => Unit = _ => ()): DataFrame =
-    KCore.relational(Rounds.eager(sym), k, rounds, modeOut)
+  private def relationalPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame =
+    KCore.relational(Rounds.eager(sym), k, rounds)
+
+  private def shuffledPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame =
+    KCore.peelShuffled(Rounds.eager(sym), k, rounds)
 
   test("a peel that converges at round 3 of 8 stops there, with the 8-round output") {
     val (fixedOut, fixedJobs) = jobsDuring(rows(fixedPeel(g, k = 2, rounds = 8)))
@@ -86,27 +89,20 @@ class KCoreSpec extends SparkSpecBase {
       ("duplicates", dup, 2, 1 to 4), ("empty core", g, 3, Seq(1, 3))) ++
       random.zipWithIndex.flatMap { case (r, i) =>
         Seq((s"random $i", r, 2, 1 to 4), (s"random $i", r, 3, 1 to 4)) }
-    val key = GraphScale.BroadcastMaxNodesKey
-    var mode = ""
     for ((name, gr, k, roundsSeq) <- cases; r <- roundsSeq) {
       val got = rows(KCore.kernel(Rounds.eager(gr), k, r))
-      assert(got == rows(relationalPeel(gr, k, r, mode = _)), s"$name k=$k rounds=$r")
-      assert(mode == "broadcast")
-      // the forced-shuffled cutover walks the same trajectory
-      spark.conf.set(key, "1")
-      try assert(got == rows(relationalPeel(gr, k, r, mode = _)), s"$name k=$k rounds=$r shuffled")
-      finally spark.conf.unset(key)
-      assert(mode == "shuffled")
+      assert(got == rows(KCore.peelBroadcast(Rounds.eager(gr), k, r)), s"$name k=$k rounds=$r")
+      // the shuffled plan past the cutover walks the same trajectory
+      assert(got == rows(shuffledPeel(gr, k, r)), s"$name k=$k rounds=$r shuffled")
     }
     assert(nodes(KCore.peel(dup, k = 2, rounds = 8)) === Set(1L, 2L, 3L, 4L))
     assert(KCore.peel(g, k = 3, rounds = 3).count() === 0)
   }
 
   test("a peel of a graph that fits the kernel runs no round job") {
-    var mode = ""
-    val (n, jobs) = jobsDuring(KCore.peel(g, k = 2, rounds = 8, mode = _).count())
+    assert(GraphKernel.fits(Rounds.eager(g)))
+    val (n, jobs) = jobsDuring(KCore.peel(g, k = 2, rounds = 8).count())
     assert(n.get === 6L)
-    assert(mode === "kernel")
     assert(!jobs.exists(_.startsWith("kcore round")), jobs)
     assertJobBudget(jobs, 3) // the edge table's staging, then the count
   }
@@ -158,57 +154,40 @@ class KCoreSpec extends SparkSpecBase {
     }
   }
 
-  test("shuffled cutover: forced-low threshold switches the plan, output unchanged") {
-    // force the shuffled plan on the tiny spec graphs by dropping the
-    // cutover to 1 node — the automatic switch the sf1 LPA OOM mandated
-    val key = GraphScale.BroadcastMaxNodesKey
-    spark.conf.set(key, "1")
-    var mode = ""
-    try {
-      val core = relationalPeel(g, k = 2, rounds = 3, mode = _)
-      core.collect() // run to AQE-final so the plan assert sees reality
-      assert(mode === "shuffled")
-      // the LPA recipe: final survivor attach is a forced merge join,
-      // never a broadcast build
-      val plan = core.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      assert(!plan.contains("BroadcastHashJoin"), plan)
-      assert(nodes(core) === Set(1L, 2L, 3L))
-      assert(core.count() === 6)
-      // trajectory equality, not just fixpoint: a 1-round peel must
-      // match the broadcast plan's 1-round result mid-cascade
-      assert(nodes(relationalPeel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
-      // and on seeded random graphs both plans agree round-for-round
-      val rnd = new scala.util.Random(7)
-      val edges = (for {
-        a <- 1L to 20L; b <- (a + 1) to 20L if rnd.nextDouble() < 0.2
-      } yield (a, b)).toSet
-      val gr = sym(edges.toSeq: _*)
-      for (r <- 1 to 4) {
-        spark.conf.set(key, "1")
-        val shuffled = nodes(relationalPeel(gr, k = 2, rounds = r, mode = _))
-        assert(mode === "shuffled")
-        spark.conf.unset(key)
-        val bcast = nodes(relationalPeel(gr, k = 2, rounds = r, mode = _))
-        assert(mode === "broadcast")
-        assert(shuffled === bcast, s"rounds=$r")
-      }
-    } finally spark.conf.unset(key)
+  test("shuffled peel: merge joins only, broadcast trajectory") {
+    // the plan past the node cutover, run on the tiny spec graphs — the
+    // automatic switch the sf1 LPA OOM mandated
+    val core = shuffledPeel(g, k = 2, rounds = 3)
+    core.collect() // run to AQE-final so the plan assert sees reality
+    // the LPA recipe: final survivor attach is a forced merge join,
+    // never a broadcast build
+    val plan = core.queryExecution.executedPlan.toString
+    assert(plan.contains("SortMergeJoin"), plan)
+    assert(!plan.contains("BroadcastHashJoin"), plan)
+    assert(nodes(core) === Set(1L, 2L, 3L))
+    assert(core.count() === 6)
+    // trajectory equality, not just fixpoint: a 1-round peel must
+    // match the broadcast plan's 1-round result mid-cascade
+    assert(nodes(shuffledPeel(g, k = 2, rounds = 1)) === Set(1L, 2L, 3L, 4L, 5L))
+    // and on seeded random graphs both plans agree round-for-round
+    val rnd = new scala.util.Random(7)
+    val edges = (for {
+      a <- 1L to 20L; b <- (a + 1) to 20L if rnd.nextDouble() < 0.2
+    } yield (a, b)).toSet
+    val gr = sym(edges.toSeq: _*)
+    for (r <- 1 to 4) {
+      val shuffled = nodes(shuffledPeel(gr, k = 2, rounds = r))
+      val bcast = nodes(KCore.peelBroadcast(Rounds.eager(gr), k = 2, rounds = r))
+      assert(shuffled === bcast, s"rounds=$r")
+    }
   }
 
   test("qPagerank shuffled cutover matches the broadcast trajectory") {
-    val key = GraphScale.BroadcastMaxNodesKey
-    var mode = ""
-    val bcast = graft.queries.Analytics.qPagerank(spark, Sf, mode = _)
-      .collect().toSeq
-    assert(mode === "broadcast")
-    spark.conf.set(key, "1")
-    try {
-      val shuffled = graft.queries.Analytics.qPagerank(spark, Sf, mode = _)
-        .collect().toSeq
-      assert(mode === "shuffled")
-      assert(shuffled === bcast) // identical integer ranks, identical order
-    } finally spark.conf.unset(key)
+    val bcast = graft.queries.Analytics.pagerank(spark, Sf, _ => true).collect().toSeq
+    // sf0.001 is far below the cutover: q_pagerank broadcasts
+    assert(graft.queries.Analytics.qPagerank(spark, Sf).collect().toSeq === bcast)
+    val shuffled = graft.queries.Analytics.pagerank(spark, Sf, _ => false).collect().toSeq
+    assert(shuffled === bcast) // identical integer ranks, identical order
   }
 
   test("q_kcore summary certifies convergence at sf0.001") {
