@@ -51,6 +51,9 @@ class KCoreSpec extends SparkSpecBase {
   private def relationalPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame =
     KCore.relational(Rounds.eager(sym), k, rounds)
 
+  private def broadcastPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame =
+    KCore.peelBroadcast(Rounds.eager(sym), k, rounds)
+
   private def shuffledPeel(sym: DataFrame, k: Int, rounds: Int): DataFrame =
     KCore.peelShuffled(Rounds.eager(sym), k, rounds)
 
@@ -91,7 +94,7 @@ class KCoreSpec extends SparkSpecBase {
         Seq((s"random $i", r, 2, 1 to 4), (s"random $i", r, 3, 1 to 4)) }
     for ((name, gr, k, roundsSeq) <- cases; r <- roundsSeq) {
       val got = rows(KCore.kernel(Rounds.eager(gr), k, r))
-      assert(got == rows(KCore.peelBroadcast(Rounds.eager(gr), k, r)), s"$name k=$k rounds=$r")
+      assert(got == rows(broadcastPeel(gr, k, r)), s"$name k=$k rounds=$r")
       // the shuffled plan past the cutover walks the same trajectory
       assert(got == rows(shuffledPeel(gr, k, r)), s"$name k=$k rounds=$r shuffled")
     }
@@ -177,7 +180,7 @@ class KCoreSpec extends SparkSpecBase {
     val gr = sym(edges.toSeq: _*)
     for (r <- 1 to 4) {
       val shuffled = nodes(shuffledPeel(gr, k = 2, rounds = r))
-      val bcast = nodes(KCore.peelBroadcast(Rounds.eager(gr), k = 2, rounds = r))
+      val bcast = nodes(broadcastPeel(gr, k = 2, rounds = r))
       assert(shuffled === bcast, s"rounds=$r")
     }
   }
